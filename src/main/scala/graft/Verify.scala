@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,14 +8,9 @@ object Verify {
     val outDir = args(1)
     // optional third arg: comma-separated query-name filter (local iteration)
     val only = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session factory Bench times, so the dump certifies that
+    // configuration (extensions, AQE settings, codegen cache, cores)
+    val spark = GraftSession.get("graft-verify")
     new java.io.File(outDir).mkdirs()
     // A failed build must be VISIBLE downstream, not a silent omission: r6
     // hid 13 regressions because failed queries wrote no parquet and the

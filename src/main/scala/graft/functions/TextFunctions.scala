@@ -148,13 +148,17 @@ object TextFunctions {
     * approximation (q04) exactly when an element crosses a boundary. */
   def packBins(lengths: Seq[Int], budget: Int): Seq[Int] = {
     require(budget > 0)
-    var bin = 0; var acc = 0
-    lengths.map { len =>
-      if (acc > 0 && acc + len > budget) { bin += 1; acc = 0 }
-      acc += len
-      bin
-    }
+    lengths.scanLeft((0L, 0L)) { case ((bin, fill), len) =>
+      binStep(bin, fill, len, budget)
+    }.tail.map(_._1.toInt)
   }
+
+  /** The one greedy rule behind [[packBins]] and the distributed
+    * `Packing.exactBins`: given the (bin, fill) after the previous element,
+    * returns the (bin, fill) after an element of `len`. A group starts at
+    * (0, 0); an element that would overflow a non-empty bin opens the next. */
+  def binStep(bin: Long, fill: Long, len: Long, budget: Long): (Long, Long) =
+    if (fill > 0 && fill + len > budget) (bin + 1, len) else (bin, fill + len)
 
   /** HTML → text extraction (T17; the V3 crawler cleaner's shape,
     * html_extrator.py:35-120): drop script/style subtrees, strip tags,

@@ -35,13 +35,16 @@ object InferOps {
     }
   }
 
+  /** Prompts per `completeBatch` transport call. */
+  val BatchSize = 16
+
   /** Append `outCol` = client.complete(row[promptCol]) to every row. */
   def complete(
       df: DataFrame,
       promptCol: String,
       outCol: String,
       client: InferenceClient,
-      batchSize: Int = 16,
+      batchSize: Int = BatchSize,
       metrics: Option[TokenMetrics] = None): DataFrame = {
     val schema    = df.schema
     val promptIdx = schema.fieldIndex(promptCol)

@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 object Packing {
 
   /** Append `bin` (0-based per group) to `df`, packing `lenCol` greedily
-    * into `budget`-sized bins in `orderCol` order within each `groupCol`. */
+    * into `budget`-sized bins in `orderCol` order within each `groupCol`
+    * (the rule is [[TextFunctions.binStep]]). */
   def exactBins(
       df: DataFrame,
       groupCol: String,
@@ -37,19 +38,16 @@ object Packing {
       .sortWithinPartitions(sortCols: _*)
       .mapPartitions { it =>
         var curGroup: Any = null
-        var bin  = 0L
-        var acc  = 0L
-        var seen = false
+        var state = (0L, 0L) // (bin, fill)
+        var seen  = false
         it.map { r =>
-          val g   = r.get(groupIdx)
-          val len = r.getAs[Number](lenIdx).longValue()
+          val g = r.get(groupIdx)
           if (!seen || g != curGroup) {
-            curGroup = g; bin = 0L; acc = 0L; seen = true
-          } else if (acc > 0 && acc + len > budget) {
-            bin += 1L; acc = 0L
+            curGroup = g; state = (0L, 0L); seen = true
           }
-          acc += len
-          Row.fromSeq(r.toSeq :+ bin)
+          state = TextFunctions.binStep(state._1, state._2,
+            r.getAs[Number](lenIdx).longValue(), budget)
+          Row.fromSeq(r.toSeq :+ state._1)
         }
       }(enc)
   }

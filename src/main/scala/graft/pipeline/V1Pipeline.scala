@@ -1,9 +1,10 @@
 package graft.pipeline
 
+import graft.functions.TextFunctions
 import graft.infer.{InferOps, InferenceClient, MockInference}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The V1 long-document QA pipeline re-expressed as a Spark plan
   * (SURVEY.md §3.1; reference /root/reference/LLMxMapReduce_V1/pipeline.py:30):
@@ -14,12 +15,15 @@ import org.apache.spark.sql.functions._
   *
   * Spark shape: chunking is a generator expression (`posexplode` over a
   * chunker UDF); map is an embarrassingly-parallel batched inference pass
-  * (no shuffle); the collapse loop is a driver-controlled iteration of
-  * [window bin-assign → groupBy-merge] — Spark's partial→final aggregation
-  * expressed over an LLM merge; reduce is one `groupBy(doc_id)` with sorted
-  * `collect_list` into a final inference call. At 100 TB every stage scales
-  * with partition count: only the per-document groupBy/window shuffles, and
-  * those key on doc_id (no global ordering anywhere).
+  * (no shuffle); collapse and reduce are FUSED into one per-document
+  * operator: one `groupBy(doc_id, question)` gathers each document's kept
+  * records, and one `mapPartitions` task runs every collapse round of its
+  * documents and their REDUCE calls locally (the reference's `mr_collapse`
+  * loops over one document until it fits — a per-document partial→final
+  * aggregation, not a driver loop). A request is therefore two Spark jobs
+  * (the map stage and the result stage), whatever the number of rounds.
+  * At 100 TB every stage scales with partition count: the one shuffle keys
+  * on the document, and per-task state is one partition's documents.
   */
 object V1Pipeline {
 
@@ -67,49 +71,68 @@ object V1Pipeline {
       !upper(col("answer")).contains(NoInfo) ||
         upper(col("question")).contains(NoInfo)))
 
-    // ---- collapse loop (A2/W7): while any doc exceeds the budget, pack
-    // adjacent records into bins and LLM-merge each bin. Driver loop with
-    // lineage truncation (IterativeStage).
-    def oversized(df: DataFrame): Boolean =
-      !df.groupBy("doc_id")
-        .agg(sum(length(col("response")).divide(3.6875)).as("tok"))
-        .filter(col("tok") > cfg.collapseBudget)
-        .isEmpty
-
-    val (collapsed, _) = IterativeStage.loop(
-      kept.select("doc_id", "question", "chunk_idx", "response"),
-      cfg.maxCollapseIters,
-      done = df => !oversized(df)) { df =>
-      // reference-faithful greedy packing (restart-at-boundary), not the
-      // window running-sum approximation — see Packing.exactBins
-      val binned = graft.operators.Packing.packTextBins(
-        df, "doc_id", Seq("chunk_idx"), "response", cfg.binBudget)
-      val packed = binned
-        .groupBy("doc_id", "question", "bin")
-        .agg(
-          array_join(
-            expr("transform(array_sort(collect_list(struct(chunk_idx, response))), p -> p.response)"),
-            "\n---\n").as("joined"))
-      InferOps.complete(
-        packed.withColumn("prompt", concat(lit("COLLAPSE|"), col("joined"))),
-        "prompt", "response", client)
-        .select(col("doc_id"), col("question"),
-          col("bin").as("chunk_idx"), col("response"))
-    }
-
-    // ---- reduce (A3): one final call per doc over the ordered survivors;
-    // confidence calibration (max_by semantics) lives in the mock protocol.
-    val gathered = collapsed
+    // ---- collapse + reduce (A2/W7/A3), fused per document: one shuffle
+    // gathers each document's kept records, then each task runs the
+    // collapse rounds and REDUCE calls of its documents
+    val grouped = kept
       .groupBy("doc_id", "question")
-      .agg(array_join(
-        expr("transform(array_sort(collect_list(struct(chunk_idx, response))), p -> p.response)"),
-        "\n---\n").as("joined"))
-    audit("reduce", InferOps.complete(
-      gathered.withColumn("prompt",
-        concat(lit("REDUCE|"), col("question"), lit("|"), col("joined"))),
-      "prompt", "answer", client)
-      .select("doc_id", "answer"))
+      .agg(collect_list(struct(col("chunk_idx"), col("response"))).as("recs"))
+    val outSchema = StructType(Seq(
+      grouped.schema("doc_id"), StructField("answer", StringType)))
+    audit("reduce", grouped.mapPartitions { rows =>
+      val docs = rows.map(r => (r.get(0), r.getString(1),
+        r.getSeq[Row](2).sortBy(_.getInt(0)).map(_.getString(1)))).toVector
+      collapseReduce(docs.map(d => (d._2, d._3)), client, cfg)
+        .lazyZip(docs).map((answer, d) => Row(d._1, answer)).iterator
+    }(Encoders.row(outSchema)))
   }
+
+  private val Sep = "\n---\n"
+
+  /** The fused task body over (question, records in chunk order) per
+    * document: while a document's records exceed `collapseBudget`, and for
+    * at most `maxCollapseIters` rounds, pack them into greedy `binBudget`
+    * bins ([[TextFunctions.packBins]]) and replace them by one COLLAPSE
+    * reply per bin; then REDUCE every document. Each round's COLLAPSE
+    * prompts of all open documents, and then the REDUCE prompts, go through
+    * `completeBatch` in batches of [[InferOps.BatchSize]]. Returns the
+    * answer per document. */
+  private[graft] def collapseReduce(
+      docs: Seq[(String, Seq[String])],
+      client: InferenceClient,
+      cfg: Config): Seq[String] = {
+    val recs = docs.map(_._2).toArray
+    def fits(i: Int): Boolean =
+      recs(i).iterator.map(r => codePoints(r) / TextFunctions.TokenRatio).sum <=
+        cfg.collapseBudget
+    var open = recs.indices.filterNot(fits)
+    var round = 0
+    while (round < cfg.maxCollapseIters && open.nonEmpty) {
+      val bins = open.map { i =>
+        val ids = TextFunctions.packBins(recs(i).map(tokens), cfg.binBudget)
+        i -> recs(i).zip(ids).groupMap(_._2)(_._1).toSeq.sortBy(_._1)
+          .map(_._2.mkString(Sep))
+      }
+      val replies = completeAll(
+        bins.flatMap(_._2).map("COLLAPSE|" + _), client).iterator
+      bins.foreach { case (i, bs) => recs(i) = bs.map(_ => replies.next()) }
+      open = open.filterNot(fits)
+      round += 1
+    }
+    completeAll(docs.indices.map(i =>
+      s"REDUCE|${docs(i)._1}|${recs(i).mkString(Sep)}"), client)
+  }
+
+  private def completeAll(
+      prompts: Seq[String], client: InferenceClient): Seq[String] =
+    prompts.grouped(InferOps.BatchSize).flatMap(client.completeBatch).toVector
+
+  /** Spark `length` counts code points, not UTF-16 units. */
+  private def codePoints(s: String): Int = s.codePointCount(0, s.length)
+
+  /** A record's bin length: `ceil(length(response) / TokenRatio)`. */
+  private def tokens(s: String): Int =
+    math.ceil(codePoints(s) / TextFunctions.TokenRatio).toInt
 
   /** Parse the structured-information protocol fields out of a response
     * (Extracted Information / Answer / Confidence Score — qa.yaml:19-23). */

@@ -115,9 +115,12 @@ object Trees {
       compose: (String, Seq[String]) => String): DataFrame = {
     val spark = sections.sparkSession
     val composeUdf = udf(compose)
-    val maxDepth = sections.agg(max("depth")).head.getInt(0)
+    // checkpoint first, lazily: the depth probe is the action that
+    // materializes it, so the input plan (inference, for V2's written
+    // sections) runs once, not once for the probe and again for the levels
     var cur = sections.select("survey_id", "path", "depth", "content")
-      .localCheckpoint()
+      .localCheckpoint(false)
+    val maxDepth = cur.agg(max("depth")).head.getInt(0)
     var d = maxDepth
     while (d >= 2) {
       val children = cur.filter(col("depth") === d)

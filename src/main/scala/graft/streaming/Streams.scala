@@ -656,7 +656,6 @@ object Streams {
     // session's 32 batch partitions cost ~4× the snapshot I/O these small
     // bounded gates need, so set it for the query and restore after.
     val spark = agg.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
     // SPARK_GRAFT_STATE_PARTS overrides for A/B experiments (ConfExperiment).
     // Two recognized shapes, everything else FAILS FAST (ADVICE r13: a
     // typo'd value that silently fell back to the default made an A/B
@@ -675,7 +674,6 @@ object Streams {
             "silently-defaulted config")
         if (items.length == 1) items.head.toInt else statePartitions
     }
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     // AvailableNow appends a final NO-DATA micro-batch after the data
     // batches: it advances the watermark and runs state eviction/final
     // emission. Stateful APPEND-mode aggregations need it to emit closed
@@ -687,20 +685,28 @@ object Streams {
     // can't be affected (inner joins) pass noDataBatch = false; the
     // oracle gate would catch any emission loss.
     val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = spark.conf.get(noDataKey)
-    if (!noDataBatch) spark.conf.set(noDataKey, "false")
-    try {
-      val q = agg.writeStream
+    // A query snapshots the session conf at start() (it runs on a session
+    // clone). The lock keeps concurrent callers from restoring each other's
+    // overrides into the shared session.
+    val q = confLock.synchronized {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      val prevNoData = spark.conf.get(noDataKey)
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      if (!noDataBatch) spark.conf.set(noDataKey, "false")
+      try agg.writeStream
         .outputMode(mode)
         .format("memory")
         .queryName(name)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set(noDataKey, prevNoData)
+      finally {
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set(noDataKey, prevNoData)
+      }
     }
+    q.awaitTermination()
     agg.sparkSession.table(name)
   }
+
+  private val confLock = new Object
 }

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import graft.infer.{MockInference, RetryingClient, InferenceClient}
+import graft.operators.Packing
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** End-to-end V1 pipeline on mock inference: a passkey planted deep in a
   * long synthetic document must surface through chunk → map → filter →
@@ -109,6 +111,88 @@ class V1PipelineSpec extends SparkTestBase {
     }
   }
 
+  test("a document that fits sends no COLLAPSE prompt while another collapses") {
+    import spark.implicits._
+    val big = (0 until 60).map { i =>
+      if (i % 10 == 0) s"para $i has ANSWER[big-1] inside this line."
+      else s"para $i is only filler noise without any signal."
+    }.mkString("\n")
+    val docs = Seq(
+      ("fit", "What is the passkey?", longDoc("fit-2", planted = 7, total = 20)),
+      ("big", "What is the passkey?", big))
+      .toDF("doc_id", "question", "text")
+    V1PipelineSpec.prompts.clear()
+    val out = V1Pipeline.run(docs, new V1PipelineSpec.Recording,
+      V1Pipeline.Config(chunkBudget = 16, collapseBudget = 40, binBudget = 30))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(out == Map("fit" -> "fit-2", "big" -> "big-1"))
+    val collapse = V1PipelineSpec.sent("COLLAPSE|")
+    assert(collapse.nonEmpty && collapse.forall(_.contains("big-1")),
+      s"only the oversized document collapses: $collapse")
+    assert(V1PipelineSpec.sent("REDUCE|").size == 2)
+  }
+
+  test("records are binned by code points, the same as Spark length") {
+    import spark.implicits._
+    // 21 code points, 41 UTF-16 units: 6 tokens by code points (two fit a
+    // 12-token bin), 12 by UTF-16 units (one per bin)
+    val recs = (0 until 4).map(i => "\uD83D\uDE00" * 20 + i)
+    val sparkBins = Packing.packTextBins(
+      recs.zipWithIndex.map { case (r, i) => ("d", i, r) }
+        .toDF("doc_id", "chunk_idx", "response"),
+      "doc_id", Seq("chunk_idx"), "response", 12)
+      .collect().groupBy(_.getLong(3)).toSeq.sortBy(_._1)
+      .map(_._2.sortBy(_.getInt(1)).map(_.getString(2)).mkString("\n---\n"))
+    assert(sparkBins.size == 2)
+    V1PipelineSpec.prompts.clear()
+    V1Pipeline.collapseReduce(Seq(("q", recs)), new V1PipelineSpec.Recording,
+      V1Pipeline.Config(collapseBudget = 10, binBudget = 12, maxCollapseIters = 1))
+    assert(V1PipelineSpec.sent("COLLAPSE|").sorted ==
+      sparkBins.map("COLLAPSE|" + _).sorted)
+    // 4 x 21 / 3.6875 = 22.8 tokens fit a budget of 30 (UTF-16: 44.5)
+    V1PipelineSpec.prompts.clear()
+    V1Pipeline.collapseReduce(Seq(("q", recs)), new V1PipelineSpec.Recording,
+      V1Pipeline.Config(collapseBudget = 30, binBudget = 12))
+    assert(V1PipelineSpec.sent("COLLAPSE|").isEmpty)
+  }
+
+  test("a two-document request runs in at most 3 Spark jobs") {
+    import spark.implicits._
+    val docs = Seq(
+      ("j1", "What is the passkey?", longDoc("opal-791", planted = 57)),
+      ("j2", "What is the passkey?", longDoc("zinc-443", planted = 101)))
+      .toDF("doc_id", "question", "text")
+    val group = s"v1-jobs-${System.nanoTime()}"
+    val sentinel = group + "-sentinel"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "v1 job count")
+      val out = V1Pipeline.run(docs, new MockInference,
+        V1Pipeline.Config(chunkBudget = 24, collapseBudget = 60, binBudget = 40))
+        .collect()
+      assert(out.length == 2)
+      // listener events arrive in order: once the sentinel job's start is
+      // seen, every job of the request has been counted
+      spark.sparkContext.setJobGroup(sentinel, "sentinel")
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (!jobs.contains(sentinel) && System.nanoTime() < deadline)
+        Thread.sleep(20L)
+      assert(jobs.contains(sentinel))
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val n = jobs.toArray.count(_ == group)
+    assert(n >= 1 && n <= 3, s"$n Spark jobs for one request")
+  }
+
   test("retrying client recovers from transient failures") {
     var calls = 0
     val flaky = new InferenceClient {
@@ -120,5 +204,22 @@ class V1PipelineSpec extends SparkTestBase {
     }
     val c = new RetryingClient(flaky, attempts = 5, baseDelayMs = 1)
     assert(c.complete("x") == "ok:x")
+  }
+}
+
+object V1PipelineSpec {
+  /** Every prompt a [[Recording]] client sent. JVM-static: task closures
+    * deserialize their own client copies in the same local JVM. */
+  val prompts = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+  def sent(prefix: String): Seq[String] =
+    prompts.toArray.toSeq.map(_.toString).filter(_.startsWith(prefix))
+
+  final class Recording extends InferenceClient {
+    private val mock = new MockInference
+    override def complete(p: String): String = {
+      prompts.add(p)
+      mock.complete(p)
+    }
   }
 }

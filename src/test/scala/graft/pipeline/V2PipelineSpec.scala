@@ -101,6 +101,21 @@ class V2PipelineSpec extends SparkTestBase {
       s"expected 5+3 DIGEST calls, got ${V2PipelineSpec.digestCalls.get()}")
   }
 
+  test("every WRITE and POLISH prompt is sent once per run") {
+    V2PipelineSpec.sections.clear()
+    val out = V2Pipeline.run(fixture, new V2PipelineSpec.CountingMock(false),
+      V2Pipeline.Config(nGroups = 2, blockCount = 1)).collect()
+    assert(out.length == 2)
+    val sent = V2PipelineSpec.sections.toArray.toSeq.map(_.toString)
+    Seq("WRITE|", "POLISH|").foreach { kind =>
+      val ofKind = sent.filter(_.startsWith(kind))
+      assert(ofKind.nonEmpty, s"no $kind prompt sent")
+      val repeated = ofKind.groupBy(identity).filter(_._2.size > 1).keys
+      assert(repeated.isEmpty,
+        s"${ofKind.size - ofKind.distinct.size} $kind prompts re-sent: $repeated")
+    }
+  }
+
   test("fused refine loop matches the unfused per-layer dataflow") {
     // the fused task-local replay (refineSkeleton) must be byte-identical
     // to the unfused window/merge/prune stages, across layer depths
@@ -145,7 +160,11 @@ object V2PipelineSpec {
     * increments would land on per-task copies. */
   val digestCalls = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Mock wrapper counting DIGEST calls; with `mutateHeading` it also turns
+  /** Every WRITE and POLISH prompt a [[CountingMock]] was sent. */
+  val sections = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+  /** Mock wrapper counting DIGEST calls and recording WRITE/POLISH
+    * prompts; with `mutateHeading` it also turns
     * s1's MODIFY into a structural (heading) edit so the selective
     * re-digest path is exercised. */
   final class CountingMock(mutateHeading: Boolean)
@@ -153,6 +172,7 @@ object V2PipelineSpec {
     private val mock = new MockInference
     override def complete(p: String): String = {
       if (p.startsWith("DIGEST|")) digestCalls.incrementAndGet()
+      if (p.startsWith("WRITE|") || p.startsWith("POLISH|")) sections.add(p)
       val r = mock.complete(p)
       if (mutateHeading && p.startsWith("MODIFY|") &&
           p.contains("Stream Processing"))

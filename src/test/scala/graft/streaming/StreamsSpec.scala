@@ -26,6 +26,34 @@ class StreamsSpec extends SparkTestBase {
     assert(got.toSeq == want.toSeq)
   }
 
+  test("concurrent runToMemory calls leave the session conf as they found it") {
+    // the streaming twins are built concurrently elsewhere in the suite
+    // (HofBanSpec's pool); each call overrides two session confs until its
+    // query starts, and a lost restore would leak into every later query
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+    val before = keys.map(spark.conf.get)
+    val want = Streams.runToMemory(
+      Streams.tumblingCounts(Streams.eventsStream(spark, dir)), "t_conf_ref")
+      .orderBy("wstart", "event_type").collect().toSeq
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val runs = (0 until 6).map { i =>
+        Future {
+          Streams.runToMemory(
+            Streams.tumblingCounts(Streams.eventsStream(spark, dir)),
+            s"t_conf_$i", statePartitions = 2 + i % 3, noDataBatch = i % 2 == 0)
+            .orderBy("wstart", "event_type").collect().toSeq
+        }
+      }
+      runs.foreach(r => assert(Await.result(r, 5.minutes) == want))
+    } finally pool.shutdown()
+    assert(keys.map(spark.conf.get) == before)
+  }
+
   test("streaming session windows == batch q28") {
     val stream = Streams.eventsStream(spark, dir)
     val got = Streams.runToMemory(
@@ -255,13 +283,18 @@ class StreamsSpec extends SparkTestBase {
       // arrival order, not eviction semantics (observed once as a flake:
       // the minute-3 row slipped in under watermark 0). Make the
       // precondition explicit: wait until a started batch reports the
-      // advanced watermark before adding the late row.
+      // advanced watermark (minute 60 minus the 10-minute delay) before
+      // adding the late row, and fail on the precondition if it never does.
+      val advanced = ts(50).toInstant
+      def watermark: Option[java.time.Instant] =
+        Option(q.lastProgress).flatMap(p => Option(p.eventTime.get("watermark")))
+          .map(java.time.Instant.parse(_))
       val deadline = System.nanoTime() + 10_000_000_000L
-      while (System.nanoTime() < deadline &&
-          !Option(q.lastProgress).exists(p =>
-            Option(p.eventTime.get("watermark"))
-              .exists(_ > "1970-01-01T00:00:01")))
+      while (System.nanoTime() < deadline && !watermark.contains(advanced))
         Thread.sleep(50L)
+      assert(watermark.contains(advanced),
+        s"precondition: the watermark never advanced to $advanced within 10 s " +
+          s"(last reported: $watermark)")
       // batch 2: minute 3 is far below watermark 50 -> evicted; minute 55
       // is on time -> its window updates
       input.addData((ts(3), "a"), (ts(55), "b"))
@@ -270,9 +303,12 @@ class StreamsSpec extends SparkTestBase {
         .select("wstart", "event_type", "n").collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       val aMax = rows.filter(_._2 == "a").map(_._3).max
-      assert(aMax == 2, s"late row must not update the closed window: $rows")
+      def batches = q.recentProgress.map(p =>
+        s"${p.batchId}:${p.numInputRows}@${p.eventTime.get("watermark")}").mkString(" ")
+      assert(aMax == 2,
+        s"late row must not update the closed window: ${rows.toSeq}; batches $batches")
       assert(rows.exists(r => r._2 == "b" && r._3 == 1 &&
-        r._1.endsWith("00:55:00")), s"on-time row missing: $rows")
+        r._1.endsWith("00:55:00")), s"on-time row missing: ${rows.toSeq}")
     } finally q.stop()
   }
 
