@@ -154,16 +154,17 @@ object Bench {
         .selectExpr("sum((id * 2654435761) % 1000000007)").collect()
       (System.nanoTime() - t0) / 1e9
     }
-    // Publish the MIN of 3 consecutive runs per pass (recalibration, r14):
-    // graft.tools.CanaryProbe showed the probe's FIRST run after ~100 s of
-    // unrelated work pays a structural 2-3× code/cache re-entry cost even
-    // on a fully idle box (first-rep 0.31-1.30 s vs 0.09-0.12 steady state)
-    // — and an in-bench pass canary is always exactly that first run. The
-    // committed clean reference band (~0.09-0.12 s) is STEADY-STATE, so a
-    // single-shot canary could never satisfy it in-bench; min-of-3 discards
-    // the re-entry cost while still seeing genuine contention (external
-    // noise hits all three runs). r13/r14 single-shot canary values are
-    // upper bounds under the old instrument — see SCALE.md §Round-14.
+    // Publish the MIN of 3 consecutive runs per pass (recalibration, r14;
+    // SCALE.md §"Round-14: the canary itself adjudicated — and
+    // RECALIBRATED"): the probe's FIRST run after ~100 s of unrelated work
+    // pays a structural 2-3× code/cache re-entry cost even on a fully idle
+    // box (first-rep 0.31-1.30 s vs 0.09-0.12 steady state) — and an
+    // in-bench pass canary is always exactly that first run. The committed
+    // clean reference band (~0.09-0.12 s) is STEADY-STATE, so a
+    // single-shot canary could never satisfy it in-bench; min-of-3
+    // discards the re-entry cost while still seeing genuine contention
+    // (external noise hits all three runs). r13/r14 single-shot canary
+    // values are upper bounds under the old instrument.
     def canaryMin3(): Double =
       math.min(canaryOnce(), math.min(canaryOnce(), canaryOnce()))
     // warm (codegen for the probe plan) — guarded like the per-pass calls

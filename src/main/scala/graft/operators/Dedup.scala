@@ -221,7 +221,7 @@ object Dedup {
     // banded near-dup graphs here are ≪ the corpus by construction.
     def part(df: DataFrame, keys: Column*): DataFrame =
       df.repartition(loopPartitions, keys: _*)
-    // preRounds measured on d09's real LSH pairs at sf0.1 (CcRounds):
+    // preRounds measured on d09's real LSH pairs at sf0.1:
     // 0 -> 3 star rounds / 3.8 s warm; 1 -> 2 rounds / 3.3 s; 2 -> 2
     // rounds / 3.3 s. One round is the sweet spot — every pre-round is a
     // full-edge-set shuffle, and the first one does the clique collapse.
@@ -654,37 +654,18 @@ object Dedup {
       .sortWithinPartitions("id_a", "id_b")
   }
 
-  /** d12's span-dedup dataflow, extracted so tools/D12Ab can A/B the
-    * pre-sort materialization boundary against the declared form in one
-    * JVM (VERDICT r13 #2: d12's terminal orderBy rides an unmaterialized
-    * join — the only >1 s batch query adjudicated by inspection, not by
-    * an A/B of a concrete alternative). The stage below that orderBy is
-    * exchange-fused: [final reassembly agg + left join + md5 select] run
-    * as ONE stage, so the range exchange's SAMPLING pass re-executes the
-    * clean-text reassembly, the heaviest per-row work in the query.
-    *
-    * Variants (identical output rows; the declared query ships whichever
-    * the interleaved A/B earns):
-    *   head       — the r13 form described above.
-    *   ckpt       — lazy localCheckpoint of the final 5-column join
-    *                output before the orderBy: the reassembly stage runs
-    *                once; the materialized artifact is tiny (doc_id + 4
-    *                small columns — the 100 TB posture is a pre-sorted
-    *                summary table, not a second pass over span text).
-    *   fused      — no base/agg join at all: sp keeps EVERY span row, the
-    *                h-join tags each with its keep flag, ONE bottom range
-    *                exchange on doc_id feeds the single per-doc agg
-    *                (range clustering satisfies aggregation, the q08/t10
-    *                rule) and sortWithinPartitions yields the total
-    *                order. n_spans = count(*) per doc (sp has exactly
-    *                ceil(len/10) rows per doc). Trades the join + its
-    *                double-run for shipping ALL span text through the
-    *                range exchange, whose sampling re-runs the h-join.
-    *   fused_ckpt — fused with the h-join output checkpointed before the
-    *                range exchange (sampling reads blocks, not the join).
-    */
-  private[graft] def d12SpanDedup(
-      s: SparkSession, d: String, variant: String = "head"): DataFrame = {
+  /** d12's span-dedup dataflow. The terminal orderBy rides an
+    * unmaterialized, exchange-fused stage (final reassembly agg + left
+    * join + md5 select), so the range exchange's sampling pass re-runs the
+    * clean-text reassembly. This form stands on an interleaved A/B against
+    * a pre-sort checkpoint and a join-free bottom-range-exchange form
+    * (SCALE.md §"Round-14: d12's terminal sort, adjudicated by A/B";
+    * output identity pinned at sf1, 50k ordered rows). The checkpoint was
+    * a wash: the saved sampling re-run pays itself back in block io. The
+    * fused form cut 11 → 7 jobs, but its best-vs-best win was 0.16 s at
+    * sf0.1 and ~5% at sf1, and it ships ALL span text, kept and dropped,
+    * through the doc exchange where this form ships only kept spans. */
+  private def d12SpanDedup(s: SparkSession, d: String): DataFrame = {
     val toks = split(col("text"), " ")
     val nSpans = ceil(size(toks) / 10.0).cast("long")
     // size(toks) >= 1 always (split of '' is ['']), so the sequence
@@ -701,47 +682,21 @@ object Dedup {
     // row_number over (doc_id, i)
     val firsts = sp.groupBy("h")
       .agg(min(struct(col("doc_id"), col("pos"))).as("keep"))
-    variant match {
-      case "head" | "ckpt" =>
-        val kept = sp.join(firsts, "h")
-          .filter(col("doc_id") === col("keep.doc_id") &&
-            col("pos") === col("keep.pos"))
-        val agg = kept.groupBy("doc_id")
-          .agg(count(lit(1)).as("n_kept"),
-            array_join(
-              transform(array_sort(collect_list(struct(col("pos"), col("span")))),
-                x => x.getField("span")), " ").as("clean"))
-        val joined = base.select("doc_id", "n_spans")
-          .join(agg, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("n_spans"),
-            coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-            (col("n_spans") - coalesce(col("n_kept"), lit(0L))).as("n_dropped"),
-            md5(coalesce(col("clean"), lit("")).cast("binary")).as("clean_md5"))
-        (if (variant == "ckpt") joined.localCheckpoint(false) else joined)
-          .orderBy("doc_id")
-      case "fused" | "fused_ckpt" =>
-        val tagged = sp.join(firsts, "h")
-          .select(col("doc_id"), col("pos"), col("span"),
-            (col("doc_id") === col("keep.doc_id") &&
-              col("pos") === col("keep.pos")).as("keep"))
-        val in = if (variant == "fused_ckpt") tagged.localCheckpoint(false)
-                 else tagged
-        in.repartitionByRange(col("doc_id"))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_spans"),
-            sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
-            // collect_list skips nulls: only kept spans enter the list,
-            // and a doc with zero kept spans reassembles to '' exactly
-            // like the head form's coalesce
-            md5(array_join(
-              transform(array_sort(collect_list(
-                when(col("keep"), struct(col("pos"), col("span"))))),
-                x => x.getField("span")), " ").cast("binary")).as("clean_md5"))
-          .select(col("doc_id"), col("n_spans"), col("n_kept"),
-            (col("n_spans") - col("n_kept")).as("n_dropped"), col("clean_md5"))
-          .sortWithinPartitions("doc_id")
-      case other => throw new IllegalArgumentException(s"d12 variant: $other")
-    }
+    val kept = sp.join(firsts, "h")
+      .filter(col("doc_id") === col("keep.doc_id") &&
+        col("pos") === col("keep.pos"))
+    val agg = kept.groupBy("doc_id")
+      .agg(count(lit(1)).as("n_kept"),
+        array_join(
+          transform(array_sort(collect_list(struct(col("pos"), col("span")))),
+            x => x.getField("span")), " ").as("clean"))
+    base.select("doc_id", "n_spans")
+      .join(agg, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_spans"),
+        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
+        (col("n_spans") - coalesce(col("n_kept"), lit(0L))).as("n_dropped"),
+        md5(coalesce(col("clean"), lit("")).cast("binary")).as("clean_md5"))
+      .orderBy("doc_id")
   }
 
   def defs: Seq[QueryDef] = Seq(
@@ -1392,14 +1347,6 @@ object Dedup {
                md5(coalesce(a.clean, '')) AS clean_md5
         FROM base b LEFT JOIN agg a USING (doc_id)
         ORDER BY b.doc_id"""),
-      // "head" KEPT after the round-14 interleaved A/B (D12Ab,
-      // artifacts/r14/r14_d12ab_sf{01,1}_fixed.log): ckpt is a wash (the
-      // saved sampling double-run pays itself back in block io); fused /
-      // fused_ckpt drop 11 -> 7 jobs but the best-vs-best win is 0.16 s
-      // at sf0.1 and shrinks to ~5% at sf1 while shipping ALL span text
-      // (kept + dropped) through the doc range exchange where head ships
-      // only kept spans — the q16 lesson (bytes beat job count at scale).
-      // Output identity of all variants pinned at sf1 (50k rows, ordered).
       build = (s, d) => d12SpanDedup(s, d)),
 
     // ------------------------------------------------- semantic (embedding) dedup

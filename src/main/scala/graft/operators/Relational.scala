@@ -1054,9 +1054,10 @@ object Relational {
     * 5 columns, not 6 (§2.3: project before the exchange).
     *
     * "hash" is the r14 form (hash window exchange + per-query terminal
-    * range exchange), kept buildable for re-measurement (d12 pattern);
-    * `SPARK_GRAFT_BIN_PART` overrides. Both produce identical rows AND
-    * identical output order (the terminal sorts are total orders).
+    * range exchange); `SPARK_GRAFT_BIN_PART` selects it for graft.tools.BinAb
+    * to re-measure once ResultMemo's checkpoint keeps the range
+    * clustering. Both produce identical rows AND identical output order
+    * (the terminal sorts are total orders).
     */
   private[operators] val BinPart: String =
     sys.env.getOrElse("SPARK_GRAFT_BIN_PART", "range")

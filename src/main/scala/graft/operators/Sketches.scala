@@ -141,78 +141,29 @@ object Sketches {
   /** KMV (k-minimum-values) distinct-count sketch state per group: the k
     * smallest md5-derived 60-bit hashes of the distinct keys. Mergeable —
     * the union's sketch is the k smallest of the sketches' union (spec'd).
-    * Scale shape: dedupe (group, h) with a partial-agg groupBy, then a
-    * SALTED two-level top-k so the per-group rank window never sees more
-    * than salts×k pre-pruned rows — each salt keeps its own k smallest,
-    * and the global k smallest is a subset of that union. No reducer ever
-    * ranks a group's full distinct-hash set. */
+    * Scale shape: ONE bounded aggregation (functions.KmvTopKAgg) — dedup
+    * and k-pruning happen map-side inside the partial agg, so the exchange
+    * carries ≤(8k+4)-byte states per (task, group) instead of the whole
+    * distinct hash set, and no reducer ever ranks a group's full hash set.
+    * posexplode of the sorted minima yields the 1-based rank. Output
+    * (prio, h, rk). SCALE.md §"Round-14 (resumed session): the KMV sketch
+    * rebuilt as a bounded aggregate" records the A/B against the distinct
+    * + salted rank-window form it replaced. */
   private[operators] val KmvK = 64
-  private val KmvSalts = 32
 
   private[graft] def kmvHash(key: Column): Column =
     conv(substring(md5(concat(lit("kmv|"), key.cast("string"))), 1, 15),
       16, 10).cast("long")
 
   private[operators] def kmvSketch(
-      keyed: DataFrame /* (prio, h) */,
-      preDistinct: Boolean = false,
-      variant: String = KmvVariant): DataFrame = {
-    // NULL hashes are dropped BEFORE the variant dispatch (ADVICE r14): the
-    // agg variant skips NULL inputs (aggregate semantics) while the window
-    // variant's orderBy(h) would rank them first — a future caller feeding a
-    // nullable key column must not silently diverge between variants. Every
-    // declared caller feeds md5-derived non-null hashes, so this filter
-    // drops zero rows today; it pins the boundary rather than documenting it.
-    val nn = keyed.filter(col("h").isNotNull)
-    variant match {
-      case "agg"    => kmvSketchAgg(nn)
-      case "window" => kmvSketchWindow(nn, preDistinct)
-      case other    => sys.error(s"unknown kmv sketch variant $other")
-    }
-  }
-
-  /** Default sketch-construction variant; `SPARK_GRAFT_KMV` overrides for
-    * re-measurement (the d12SpanDedup pattern — variants stay buildable so
-    * future rounds can re-run the A/B at bigger SFs). "agg" (the r14
-    * bounded-aggregate form) is the head: the graft.tools.KmvAb interleave
-    * at sf0.1 showed q46 24→20 jobs and 10.07→6.10 MB shuffle (the distinct
-    * exchange gone — the §2.3 claim), q45 9→8 jobs / 1.99→1.76 MB, outputs
-    * byte-identical in check mode, and the map-side-bounded state is the
-    * form that scales (the window form shuffles every distinct hash).
-    * "window" is the r13 form (distinct + salted rank windows). */
-  private[operators] val KmvVariant: String =
-    sys.env.getOrElse("SPARK_GRAFT_KMV", "agg")
-
-  /** r13 form: materialize the distinct (group, hash) set through a full
-    * hash exchange, then prune to k with a SALTED two-level rank window
-    * (each salt keeps its own k smallest; the global k smallest is a
-    * subset of that union — no reducer ranks a group's full hash set). */
-  private[operators] def kmvSketchWindow(
-      keyed: DataFrame /* (prio, h) */,
-      preDistinct: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dh = if (preDistinct) keyed else keyed.distinct()
-    val pre = dh
-      .withColumn("rk1", row_number().over(
-        Window.partitionBy(col("prio"), pmod(col("h"), lit(KmvSalts)))
-          .orderBy("h")))
-      .filter(col("rk1") <= KmvK).drop("rk1")
-    pre.withColumn("rk", row_number().over(
-        Window.partitionBy("prio").orderBy("h")))
-      .filter(col("rk") <= KmvK)
-  }
-
-  /** r14 form: ONE bounded aggregation (functions.KmvTopKAgg) — dedup and
-    * k-pruning happen map-side inside the partial agg, so the exchange
-    * carries ≤(8k+4)-byte states per (task, group) instead of the whole
-    * distinct hash set, and both rank windows (with their sorts and
-    * exchanges) disappear. posexplode of the sorted minima reproduces the
-    * window's rank column exactly; `preDistinct` needs no equivalent (the
-    * state dedups inherently). Same (prio, h, rk) output. */
-  private[operators] def kmvSketchAgg(
       keyed: DataFrame /* (prio, h) */): DataFrame = {
+    // KmvTopKAgg skips NULL inputs; the filter pins that boundary in the
+    // plan instead of leaving it to the aggregate's semantics. Every
+    // declared caller feeds md5-derived non-null hashes, so it drops zero
+    // rows today.
     val spark = keyed.sparkSession
-    keyed.groupBy("prio")
+    keyed.filter(col("h").isNotNull)
+      .groupBy("prio")
       .agg(graft.functions.KmvTopKAgg
         .kmvTopKCol(spark, col("h"), KmvK).as("mins"))
       .select(col("prio"), posexplode(col("mins")).as(Seq("pos", "h")))
@@ -515,10 +466,7 @@ object Sketches {
       build = (s, d) => q46Build(s, d))
   )
 
-  /** q45's build, variant-parameterized for graft.tools.KmvAb. */
-  private[graft] def q45Build(
-      s: org.apache.spark.sql.SparkSession, d: String,
-      variant: String = KmvVariant): DataFrame = {
+  private def q45Build(s: SparkSession, d: String): DataFrame = {
     // ONE distinct frame serves both truths: the exact baseline counts
     // the same distinct (prio, h) rows the sketch ranks, so the second
     // orders scan and the countDistinct expansion disappear (md5 is a
@@ -528,7 +476,7 @@ object Sketches {
     val dh = o.select(col("o_orderpriority").as("prio"),
       kmvHash(col("o_custkey")).as("h")).distinct()
       .localCheckpoint(false)
-    val hk = kmvSketch(dh, preDistinct = true, variant = variant)
+    val hk = kmvSketch(dh)
       .filter(col("rk") === KmvK)
       .select(col("prio"), col("h").as("hk"))
     val exact = dh.groupBy("prio").agg(count(lit(1)).as("n_exact"))
@@ -539,82 +487,36 @@ object Sketches {
       .orderBy("prio")
   }
 
-  /** Exact-union branch variant for q46 (r15): "arith" computes
-    * n_union = n_a + n_b − n_inter from the per-prio distinct counts and the
-    * intersection the query already pays for — an exact integer set
-    * identity, so the answer is bit-identical to counting the union — while
-    * "cdist" is the r12 form (broadcast pair expansion of the whole distinct
-    * set, ×(groups−1) per row, then countDistinct). The identity removes
-    * q46's widest dataflow: at any corpus size the expansion ships
-    * (groups−1)× the distinct key set into a distinct-aggregate exchange
-    * for a number already derivable from two O(groups) frames.
-    * `SPARK_GRAFT_Q46_EXU` overrides for re-measurement. */
-  private[operators] val Q46Exu: String =
-    sys.env.getOrElse("SPARK_GRAFT_Q46_EXU", "arith")
-
-  /** Sketch-input variant for q46 (VERDICT r14 #3 re-measure): "scan" (r12
-    * head) hashes a SECOND orders scan so the sketch branch fuses with its
-    * own scan; "dc" feeds the sketch from the checkpointed distinct —
-    * kmvSketchAgg dedups internally, so hashing the pre-deduped (prio, c)
-    * rows is equivalent and both the second scan and the per-duplicate md5
-    * work disappear. The r12 rejection of "dc" predates the KMV aggregate
-    * (the sketch side then needed its own distinct exchange); re-measured
-    * at r15 HEAD per VERDICT r14 #3, "dc" is now the head: KmvAb q46 mode
-    * shows the old 23→28-job penalty gone (identical job counts either
-    * way) and best wall 2.84→2.39 s at sf0.1, 8.29→1.40 s at sf1, outputs
-    * byte-identical at both scales. `SPARK_GRAFT_Q46_SKSRC` overrides for
-    * re-measurement. */
-  private[operators] val Q46SketchSrc: String =
-    sys.env.getOrElse("SPARK_GRAFT_Q46_SKSRC", "dc")
-
-  /** q46's build, variant-parameterized for graft.tools.KmvAb. */
-  private[graft] def q46Build(
-      s: org.apache.spark.sql.SparkSession, d: String,
-      variant: String = KmvVariant,
-      exu: String = Q46Exu,
-      sketchSrc: String = Q46SketchSrc): DataFrame = {
+  /** q46: the sketch and both exact columns all read ONE checkpointed
+    * distinct (prio, c) frame. The sketch hashes those pre-deduped rows
+    * (kmvSketch dedups internally, so this equals hashing a second orders
+    * scan, without the scan or the per-duplicate md5 work). The exact
+    * union is the integer set identity n_union = n_a + n_b − n_inter over
+    * the per-prio distinct counts and the intersection the query already
+    * pays for — bit-identical to counting the union, without expanding
+    * the distinct set (groups−1)× into a distinct-aggregate exchange.
+    * SCALE.md §"Round-15: q46's exact half" records the A/B. */
+  private def q46Build(s: SparkSession, d: String): DataFrame = {
     val o = Tables.load(s, d, "orders")
-    // the exact-truth side feeds every consumer (pair counts, exact
-    // intersection, optionally the sketch); checkpoint the distinct once
-    // instead of re-scanning orders per consumer
     val dc = ResultMemo.checkpointed(
       o.select(col("o_orderpriority").as("prio"),
         col("o_custkey").as("c")).distinct())
-    val keyed = sketchSrc match {
-      case "dc" => dc.select(col("prio"), kmvHash(col("c")).as("h"))
-      case "scan" => o.select(col("o_orderpriority").as("prio"),
-        kmvHash(col("o_custkey")).as("h"))
-      case other => sys.error(s"unknown q46 sketch source $other")
-    }
-    val sketch =
-      thetaSetOps(kmvSketch(keyed, variant = variant).select("prio", "h"))
+    val sketch = thetaSetOps(
+      kmvSketch(dc.select(col("prio"), kmvHash(col("c")).as("h")))
+        .select("prio", "h"))
     val exi = dc.select(col("prio").as("pa"), col("c"))
       .join(dc.select(col("prio").as("pb"), col("c")),
         Seq("c")).filter(col("pa") < col("pb"))
       .groupBy("pa", "pb").agg(count(lit(1)).as("n_inter"))
-    val withUnion = exu match {
-      case "arith" =>
-        // |A ∪ B| = |A| + |B| − |A ∩ B|: integer counts, exact identity
-        val nk = dc.groupBy("prio").agg(count(lit(1)).as("n"))
-        val pr = nk.select(col("prio").as("pa"), col("n").as("na"))
-          .join(nk.select(col("prio").as("pb"), col("n").as("nb")),
-            col("pa") < col("pb"))
-        sketch.join(broadcast(pr), Seq("pa", "pb"))
-          .join(exi, Seq("pa", "pb"), "left")
-          .withColumn("n_union",
-            col("na") + col("nb") - coalesce(col("n_inter"), lit(0L)))
-      case "cdist" =>
-        val ps = dc.select("prio").distinct()
-        val pr = ps.select(col("prio").as("pa"))
-          .join(ps.select(col("prio").as("pb")), col("pa") < col("pb"))
-        val exuF = broadcast(pr).join(dc,
-            col("prio") === col("pa") || col("prio") === col("pb"))
-          .groupBy("pa", "pb").agg(countDistinct(col("c")).as("n_union"))
-        sketch.join(exuF, Seq("pa", "pb"))
-          .join(exi, Seq("pa", "pb"), "left")
-      case other => sys.error(s"unknown q46 exact-union variant $other")
-    }
-    withUnion
+    // |A ∪ B| = |A| + |B| − |A ∩ B|: integer counts, exact identity
+    val nk = dc.groupBy("prio").agg(count(lit(1)).as("n"))
+    val pr = nk.select(col("prio").as("pa"), col("n").as("na"))
+      .join(nk.select(col("prio").as("pb"), col("n").as("nb")),
+        col("pa") < col("pb"))
+    sketch.join(broadcast(pr), Seq("pa", "pb"))
+      .join(exi, Seq("pa", "pb"), "left")
+      .withColumn("n_union",
+        col("na") + col("nb") - coalesce(col("n_inter"), lit(0L)))
       .select(col("pa"), col("pb"), col("n_union"),
         coalesce(col("n_inter"), lit(0L)).as("n_inter"), col("n_shared"),
         col("est_union"), col("est_inter"))

@@ -656,7 +656,9 @@ object Streams {
     // session's 32 batch partitions cost ~4× the snapshot I/O these small
     // bounded gates need, so set it for the query and restore after.
     val spark = agg.sparkSession
-    // SPARK_GRAFT_STATE_PARTS overrides for A/B experiments (ConfExperiment).
+    // SPARK_GRAFT_STATE_PARTS overrides for deployment sizing and conf A/Bs
+    // (8 vs 2 measured in SCALE.md §"Round-13: the streaming machinery
+    // floor").
     // Two recognized shapes, everything else FAILS FAST (ADVICE r13: a
     // typo'd value that silently fell back to the default made an A/B
     // measure default-vs-default): a single int overrides here; a comma

@@ -90,9 +90,7 @@ object BandProbe {
     require(unknown.isEmpty,
       s"unknown scheme(s) ${unknown.mkString(",")}; known: " +
         known.toSeq.sorted.mkString(","))
-    val spark = GraftSession.builder(
-      "band-probe", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("band-probe")
     import graft.functions.HashKernels
 
     // one signature frame shared by every scheme, materialized before any

@@ -8,8 +8,9 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * exchange) vs "range" (one bottom range exchange on l_orderkey that
   * satisfies the window, q05's grouping AND both terminal sorts).
   *
-  * Methodology is D12Ab's: variants alternate A-B-A-B in ONE JVM, rep 1
-  * excluded as warm-up, build+execute timed together, job counts and
+  * Methodology (SCALE.md §"Round-14: d12's terminal sort"): variants
+  * alternate A-B-A-B in ONE JVM, rep 1 excluded as warm-up,
+  * build+execute timed together, job counts and
   * shuffle-byte deltas printed (the variant's claim is an exchange-count
   * claim, so bytes are the column that must move). Frames are built RAW
   * (no ResultMemo) so every rep times the real window pass.

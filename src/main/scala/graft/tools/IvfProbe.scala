@@ -19,9 +19,7 @@ import org.apache.spark.sql.functions._
 object IvfProbe {
   def main(args: Array[String]): Unit = {
     val d = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = GraftSession.builder(
-      "ivf-probe", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("ivf-probe")
 
     val t0 = System.nanoTime()
     val bc = operators.Dedup.centroidTableBc(spark, d)

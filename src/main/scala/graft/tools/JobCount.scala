@@ -11,8 +11,7 @@ object JobCount {
   def main(args: Array[String]): Unit = {
     val q = if (args.length > 0) args(0) else "p02_v2_survey_pipeline"
     val d = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = GraftSession.builder("job-count", "32").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("job-count")
     val n = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()

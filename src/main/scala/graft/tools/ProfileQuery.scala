@@ -4,8 +4,7 @@ import graft._
 
 /** Generic per-query profiler: runs any SparkEntry query N times at an sf
   * dir and prints per-run wall-clock plus per-job and slow-stage timing —
-  * the tool that found d11's interpreted-HOF cost (see ProfileD11 for the
-  * stage-by-stage variant of that investigation).
+  * the tool that found d11's interpreted-HOF cost.
   *
   * Usage: runMain graft.tools.ProfileQuery <query> [sfDir] [runs]
   */
@@ -18,8 +17,7 @@ object ProfileQuery {
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
 
-    val spark = GraftSession.builder("profile-query", "32").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("profile-query")
 
     val verbose = sys.env.contains("SPARK_GRAFT_PROF_JOBS")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Long]()

@@ -20,9 +20,7 @@ import org.apache.spark.sql.functions._
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val d = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = GraftSession.builder(
-      "recall-probe", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("recall-probe")
 
     val exact = operators.Dedup.defs
       .find(_.name == "d05_embedding_neardup").get.build(spark, d)

@@ -25,9 +25,7 @@ object RunStage {
     require(args.length >= 3,
       "usage: RunStage --list | RunStage <stage> <inCheckpoint> <outCheckpoint>")
     val Array(stage, inPath, outPath) = args.take(3)
-    val spark = GraftSession.builder("graft-stage",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("graft-stage")
     try {
       val n = StageRunner.run(spark, stage, inPath, outPath)
       println(s"""{"stage":"$stage","in":"$inPath","out":"$outPath","rows":$n}""")

@@ -13,6 +13,10 @@ import graft._
   * Usage: ScaleBench <sfDir> <names-csv|heavy15> [passes]
   * Prints one JSON line {"sf":…, "queries":{name:sec}, "total":…} and
   * writes it to target/scale_bench_<basename(sfDir)>.json.
+  *
+  * It is also the conf A/B: `SPARK_GRAFT_CONF="k1=v1;k2=v2"` applies
+  * session confs before the session starts, so one invocation per side
+  * (alternating A-B-A-B) compares a conf lever under the pass discipline.
   */
 object ScaleBench {
 
@@ -36,10 +40,10 @@ object ScaleBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     val b = GraftSession.builder("graft-scale-bench", cpus)
-    // generic conf lever (as in ConfExperiment/SessionAb) so conf A/Bs can
-    // run under THIS tool's honest pass discipline — memos cleared and
-    // indexes re-warmed per pass — instead of ConfExperiment's warm reps,
-    // which a whole-result-memoized query reduces to a checkpoint read
+    // generic conf lever so conf A/Bs run under THIS tool's honest pass
+    // discipline — memos cleared and indexes re-warmed per pass — instead
+    // of back-to-back warm reps, which a whole-result-memoized query
+    // reduces to a checkpoint read
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

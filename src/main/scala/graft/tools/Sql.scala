@@ -10,8 +10,7 @@ import graft.{GraftSession, Tables}
   */
 object Sql {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder(
-      "graft-sql", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
+    val spark = GraftSession.get("graft-sql")
     Tables.names.foreach { t =>
       val df = t match {
         case "events"     => Tables.events(spark, args(0))

@@ -113,4 +113,25 @@ class PlanSpec extends SparkTestBase {
     val exchanges = "Exchange".r.findAllIn(p).size
     assert(exchanges <= 8, s"too many exchanges ($exchanges):\n${p.take(3000)}")
   }
+
+  test("q46: one orders read (the checkpointed distinct), no distinct aggregate") {
+    // built under the memo: the shared distinct (prio, c) is a checkpoint,
+    // so any orders scan left in the plan is a second read of the table
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val plan = SparkEntry.queries("q46_kmv_set_ops")(spark, dir)
+      .queryExecution.optimizedPlan
+    val ordersScans = plan.collectLeaves().collect {
+      case l: LogicalRelation => l.relation
+    }.collect {
+      case r: HadoopFsRelation
+          if r.location.rootPaths.exists(_.getName == "orders.parquet") => r
+    }
+    assert(ordersScans.isEmpty,
+      s"orders scanned outside the checkpointed distinct:\n$plan")
+    val distinctAggs = plan.flatMap(_.expressions.flatMap(_.collect {
+      case a: AggregateExpression if a.isDistinct => a
+    }))
+    assert(distinctAggs.isEmpty, s"distinct aggregate in q46:\n$plan")
+  }
 }

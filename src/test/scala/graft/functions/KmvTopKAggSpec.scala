@@ -3,11 +3,10 @@ package graft.functions
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Parity pin for the bounded k-min-distinct aggregate (KmvTopKAgg, the r14
-  * "agg" KMV sketch variant) against the exact distinct + rank-window form
-  * it replaces ("window", the r13 form) — the same variant-parity discipline
-  * D12Ab/check and TokenCountKernelSpec apply: any divergence between the
-  * two buildable variants is a red spec, not a bench footnote. */
+/** Parity pin for the bounded k-min-distinct aggregate (KmvTopKAgg, the
+  * KMV sketch's only form) against the exact distinct + rank-window form
+  * it replaced, kept here as the spec truth: any divergence is a red spec,
+  * not a bench footnote. */
 class KmvTopKAggSpec extends SparkTestBase {
 
   private val K = 64
