@@ -1,27 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import java.util.concurrent.atomic.AtomicLong
+import graft.obs.Telemetry
 
 /** Driver-run benchmark: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line (driver contract).
   * Alongside wall-clock, reports per-query shuffle bytes (read+write) —
-  * the number that actually predicts 100 TB behavior. */
+  * the number that actually predicts 100 TB behavior — and writes each
+  * query's `graft.obs` profile per pass to target/bench_profile.jsonl. */
 object Bench {
-
-  /** Global shuffle-byte counter; queries run sequentially, so per-query
-    * deltas are exact. */
-  private final class ShuffleListener extends SparkListener {
-    val bytes = new AtomicLong(0L)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        bytes.addAndGet(m.shuffleReadMetrics.totalBytesRead +
-          m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -98,8 +84,8 @@ object Bench {
     require(allNames.map(short).distinct.size == allNames.size,
       "query id prefixes must stay unique — bench stdout map is keyed by them")
 
-    val listener = new ShuffleListener
-    spark.sparkContext.addSparkListener(listener)
+    // queries run one at a time, so each measurement is one query's own
+    val telemetry = Telemetry(spark)
 
     // Measure the Structured Streaming machinery floor: the fixed cost of ONE
     // AvailableNow micro-batch execution (trigger setup, offset log, state
@@ -214,6 +200,8 @@ object Bench {
     val shuffleMb = Array.fill(names.size)(-1.0)
     val lastErr = Array.fill[Option[String]](names.size)(None)
     val okPasses = Array.fill(names.size)(0)
+    // one row per query per pass: the profile, or the error of a failed run
+    val profileRows = scala.collection.mutable.ArrayBuffer.empty[String]
 
     // Side files re-written as EACH PASS completes (VERDICT r14 #1c): the
     // r14 32-core record died in pass 2 with both passes' numbers in
@@ -236,6 +224,9 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("target/bench_times.json"),
         times.getBytes("UTF-8"))
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get("target/bench_profile.jsonl"),
+        profileRows.map(_ + "\n").mkString.getBytes("UTF-8"))
     }
 
     var pass = 0
@@ -262,17 +253,21 @@ object Bench {
       val cpu0 = processCpuSec()
       val wall0 = System.nanoTime()
       var i = 0
-      names.foreach { case (_, fn) =>
-        val s0 = listener.bytes.get()
+      names.foreach { case (name, fn) =>
         val t0 = System.nanoTime()
         // fold elapsed into best only on success — a fast failure must not
         // masquerade as a fast run next to its error entry
         try {
-          Force(fn(spark, sfDir))
-          val sec = (System.nanoTime() - t0) / 1e9
+          val (_, prof) = telemetry.measure(name)(Force(fn(spark, sfDir)))
+          val sec = prof.wallSec
           if (sec < bestSec(i)) bestSec(i) = sec
           passSec(pass) += sec
           okPasses(i) += 1
+          // record shuffle bytes from the first successful pass — a
+          // deterministic plan shuffles the same bytes every pass
+          if (shuffleMb(i) < 0) shuffleMb(i) = prof.shuffleBytes / 1e6
+          profileRows += Telemetry.toJson(Map(
+            "pass" -> (pass + 1), "query" -> name, "profile" -> prof))
         } catch { case e: Throwable =>
           // the failure's elapsed time still counts toward the PASS total:
           // pass_sec exists to compare pass-vs-pass wall clock, and a pass
@@ -281,19 +276,14 @@ object Bench {
           // fast when error sets differ between passes (ADVICE r10)
           passSec(pass) += (System.nanoTime() - t0) / 1e9
           lastErr(i) = Some(e.getClass.getSimpleName)
+          profileRows += Telemetry.toJson(Map(
+            "pass" -> (pass + 1), "query" -> name, "error" -> lastErr(i).get))
         }
         // release per-query state: localCheckpoint blocks are only reaped
         // by the ContextCleaner after their DataFrames are GC'd — without
         // this, block-manager growth inflates late queries' times
         spark.sqlContext.clearCache()
         System.gc()
-        // listener events are async; give the bus a beat before snapshotting
-        Thread.sleep(50L)
-        // record shuffle bytes from the first successful pass — a
-        // deterministic plan shuffles the same bytes every pass, and a
-        // failed pass's partial delta must not pollute the figure
-        if (shuffleMb(i) < 0 && okPasses(i) > 0)
-          shuffleMb(i) = (listener.bytes.get() - s0) / 1e6
         i += 1
       }
       val cpu1 = processCpuSec()

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import graft.obs.Telemetry
 
 /** Interleaved A-B for the q04/q05 window-exchange variant (VERDICT r14 #6):
   * "hash" (r14 form — hash window exchange + per-query terminal range
@@ -29,19 +28,7 @@ object BinAb {
       "need reps >= 2: rep 1 is warm-up and is never accumulated")
     val spark = graft.GraftSession.get("bin-ab")
     spark.sparkContext.setLogLevel("WARN")
-
-    val jobs = new AtomicInteger(0)
-    val shuffleBytes = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null)
-          shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead +
-            m.shuffleWriteMetrics.bytesWritten)
-      }
-    })
+    val telemetry = Telemetry(spark)
 
     import graft.operators.Relational
     val queries = Seq[(String, String => org.apache.spark.sql.DataFrame)](
@@ -69,15 +56,11 @@ object BinAb {
       val jc = scala.collection.mutable.Map.empty[String, List[Int]]
       val sb = scala.collection.mutable.Map.empty[String, List[Long]]
       for (r <- 1 to reps; v <- variants) {
-        val j0 = jobs.get(); val b0 = shuffleBytes.get()
-        val t0 = System.nanoTime()
-        graft.Force(fn(v))
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(50L) // listener bus drains async
+        val (_, p) = telemetry.measure(s"$qn-$v")(graft.Force(fn(v)))
         if (r > 1) {
-          acc(v) = sec :: acc.getOrElse(v, Nil)
-          jc(v) = (jobs.get() - j0) :: jc.getOrElse(v, Nil)
-          sb(v) = (shuffleBytes.get() - b0) :: sb.getOrElse(v, Nil)
+          acc(v) = p.wallSec :: acc.getOrElse(v, Nil)
+          jc(v) = p.jobs.size :: jc.getOrElse(v, Nil)
+          sb(v) = p.shuffleBytes :: sb.getOrElse(v, Nil)
         }
         spark.sqlContext.clearCache()
       }

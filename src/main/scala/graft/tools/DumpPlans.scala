@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
+import graft.obs.Telemetry
 import java.nio.file.{Files, Paths}
 
 /** Write formatted physical plans of headline queries to PLANS.md — the
@@ -31,16 +32,11 @@ object DumpPlans {
     sb.append("pairs, and exchange counts.\n")
 
     // ---- per-query cost-shape table: Spark jobs + exchange counts, the
-    // round-over-round diffable summary (VERDICT r03 #10). Jobs come from a
-    // listener; exchanges from the AQE-final plan text. Memos bypassed: the
-    // numbers describe the REAL dataflow, not a checkpoint scan.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      })
+    // round-over-round diffable summary (VERDICT r03 #10). Jobs (building
+    // the frame included) come from graft.obs; exchanges from the AQE-final
+    // plan text. Memos bypassed: the numbers describe the REAL dataflow, not
+    // a checkpoint scan.
+    val telemetry = Telemetry(spark)
     sb.append("\n## Cost shape per query (jobs / shuffle / broadcast)\n\n")
     sb.append(s"All ${SparkEntry.queries.size} queries at `$dir`, memo-bypassed.\n")
     sb.append("Diff this table round over round: a jump in jobs or shuffles\n")
@@ -48,15 +44,16 @@ object DumpPlans {
     sb.append("| query | jobs | shuffle exchanges | broadcast exchanges |\n")
     sb.append("|---|---|---|---|\n")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      jobs.set(0)
-      val df = graft.operators.ResultMemo.bypass(fn(spark, dir))
-      df.collect()
-      Thread.sleep(150) // listener delivery
+      val (df, p) = telemetry.measure(name) {
+        val df = graft.operators.ResultMemo.bypass(fn(spark, dir))
+        df.collect()
+        df
+      }
       val plan = df.queryExecution.executedPlan.toString
       val shuffles = "(?m)^\\s*(?:[+:]- )?Exchange ".r
         .findAllIn(plan).size
       val bcasts = "BroadcastExchange".r.findAllIn(plan).size
-      sb.append(s"| $name | ${jobs.get()} | $shuffles | $bcasts |\n")
+      sb.append(s"| $name | ${p.jobs.size} | $shuffles | $bcasts |\n")
     }
     headline.foreach { name =>
       // bypass the result memo: dump the real plan, not a checkpoint scan

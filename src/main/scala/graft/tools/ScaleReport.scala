@@ -1,9 +1,8 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry, Tables}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.obs.Telemetry
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
 
 /** Measure how each query's shuffle volume GROWS with data size — the
   * number that decides 100 TB behavior. Runs every SparkEntry query
@@ -20,16 +19,6 @@ import java.util.concurrent.atomic.AtomicLong
   */
 object ScaleReport {
 
-  private final class ShuffleListener extends SparkListener {
-    val bytes = new AtomicLong(0L)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null)
-        bytes.addAndGet(m.shuffleReadMetrics.totalBytesRead +
-          m.shuffleWriteMetrics.bytesWritten)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDirs =
       if (args.nonEmpty) args.toSeq
@@ -37,8 +26,7 @@ object ScaleReport {
         "/root/testdata/sf0.1")
     val spark = GraftSession.get("graft-scale")
     spark.sparkContext.setLogLevel("WARN")
-    val listener = new ShuffleListener
-    spark.sparkContext.addSparkListener(listener)
+    val telemetry = Telemetry(spark)
 
     // per-sf table warm-up so footer reads don't pollute the first query
     // SPARK_GRAFT_ONLY=a,b,c re-measures a subset after a plan change
@@ -59,16 +47,14 @@ object ScaleReport {
       try graft.operators.Multimodal.mediaTable(spark, d).count()
       catch { case _: Throwable => () }
       names.foreach { n =>
-        val s0 = listener.bytes.get()
         try {
           // noop sink, not count(): count() lets Catalyst prune unreferenced
           // window/projection work (x05/x06 collapse to a bare scan), which
           // would under-report the real dataflow a consumer pays for
-          graft.operators.ResultMemo.bypass(
+          val (_, p) = telemetry.measure(n)(graft.operators.ResultMemo.bypass(
             SparkEntry.queries(n)(spark, d)
-              .write.format("noop").mode("overwrite").save())
-          Thread.sleep(50L) // listener delivery
-          mb((n, d)) = (listener.bytes.get() - s0) / 1e6
+              .write.format("noop").mode("overwrite").save()))
+          mb((n, d)) = p.shuffleBytes / 1e6
         } catch { case _: Throwable => () }
         spark.sqlContext.clearCache()
       }

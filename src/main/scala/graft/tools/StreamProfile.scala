@@ -27,46 +27,21 @@ import graft.streaming.Streams
 object StreamProfile {
 
   /** Suite mode: run EVERY streaming twin (SparkEntry queries ending in a
-    * stream suffix) with a session-level StreamingQueryListener, printing
-    * per-twin batch counts and durationMs component sums — the machinery
-    * census across all 21 twins, not just the three single-query shapes. */
+    * stream suffix) under graft.obs telemetry, printing per-twin batch
+    * counts and durationMs component sums — the machinery census across all
+    * 21 twins, not just the three single-query shapes. */
   private def suite(sfDir: String, reps: Int): Unit = {
     val spark = GraftSession.get("stream-profile-suite")
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    val acc = new java.util.concurrent.ConcurrentHashMap[
-      String, (Int, Map[String, Long], Long)]()
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        val p = e.progress
-        val key = p.name
-        import scala.jdk.CollectionConverters._
-        val d = p.durationMs.asScala.map { case (k, v) => k -> v.toLong }.toMap
-        acc.merge(key, (1, d, p.numInputRows), (a, b) =>
-          (a._1 + b._1,
-            (a._2.keySet ++ b._2.keySet).map(k =>
-              k -> (a._2.getOrElse(k, 0L) + b._2.getOrElse(k, 0L))).toMap,
-            a._3 + b._3))
-      }
-    })
-    val streamDefs = graft.streaming.StreamQueries.defs.map(_.name)
+    val telemetry = graft.obs.Telemetry(spark)
     val qs = graft.SparkEntry.queries
-    for (r <- 1 to reps; n <- streamDefs) {
-      acc.clear()
-      val t0 = System.nanoTime()
-      graft.Force(qs(n)(spark, sfDir))
-      val wall = (System.nanoTime() - t0) / 1e9
-      if (r == reps) {
-        import scala.jdk.CollectionConverters._
-        acc.asScala.foreach { case (qn, (batches, d, rows)) =>
-          def g(k: String) = d.getOrElse(k, 0L)
-          println(f"[sps] $n%-28s wall $wall%6.3f  batches $batches%2d  rows $rows%8d  " +
-            f"trigger ${g("triggerExecution")}%5d ms = latestOffset ${g("latestOffset")}%4d + " +
-            f"plan ${g("queryPlanning")}%4d + wal ${g("walCommit")}%3d + " +
-            f"addBatch ${g("addBatch")}%5d + commit ${g("commitOffsets")}%4d (sink $qn)")
-        }
+    for (r <- 1 to reps; n <- graft.streaming.StreamQueries.defs.map(_.name)) {
+      val (_, p) = telemetry.measure(n)(graft.Force(qs(n)(spark, sfDir)))
+      if (r == reps) p.streams.foreach { st =>
+        def g(k: String) = st.durationMs.getOrElse(k, 0L)
+        println(f"[sps] $n%-28s wall ${p.wallSec}%6.3f  batches ${st.batches}%2d  rows ${st.inputRows}%8d  " +
+          f"trigger ${g("triggerExecution")}%5d ms = latestOffset ${g("latestOffset")}%4d + " +
+          f"plan ${g("queryPlanning")}%4d + wal ${g("walCommit")}%3d + " +
+          f"addBatch ${g("addBatch")}%5d + commit ${g("commitOffsets")}%4d (sink ${st.name})")
       }
     }
     spark.stop()

@@ -1,0 +1,42 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** The engine has one telemetry layer, `graft.obs`. A listener registered
+  * anywhere else is a second instrument, and a sleep in main code is a guess
+  * at how long the asynchronous listener bus takes; `Telemetry.measure`
+  * drains the bus instead. */
+class ObsGuardSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  private def matches(pattern: String): Seq[(Path, Int, String)] = {
+    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
+    val re = pattern.r
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if re.findFirstIn(line).isDefined => (f, i + 1, line.trim)
+        }
+      }
+  }
+
+  private def show(hits: Seq[(Path, Int, String)]): String =
+    hits.map { case (f, l, s) => s"  $f:$l $s" }.mkString("\n")
+
+  test("listeners are registered only in graft/obs") {
+    val obs = root.resolve("graft/obs")
+    val outside = matches("""addSparkListener|listenerManager\.register|streams\.addListener""")
+      .filterNot(_._1.startsWith(obs))
+    assert(outside.isEmpty, "listener registrations outside graft/obs:\n" + show(outside))
+  }
+
+  test("the only sleep in main code is the inference retry backoff") {
+    val sleeps = matches("""Thread\.sleep""")
+    assert(sleeps.map(_._1.getFileName.toString) == Seq("InferenceClient.scala"),
+      "sleeps in main code:\n" + show(sleeps))
+  }
+}

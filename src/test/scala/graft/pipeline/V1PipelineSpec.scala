@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.SparkTestBase
 import graft.infer.{MockInference, RetryingClient, InferenceClient}
 import graft.operators.Packing
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.obs.Telemetry
 
 /** End-to-end V1 pipeline on mock inference: a passkey planted deep in a
   * long synthetic document must surface through chunk → map → filter →
@@ -162,34 +162,12 @@ class V1PipelineSpec extends SparkTestBase {
       ("j1", "What is the passkey?", longDoc("opal-791", planted = 57)),
       ("j2", "What is the passkey?", longDoc("zinc-443", planted = 101)))
       .toDF("doc_id", "question", "text")
-    val group = s"v1-jobs-${System.nanoTime()}"
-    val sentinel = group + "-sentinel"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "v1 job count")
-      val out = V1Pipeline.run(docs, new MockInference,
-        V1Pipeline.Config(chunkBudget = 24, collapseBudget = 60, binBudget = 40))
-        .collect()
-      assert(out.length == 2)
-      // listener events arrive in order: once the sentinel job's start is
-      // seen, every job of the request has been counted
-      spark.sparkContext.setJobGroup(sentinel, "sentinel")
-      spark.range(1).collect()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (!jobs.contains(sentinel) && System.nanoTime() < deadline)
-        Thread.sleep(20L)
-      assert(jobs.contains(sentinel))
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    val n = jobs.toArray.count(_ == group)
+    val (out, p) = Telemetry(spark).measure("v1")(V1Pipeline.run(docs,
+      new MockInference,
+      V1Pipeline.Config(chunkBudget = 24, collapseBudget = 60, binBudget = 40))
+      .collect())
+    assert(out.length == 2)
+    val n = p.jobs.size
     assert(n >= 1 && n <= 3, s"$n Spark jobs for one request")
   }
 
