@@ -1,6 +1,8 @@
 package graft.infer
 
 import graft.functions.TextFunctions
+import java.util.concurrent.{ExecutionException, Executors, ExecutorService, Future}
+import org.apache.spark.{TaskContext, TaskContextScope}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.util.LongAccumulator
@@ -8,11 +10,13 @@ import org.apache.spark.util.LongAccumulator
 /** Bridges [[InferenceClient]] into DataFrame plans.
   *
   * `mapPartitions` with explicit batching (not a per-row UDF): one client per
-  * partition-task, `batchSize` prompts per transport call — the Spark
-  * equivalent of the reference's Module/Neuron gevent fan-out with a
-  * semaphore-capped connection pool (SURVEY.md D10). Partition width (set by
-  * the caller via `repartition`) IS the concurrency cap: 1000 executors →
-  * 1000 concurrent client instances, each batching — no driver-side loop,
+  * partition-task, `batchSize` prompts per transport call. Each task runs its
+  * first batch of a window itself and hands the rest to one JVM-wide pool of
+  * [[MaxInflight]] threads — the Spark equivalent of the reference's
+  * Module/Neuron gevent fan-out with a semaphore-capped connection pool
+  * (SURVEY.md D10). The concurrency cap is partition width (set by the
+  * caller via `repartition`, one in-flight batch per running task) plus the
+  * [[MaxInflight]] pool threads of each executor JVM — no driver-side loop,
   * no collect.
   */
 object InferOps {
@@ -38,6 +42,36 @@ object InferOps {
   /** Prompts per `completeBatch` transport call. */
   val BatchSize = 16
 
+  /** Pooled `completeBatch` calls in flight per JVM, on top of each running
+    * task's own batch: the reference's connection cap
+    * (request/wrapper.py:17,23). */
+  val MaxInflight = 20
+
+  private val pool: ExecutorService =
+    Executors.newFixedThreadPool(MaxInflight, { (r: Runnable) =>
+      val t = new Thread(r, "graft-infer")
+      t.setDaemon(true)
+      t
+    })
+
+  /** `client.completeBatch` over `prompts` in batches of `batchSize`,
+    * replies in prompt order. The first batch runs on the calling thread;
+    * the rest run concurrently on the pool, each under the caller's
+    * `TaskContext`. The first failed batch's exception is rethrown and the
+    * batches still in flight are cancelled, as they are on interrupt. */
+  def completeAll(
+      prompts: Seq[String],
+      client: InferenceClient,
+      batchSize: Int = BatchSize): Seq[String] = {
+    val batches = prompts.grouped(batchSize).toVector
+    val tc = TaskContext.get()
+    val rest: Vector[Future[Seq[String]]] = batches.drop(1).map(b =>
+      pool.submit(() => TaskContextScope(tc)(client.completeBatch(b))))
+    try batches.headOption.toVector.flatMap(client.completeBatch) ++ rest.flatMap(_.get())
+    catch { case e: ExecutionException => throw e.getCause }
+    finally rest.foreach(_.cancel(true))
+  }
+
   /** Append `outCol` = client.complete(row[promptCol]) to every row. */
   def complete(
       df: DataFrame,
@@ -51,15 +85,15 @@ object InferOps {
     val outSchema = StructType(schema.fields :+ StructField(outCol, StringType))
     val enc       = Encoders.row(outSchema)
     df.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        val prompts = batch.map(_.getString(promptIdx))
-        val replies = client.completeBatch(prompts)
+      it.grouped(batchSize * MaxInflight).flatMap { window =>
+        val prompts = window.map(_.getString(promptIdx))
+        val replies = completeAll(prompts, client, batchSize)
         metrics.foreach { m =>
           m.calls.add(prompts.length.toLong)
           m.promptTokens.add(prompts.map(TextFunctions.estimateTokens(_).toLong).sum)
           m.completionTokens.add(replies.map(TextFunctions.estimateTokens(_).toLong).sum)
         }
-        batch.lazyZip(replies).map((r, o) => Row.fromSeq(r.toSeq :+ o))
+        window.lazyZip(replies).map((r, o) => Row.fromSeq(r.toSeq :+ o))
       }
     }(enc)
   }

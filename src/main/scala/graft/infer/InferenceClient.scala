@@ -13,6 +13,10 @@ package graft.infer
   * Implementations must be Serializable: the client ships to executors inside
   * `mapPartitions` closures (one instance per partition-task, batched calls —
   * the Spark analogue of the reference's per-stage worker pools).
+  *
+  * Implementations must be thread-safe: [[InferOps.completeAll]] calls
+  * `completeBatch` (and through it `complete`) concurrently from several
+  * threads of one task, on the one deserialized instance.
   */
 trait InferenceClient extends Serializable {
   def complete(prompt: String): String
@@ -29,16 +33,24 @@ final class RetryingClient(
     baseDelayMs: Long = 50L)
   extends InferenceClient {
 
-  override def complete(prompt: String): String = {
+  override def complete(prompt: String): String =
+    retry(prompt.hashCode)(underlying.complete(prompt))
+
+  /** The whole batch is one transport call, retried as one. */
+  override def completeBatch(prompts: Seq[String]): Seq[String] =
+    retry(prompts.hashCode)(underlying.completeBatch(prompts))
+
+  private def retry[T](seed: Int)(call: => T): T = {
     var lastErr: Throwable = null
     var i = 0
     while (i < attempts) {
-      try return underlying.complete(prompt)
+      try return call
       catch {
+        case e: InterruptedException => throw e // cancelled: stop calling
         case e: Throwable =>
           lastErr = e
           // deterministic jitter: spread retries without a live RNG
-          val jitter = math.abs(prompt.hashCode) % baseDelayMs
+          val jitter = math.abs(seed) % baseDelayMs
           Thread.sleep((baseDelayMs << i) + jitter)
       }
       i += 1
@@ -67,6 +79,7 @@ final class HalvingClient(
     while (attempt < maxAttempts) {
       try return underlying.complete(prefix + content)
       catch {
+        case e: InterruptedException => throw e
         case _: Exception =>
           content = content.substring(0, content.length / 2)
           attempt += 1
@@ -74,6 +87,14 @@ final class HalvingClient(
     }
     fallback
   }
+
+  /** One batched call; if it fails, each prompt takes the halving path. */
+  override def completeBatch(prompts: Seq[String]): Seq[String] =
+    try underlying.completeBatch(prompts)
+    catch {
+      case e: InterruptedException => throw e
+      case _: Exception => prompts.map(complete)
+    }
 }
 
 /** Deterministic mock model implementing the structured-information protocol

@@ -95,8 +95,7 @@ object V1Pipeline {
     * bins ([[TextFunctions.packBins]]) and replace them by one COLLAPSE
     * reply per bin; then REDUCE every document. Each round's COLLAPSE
     * prompts of all open documents, and then the REDUCE prompts, go through
-    * `completeBatch` in batches of [[InferOps.BatchSize]]. Returns the
-    * answer per document. */
+    * [[InferOps.completeAll]]. Returns the answer per document. */
   private[graft] def collapseReduce(
       docs: Seq[(String, Seq[String])],
       client: InferenceClient,
@@ -113,19 +112,15 @@ object V1Pipeline {
         i -> recs(i).zip(ids).groupMap(_._2)(_._1).toSeq.sortBy(_._1)
           .map(_._2.mkString(Sep))
       }
-      val replies = completeAll(
+      val replies = InferOps.completeAll(
         bins.flatMap(_._2).map("COLLAPSE|" + _), client).iterator
       bins.foreach { case (i, bs) => recs(i) = bs.map(_ => replies.next()) }
       open = open.filterNot(fits)
       round += 1
     }
-    completeAll(docs.indices.map(i =>
+    InferOps.completeAll(docs.indices.map(i =>
       s"REDUCE|${docs(i)._1}|${recs(i).mkString(Sep)}"), client)
   }
-
-  private def completeAll(
-      prompts: Seq[String], client: InferenceClient): Seq[String] =
-    prompts.grouped(InferOps.BatchSize).flatMap(client.completeBatch).toVector
 
   /** Spark `length` counts code points, not UTF-16 units. */
   private def codePoints(s: String): Int = s.codePointCount(0, s.length)

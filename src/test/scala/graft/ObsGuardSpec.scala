@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 /** The engine has one telemetry layer, `graft.obs`. A listener registered
   * anywhere else is a second instrument, and a sleep in main code is a guess
   * at how long the asynchronous listener bus takes; `Telemetry.measure`
-  * drains the bus instead. */
+  * drains the bus instead. Likewise it has one batching path to the model,
+  * `graft.infer.InferOps.completeAll`. */
 class ObsGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -38,5 +39,11 @@ class ObsGuardSpec extends AnyFunSuite {
     val sleeps = matches("""Thread\.sleep""")
     assert(sleeps.map(_._1.getFileName.toString) == Seq("InferenceClient.scala"),
       "sleeps in main code:\n" + show(sleeps))
+  }
+
+  test("completeBatch is called only in graft/infer") {
+    val infer = root.resolve("graft/infer")
+    val outside = matches("""\.completeBatch\b""").filterNot(_._1.startsWith(infer))
+    assert(outside.isEmpty, "completeBatch calls outside graft/infer:\n" + show(outside))
   }
 }

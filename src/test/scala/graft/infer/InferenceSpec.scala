@@ -29,6 +29,23 @@ class InferenceSpec extends AnyFunSuite {
     assert(c.complete("DIGEST|m|" + "y" * 64) == "EMPTY")
   }
 
+  test("HalvingClient tries a batch once, then halves per prompt") {
+    val batches = new java.util.concurrent.atomic.AtomicInteger
+    val picky = new InferenceClient {
+      override def complete(p: String): String =
+        if (p.length > 20) throw new RuntimeException("too long") else s"ok:$p"
+      override def completeBatch(ps: Seq[String]): Seq[String] = {
+        batches.incrementAndGet()
+        ps.map(complete)
+      }
+    }
+    val c = new HalvingClient(picky)
+    assert(c.completeBatch(Seq("D|short", "D|tiny")) == Seq("ok:D|short", "ok:D|tiny"))
+    assert(c.completeBatch(Seq("D|short", "D|" + "z" * 64)) ==
+      Seq("ok:D|short", "ok:D|" + "z" * 16))
+    assert(batches.get == 2)
+  }
+
   test("MockInference protocol is deterministic") {
     val m = new MockInference
     val p = "SUGGEST|outline|digest text"
