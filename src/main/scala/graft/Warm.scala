@@ -29,74 +29,60 @@ import org.apache.spark.sql.SparkSession
   */
 object Warm {
 
-  /** Which queries READ each artifact — a SUBSET bench (ScaleBench) only
-    * builds the artifacts its timed subset consumes. Generous supersets
-    * are safe (an unused warm costs untimed time, never honesty);
-    * UNDER-listing a consumer is the r5 regression class (its timed run
-    * silently pays the bootstrap), so when adding a query that reads a
-    * persisted artifact, add it here. The full bench passes `only` empty
-    * and builds everything, as before. */
-  private val consumers: Map[String, Set[String]] = Map(
-    "lake layout" -> Set("q35_bucketed_colocated_join", "q42_zorder_scan",
-      "q48_compaction"),
-    "media table" -> Set("m01_binary_metadata", "m02_media_features",
-      "m03_image_phash_dedup", "m04_audio_afp_dedup",
-      "m05_video_phash_dedup", "m06s_stream_phash_index", "m07_thumbnail",
-      "p05_media_curation"),
-    "phash index" -> Set("m03_image_phash_dedup", "m06s_stream_phash_index",
-      "p05_media_curation"),
-    "afp index" -> Set("m04_audio_afp_dedup"),
-    "vhash index" -> Set("m05_video_phash_dedup"),
-    "signature index" -> Set("d03_minhash_lsh", "d06_minhash_verified",
-      "d08_decontaminate", "d14s_stream_sig_index", "d15_delta_dedup",
-      "p03_corpus_curation"),
-    "vocab index" -> Set("t08_vocab_topk", "t09_token_rarity",
-      "t10_bm25_keywords", "q44_heavy_hitters_cms"),
-    "bpe merges" -> Set("t11_bpe_train", "t12_bpe_apply",
-      "t13s_stream_token_monitor"),
-    "bigram lm" -> Set("t14_lm_quality", "t14s_stream_lm_gate",
-      "p04_training_mix_pipeline", "p06_quantile_mix_pipeline"),
-    "pq index" -> Set("s06_quantized_topk", "s07_ann_pq_topk",
-      "s08_ann_recall_pq", "s09_ann_ivfpq_topk",
-      "s10_ann_pq_trained_recall"),
+  /** One warm-up step: the artifact's label, the queries that READ it, and
+    * its build. A SUBSET bench (ScaleBench) only builds the artifacts its
+    * timed subset consumes. Generous supersets are safe (an unused warm
+    * costs untimed time, never honesty); UNDER-listing a consumer is the r5
+    * regression class (its timed run silently pays the bootstrap), so when
+    * adding a query that reads a persisted artifact, add it here. The full
+    * bench passes `only` empty and builds everything. */
+  private[graft] final case class Step(
+      label: String, consumers: Set[String],
+      build: (SparkSession, String) => Any)
+
+  /** The steps in build order. */
+  private[graft] val steps: Seq[Step] = Seq(
+    Step("lake layout", Set("q35_bucketed_colocated_join", "q42_zorder_scan",
+        "q48_compaction"),
+      operators.Lake.warmLayout(_, _)),
+    Step("media table", Set("m01_binary_metadata", "m02_media_features",
+        "m03_image_phash_dedup", "m04_audio_afp_dedup",
+        "m05_video_phash_dedup", "m06s_stream_phash_index", "m07_thumbnail",
+        "p05_media_curation"),
+      operators.Multimodal.mediaTable(_, _).count()),
+    Step("phash index", Set("m03_image_phash_dedup",
+        "m06s_stream_phash_index", "p05_media_curation"),
+      operators.Multimodal.phashFrame(_, _).count()),
+    Step("afp index", Set("m04_audio_afp_dedup"),
+      operators.Multimodal.afpFrame(_, _).count()),
+    Step("vhash index", Set("m05_video_phash_dedup"),
+      operators.Multimodal.vhashFrame(_, _).count()),
+    Step("signature index", Set("d03_minhash_lsh", "d06_minhash_verified",
+        "d08_decontaminate", "d14s_stream_sig_index", "d15_delta_dedup",
+        "p03_corpus_curation"),
+      operators.Dedup.warmSignatureIndex(_, _)),
+    Step("vocab index", Set("t08_vocab_topk", "t09_token_rarity",
+        "t10_bm25_keywords", "q44_heavy_hitters_cms"),
+      operators.TextAnalysis.warmVocabIndex(_, _)),
+    Step("bpe merges", Set("t11_bpe_train", "t12_bpe_apply",
+        "t13s_stream_token_monitor"),
+      operators.Tokenize.trainMerges(_, _)),
+    Step("bigram lm", Set("t14_lm_quality", "t14s_stream_lm_gate",
+        "p04_training_mix_pipeline", "p06_quantile_mix_pipeline"),
+      operators.TextAnalysis.lmModelBroadcast(_, _)),
+    Step("pq index", Set("s06_quantized_topk", "s07_ann_pq_topk",
+        "s08_ann_recall_pq", "s09_ann_ivfpq_topk",
+        "s10_ann_pq_trained_recall"),
+      operators.Similarity.warmPqIndex(_, _)),
   )
 
-  /** Every warm-up step's label, for the spec that pins labels ==
-    * consumers.keySet (so a new artifact can't silently lose its warm
-    * under ScaleBench subsets, or fall into the unconditional-warm
-    * fallback above). */
-  private[graft] val labels: Seq[String] = Seq(
-    "lake layout", "media table", "phash index", "afp index", "vhash index",
-    "signature index", "vocab index", "bpe merges", "bigram lm", "pq index")
-
-  private[graft] def consumerKeys: Set[String] = consumers.keySet
-
   def indexes(spark: SparkSession, sfDir: String, tag: String = "warm",
-      only: Set[String] = Set.empty): Unit = {
-    def warmed(what: String)(f: => Any): Unit = {
-      // getOrElse, not apply (ADVICE r11): a warmed() label with no
-      // consumers entry must not throw and kill the whole warm-up — warm
-      // it unconditionally instead (an extra warm costs untimed time,
-      // never honesty) and complain loudly so the map gets fixed.
-      val who = consumers.getOrElse(what, {
-        System.err.println(s"[$tag] index warm-up '$what' has no " +
-          "Warm.consumers entry — warming unconditionally; add it to the map")
-        Set.empty[String]
-      })
-      if (only.isEmpty || who.isEmpty || who.exists(only.contains))
-        try { f; () } catch { case e: Throwable =>
-          System.err.println(s"[$tag] index warm-up '$what' failed: ${e.getMessage}")
+      only: Set[String] = Set.empty): Unit =
+    steps.filter(st => only.isEmpty || st.consumers.exists(only.contains))
+      .foreach { st =>
+        try st.build(spark, sfDir) catch { case e: Throwable =>
+          System.err.println(
+            s"[$tag] index warm-up '${st.label}' failed: ${e.getMessage}")
         }
-    }
-    warmed("lake layout")(operators.Lake.warmLayout(spark, sfDir))
-    warmed("media table")(operators.Multimodal.mediaTable(spark, sfDir).count())
-    warmed("phash index")(operators.Multimodal.phashFrame(spark, sfDir).count())
-    warmed("afp index")(operators.Multimodal.afpFrame(spark, sfDir).count())
-    warmed("vhash index")(operators.Multimodal.vhashFrame(spark, sfDir).count())
-    warmed("signature index")(operators.Dedup.warmSignatureIndex(spark, sfDir))
-    warmed("vocab index")(operators.TextAnalysis.warmVocabIndex(spark, sfDir))
-    warmed("bpe merges")(operators.Tokenize.trainMerges(spark, sfDir))
-    warmed("bigram lm")(operators.TextAnalysis.lmModelBroadcast(spark, sfDir))
-    warmed("pq index")(operators.Similarity.warmPqIndex(spark, sfDir))
-  }
+      }
 }

@@ -127,43 +127,6 @@ case class NearestCellBc(
     copy(left = newLeft, right = newRight)
 }
 
-/** Two-nearest-cells variant of [[NearestCellBc]] for multi-probe
-  * SemDeDup (VERDICT r11 #4): returns `(best << 32) | second` packed in
-  * one long (second == best when the label has a single centroid), both
-  * under the same (dist, cell) lexicographic order as the argmin. One
-  * pass over the same broadcast primitive matrices — the multi-probe
-  * assignment costs the same kernel work as single-probe; the extra cost
-  * is downstream pair volume, measured in SCALE.md. */
-case class Nearest2CellsBc(
-    left: Expression, right: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[CentroidTable])
-  extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  private lazy val embIsFloat =
-    right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(l: Any, e: Any): Any =
-    ArrayMath.nearest2CellsIn(l.asInstanceOf[Int],
-      e.asInstanceOf[ArrayData], embIsFloat, bc.value)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroidsBc", bc,
-      "org.apache.spark.broadcast.Broadcast")
-    nullSafeCodeGen(ctx, ev, (l, e) => s"""
-      |${ev.value} = graft.functions.ArrayMath.nearest2CellsIn(
-      |  $l, $e, $embIsFloat,
-      |  (graft.functions.CentroidTable) $ref.value());
-      """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Label-indexed centroid table — the broadcast value [[NearestCellBc]]
   * probes. Dense arrays over the label range replace the previous
   * `Map[Int, _]` (VERDICT r11: the per-row Map apply boxed the label on
@@ -188,10 +151,6 @@ final class CentroidTable private (
 
   /** Per-centroid self-dot (‖c‖²) array for `label`. */
   def selfDots(label: Int): Array[Double] = ccs(label - minLabel)
-
-  /** Labels present, ascending — [[IvfIndex.build]]'s iteration domain. */
-  def labels: Seq[Int] =
-    cvs.indices.collect { case i if cvs(i) != null => i + minLabel }.toSeq
 }
 
 object CentroidTable {
@@ -213,124 +172,6 @@ object CentroidTable {
     rows.foreach { case (l, cv, cc) => cvs(l - minL) = cv; ccs(l - minL) = cc }
     new CentroidTable(minL, dims.head, cvs, ccs)
   }
-}
-
-/** Two-level (IVF) argmin index over a [[CentroidTable]] — the measured
-  * form of the mitigation documented at d16's build site: when per-label
-  * centroid count k tracks block size (k = bn/64), the flat argmin's
-  * n·k·dim work is O(n²·dim/64) per label; visiting √k coarse cells then
-  * one coarse cell's member list cuts it to ~2·n·√k·dim at an
-  * approximation cost MEASURED by `graft.tools.IvfProbe` (cell agreement
-  * vs the exact kernel, per SF).
-  *
-  * Deterministic, no training: coarse centroid j is the member centroid
-  * at stride j·⌈k/m⌉ in cell order (m = ⌈√k⌉), and every centroid joins
-  * its nearest coarse under the SAME (dist, index) lexicographic order
-  * as the row kernel — so the index is a pure function of the table and
-  * two builds never disagree. */
-final class IvfIndex private (
-    val table: CentroidTable, minLabel: Int,
-    cVecs: Array[Array[Double]], cDots: Array[Array[Double]],
-    cLists: Array[Array[Array[Int]]]) extends Serializable {
-  def coarseVecs(label: Int): Array[Double] = cVecs(label - minLabel)
-  def coarseDots(label: Int): Array[Double] = cDots(label - minLabel)
-  def coarseLists(label: Int): Array[Array[Int]] = cLists(label - minLabel)
-}
-
-object IvfIndex {
-  def build(t: CentroidTable): IvfIndex = {
-    val labels = t.labels
-    val minL = labels.min
-    val n = labels.max - minL + 1
-    val cVecs = new Array[Array[Double]](n)
-    val cDots = new Array[Array[Double]](n)
-    val cLists = new Array[Array[Array[Int]]](n)
-    val d = t.dim
-    labels.foreach { label =>
-      val cvs = t.vectors(label)
-      val ccs = t.selfDots(label)
-      val k = ccs.length
-      val m = math.ceil(math.sqrt(k.toDouble)).toInt
-      val stride = (k + m - 1) / m
-      val coarseIds = (0 until k by stride).toArray
-      val mm = coarseIds.length
-      val vec = new Array[Double](mm * d)
-      val dot = new Array[Double](mm)
-      var j = 0
-      while (j < mm) {
-        System.arraycopy(cvs, coarseIds(j) * d, vec, j * d, d)
-        dot(j) = ccs(coarseIds(j))
-        j += 1
-      }
-      val buf = Array.fill(mm)(scala.collection.mutable.ArrayBuffer.empty[Int])
-      // a coarse centroid always owns ITSELF (a duplicate coarse vector
-      // would otherwise tie-break its self-assignment to the earlier
-      // duplicate and leave this list empty — a probe of an empty list
-      // would return a silent wrong cell)
-      val ownCoarse = new Array[Int](k)
-      java.util.Arrays.fill(ownCoarse, -1)
-      coarseIds.zipWithIndex.foreach { case (c, cj) => ownCoarse(c) = cj }
-      var ci = 0
-      while (ci < k) {
-        if (ownCoarse(ci) >= 0) buf(ownCoarse(ci)) += ci
-        else {
-          var best = Double.PositiveInfinity
-          var bestJ = 0
-          j = 0
-          while (j < mm) {
-            var s = 0.0
-            var x = 0
-            val cb = ci * d; val jb = j * d
-            while (x < d) { s += cvs(cb + x) * vec(jb + x); x += 1 }
-            val dist = dot(j) - 2.0 * s
-            if (dist < best) { best = dist; bestJ = j }
-            j += 1
-          }
-          buf(bestJ) += ci
-        }
-        ci += 1
-      }
-      cVecs(label - minL) = vec
-      cDots(label - minL) = dot
-      cLists(label - minL) = buf.map(_.toArray)
-    }
-    new IvfIndex(t, minL, cVecs, cDots, cLists)
-  }
-}
-
-/** IVF variant of [[NearestCellBc]]: probe the `nprobe` (1 or 2) nearest
-  * coarse cells, exact argmin over their member centroids only. Same
-  * (dist, cell) lexicographic order within the visited set; approximation
-  * = the true nearest centroid living in an unvisited coarse cell,
-  * measured by IvfProbe. */
-case class NearestCellIvfBc(
-    left: Expression, right: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[IvfIndex], nprobe: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  private lazy val embIsFloat =
-    right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(l: Any, e: Any): Any =
-    ArrayMath.nearestCellIvf(l.asInstanceOf[Int],
-      e.asInstanceOf[ArrayData], embIsFloat, bc.value, nprobe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfBc", bc,
-      "org.apache.spark.broadcast.Broadcast")
-    nullSafeCodeGen(ctx, ev, (l, e) => s"""
-      |${ev.value} = graft.functions.ArrayMath.nearestCellIvf(
-      |  $l, $e, $embIsFloat,
-      |  (graft.functions.IvfIndex) $ref.value(), $nprobe);
-      """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object ArrayMath {
@@ -366,130 +207,6 @@ object ArrayMath {
       i += 1
     }
     bestI
-  }
-
-  /** Two running (dist, cell)-lexicographic minima in one pass —
-    * [[Nearest2CellsBc]]'s kernel. Packs `(best << 32) | second`;
-    * second == best when the label has one centroid. */
-  def nearest2CellsIn(label: Int, emb: ArrayData, embIsFloat: Boolean,
-      t: CentroidTable): Long = {
-    val cvs = t.vectors(label)
-    val ccs = t.selfDots(label)
-    val d = emb.numElements()
-    if (d != t.dim)
-      throw new IllegalArgumentException(
-        s"embedding dim $d != centroid dim ${t.dim} (label $label)")
-    val e = new Array[Double](d)
-    var j = 0
-    if (embIsFloat) while (j < d) { e(j) = emb.getFloat(j); j += 1 }
-    else while (j < d) { e(j) = emb.getDouble(j); j += 1 }
-    val k = ccs.length
-    var best = Double.PositiveInfinity
-    var bestI = 0
-    var second = Double.PositiveInfinity
-    var secondI = 0
-    var i = 0
-    while (i < k) {
-      var s = 0.0
-      val base = i * d
-      j = 0
-      while (j < d) { s += e(j) * cvs(base + j); j += 1 }
-      val dist = ccs(i) - 2.0 * s
-      if (dist < best) {
-        second = best; secondI = bestI
-        best = dist; bestI = i
-      } else if (dist < second) {
-        second = dist; secondI = i
-      }
-      i += 1
-    }
-    if (k == 1) secondI = bestI
-    (bestI.toLong << 32) | (secondI.toLong & 0xffffffffL)
-  }
-
-  /** Two-level argmin — [[NearestCellIvfBc]]'s kernel. Coarse pass over
-    * ~√k cells keeping the `nprobe` nearest (insertion into two small
-    * arrays — nprobe is a handful), fine pass over the probed cells'
-    * member lists; lexicographic (dist, cell) within the visited set,
-    * matching the exact kernel on agreement. */
-  def nearestCellIvf(label: Int, emb: ArrayData, embIsFloat: Boolean,
-      idx: IvfIndex, nprobe: Int): Int = {
-    val t = idx.table
-    val cvs = t.vectors(label)
-    val ccs = t.selfDots(label)
-    val d = emb.numElements()
-    if (d != t.dim)
-      throw new IllegalArgumentException(
-        s"embedding dim $d != centroid dim ${t.dim} (label $label)")
-    val e = new Array[Double](d)
-    var j = 0
-    if (embIsFloat) while (j < d) { e(j) = emb.getFloat(j); j += 1 }
-    else while (j < d) { e(j) = emb.getDouble(j); j += 1 }
-    val cv = idx.coarseVecs(label)
-    val cd = idx.coarseDots(label)
-    val mm = cd.length
-    val np = math.min(math.max(nprobe, 1), mm)
-    val pd = new Array[Double](np)
-    val pi = new Array[Int](np)
-    java.util.Arrays.fill(pd, Double.PositiveInfinity)
-    java.util.Arrays.fill(pi, -1)
-    var i = 0
-    while (i < mm) {
-      var s = 0.0
-      val base = i * d
-      j = 0
-      while (j < d) { s += e(j) * cv(base + j); j += 1 }
-      val dist = cd(i) - 2.0 * s
-      if (dist < pd(np - 1)) {
-        var pos = np - 1
-        while (pos > 0 && dist < pd(pos - 1)) {
-          pd(pos) = pd(pos - 1); pi(pos) = pi(pos - 1); pos -= 1
-        }
-        pd(pos) = dist; pi(pos) = i
-      }
-      i += 1
-    }
-    val lists = idx.coarseLists(label)
-    var bestDist = Double.PositiveInfinity
-    var bestCell = 0
-    var p = 0
-    while (p < np && pi(p) >= 0) {
-      val list = lists(pi(p))
-      var li = 0
-      while (li < list.length) {
-        val ci = list(li)
-        var s = 0.0
-        val base = ci * d
-        j = 0
-        while (j < d) { s += e(j) * cvs(base + j); j += 1 }
-        val dist = ccs(ci) - 2.0 * s
-        if (dist < bestDist || (dist == bestDist && ci < bestCell)) {
-          bestDist = dist; bestCell = ci
-        }
-        li += 1
-      }
-      p += 1
-    }
-    bestCell
-  }
-
-  /** Column API for [[NearestCellIvfBc]]. */
-  def nearestCellIvfBc(spark: SparkSession, label: Column, emb: Column,
-      bc: org.apache.spark.broadcast.Broadcast[IvfIndex],
-      nprobe: Int): Column = {
-    val name = s"graft_nearest_cell_ivf_bc_${bc.id}_$nprobe"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => NearestCellIvfBc(es(0), es(1), bc, nprobe), "built-in")
-    org.apache.spark.sql.functions.call_function(name, label, emb)
-  }
-
-  /** Column API for [[Nearest2CellsBc]]. */
-  def nearest2CellsBc(spark: SparkSession, label: Column, emb: Column,
-      bc: org.apache.spark.broadcast.Broadcast[CentroidTable]): Column = {
-    val name = s"graft_nearest2_cells_bc_${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => Nearest2CellsBc(es(0), es(1), bc), "built-in")
-    org.apache.spark.sql.functions.call_function(name, label, emb)
   }
 
   /** Column API for [[NearestCellBc]] (registry slot keyed by broadcast

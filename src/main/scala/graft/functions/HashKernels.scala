@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -22,8 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - shingles: distinct 3-word shingles of the single-space token split
   *   - minhash:  sig[h] = min over shingles of md5("h|" + shingle), hex —
   *     identical to DuckDB's md5() (hex order == byte order, so minima agree)
-  *   - simhash:  per-bit majority of xxhash64(token, seed 42) — the same
-  *     XxHash64Function Spark's `xxhash64` uses
+  *   - simhash:  per-bit majority of the first 8 bytes of md5(token) —
+  *     DuckDB's substr(md5(x),1,16) read as a UBIGINT
   */
 object HashKernels {
 
@@ -189,41 +189,10 @@ object HashKernels {
       mins.map(m => UTF8String.fromString(hex(m)): Any))
   }
 
-  /** 64-bit SimHash over distinct whitespace tokens (xxhash64 seed 42). */
-  def simhash64(text: UTF8String): Long = simhash64Seeded(text, 42L)
-
-  /** [[simhash64]] with a caller-chosen xxhash64 seed: independent seeds
-    * give independent 64-bit words, which is how BandProbe composes the
-    * 128-bit signatures behind d04's documented wide-band scale escape
-    * (SCALE.md) without a second kernel shape. */
-  def simhash64Seeded(text: UTF8String, seed: Long): Long = {
-    val toks = text.toString.split(" ", -1)
-    val seen = new java.util.HashSet[String](toks.length * 2)
-    val counts = new Array[Int](64)
-    var i = 0
-    while (i < toks.length) {
-      if (seen.add(toks(i))) {
-        val h = XxHash64Function.hash(
-          UTF8String.fromString(toks(i)), StringType, seed)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
-
   /** 64-bit SimHash over distinct whitespace tokens, bit source = the first
     * 8 bytes (big-endian) of md5(token) — bit-identical to DuckDB's
     * ('0x' || substr(md5(x),1,16))::UBIGINT, which makes the whole SimHash
-    * pipeline oracle-checkable. [[simhash64]] (xxhash64) stays as the scale
-    * path: same dataflow, ~5× cheaper per token, no cross-engine twin. */
+    * pipeline oracle-checkable. */
   def simhash64Md5(text: UTF8String): Long = {
     val toks = text.toString.split(" ", -1)
     val seen = new java.util.HashSet[String](toks.length * 2)
@@ -383,30 +352,6 @@ object HashKernels {
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     override protected def kernelCall = "graft.functions.HashKernels.minhashSig"
     override def nullSafeEval(t: Any): Any = minhashSig(t.asInstanceOf[UTF8String])
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  case class SimHash64Expr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(t: Any): Any = simhash64(t.asInstanceOf[UTF8String])
-    override protected def doGenCode(
-        ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        c => s"graft.functions.HashKernels.simhash64($c)")
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  case class SimHash64SeededExpr(child: Expression, seed: Long)
-    extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(t: Any): Any =
-      simhash64Seeded(t.asInstanceOf[UTF8String], seed)
-    override protected def doGenCode(
-        ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        c => s"graft.functions.HashKernels.simhash64Seeded($c, ${seed}L)")
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
@@ -609,8 +554,6 @@ object HashKernels {
       "graft_shingles", es => ShinglesExpr(es.head), "built-in")
     reg.createOrReplaceTempFunction(
       "graft_minhash_sig", es => MinHashSigExpr(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash64", es => SimHash64Expr(es.head), "built-in")
   }
 
   def shinglesCol(spark: SparkSession, c: Column): Column = {
@@ -623,22 +566,10 @@ object HashKernels {
     org.apache.spark.sql.functions.call_function("graft_minhash_sig", c)
   }
 
-  def simhash64Col(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("graft_simhash64", c)
-  }
-
   def simhash64Md5Col(spark: SparkSession, c: Column): Column = {
     val name = "graft_simhash64_md5"
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, es => SimHash64Md5Expr(es.head), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
-
-  def simhash64SeededCol(spark: SparkSession, c: Column, seed: Long): Column = {
-    val name = s"graft_simhash64_s$seed"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => SimHash64SeededExpr(es.head, seed), "built-in")
     org.apache.spark.sql.functions.call_function(name, c)
   }
 }

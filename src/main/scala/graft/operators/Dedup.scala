@@ -406,56 +406,9 @@ object Dedup {
   private def cellAssignmentsRaw(s: SparkSession, d: String): DataFrame = {
     def dot(x: Column, y: Column) = graft.functions.ArrayMath.dot(s, x, y)
     val e = Tables.embeddings(s, d)
-    val bc = centroidTableBc(s, d)
-    e.withColumn("cell", graft.functions.ArrayMath.nearestCellBc(
-        s, col("label"), col("embedding"), bc))
-      .select(col("vec_id"), col("label"), col("cell"), col("embedding"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
-  }
-
-  /** Deployment lever (VERDICT r12 #4): cap the per-label centroid count.
-    * The centroid rank is a smallest-md5 prefix order, so the capped table
-    * is a PREFIX of the uncapped one — assignment becomes linear
-    * (n·cap·dim) while cells coarsen (occupancy n/cap), shifting cost into
-    * the distributed codegen pair pass. Recall direction is UP (coarser
-    * cells co-locate more pairs): IvfProbe measured merged-drop recall
-    * 0.998 at cap=1024 on the 2M-vector corpus with assignment 10.7 →
-    * 3.6 s. UNSET by default — the declared d16 oracle pins the uncapped
-    * k = bn/64 semantics; set `SPARK_GRAFT_D16_CAPK=<cap>` for corpora
-    * where k outgrows the linear-assignment budget (k > ~10³, i.e.
-    * blocks past ~10⁵ vectors/label). */
-  private[graft] def d16CapK: Option[Int] =
-    sys.env.get("SPARK_GRAFT_D16_CAPK")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ > 0)
-
-  /** Prefix-truncate every label's centroid matrix to at most `cap` cells.
-    * A pure prefix of the same md5 rank: the capped table's cell c is the
-    * uncapped table's cell c for every c < cap (DedupSpec pins this). */
-  private[graft] def capCentroidTable(
-      t: graft.functions.CentroidTable, cap: Int): graft.functions.CentroidTable =
-    graft.functions.CentroidTable.build(t.labels.map { l =>
-      val kk = math.min(cap, t.selfDots(l).length)
-      (l, t.vectors(l).take(kk * t.dim), t.selfDots(l).take(kk))
-    })
-
-  /** The broadcast per-label centroid matrices both the single-probe and
-    * multi-probe assignment kernels read — extracted so the multi-probe
-    * variant quantizes against the IDENTICAL centroids (its recall delta
-    * is then purely the second probe, never centroid drift). */
-  private[graft] def centroidTableBc(s: SparkSession, d: String)
-      : org.apache.spark.broadcast.Broadcast[graft.functions.CentroidTable] = {
-    def dot(x: Column, y: Column) = graft.functions.ArrayMath.dot(s, x, y)
-    val e = Tables.embeddings(s, d)
-    // cap-k applies INSIDE the k computation: the selection window, the
-    // driver collect, and the broadcast all shrink with it, and the capped
-    // table is still an exact prefix of the uncapped md5 rank (row_number
-    // under the same order, smaller k — DedupSpec pins prefix identity)
-    val kExpr = d16CapK
-      .map(c => expr(s"least((bn + 63) div 64, $c)"))
-      .getOrElse(expr("(bn + 63) div 64"))
     val k = broadcast(e.groupBy("label")
       .agg(count(lit(1)).as("bn"))
-      .select(col("label"), kExpr.as("k")))
+      .select(col("label"), expr("(bn + 63) div 64").as("k")))
     val h = md5(col("vec_id").cast("string"))
     // two-level smallest-k-by-hash per label: each (label, salt) ranks its
     // own slice, the global rank sees ≤ salts×k pre-pruned rows
@@ -500,55 +453,11 @@ object Dedup {
     val table = graft.functions.CentroidTable.build(centRows.toSeq.map { r =>
       (r.getInt(0), r.getSeq[Double](1).toArray, r.getSeq[Double](2).toArray)
     })
-    s.sparkContext.broadcast(table)
-  }
-
-  /** Multi-probe assignment (VERDICT r11 #4): every vector joins its TWO
-    * nearest cells, so a pair straddling one cell boundary is recovered
-    * whenever the straddled cell is either side's runner-up. Pair volume
-    * stays linear (per-cell membership ~doubles). Measured by
-    * RecallProbe / SCALE.md; a probe/experiment surface, not one of the
-    * 132 declared queries (their oracle pins single-probe SemDeDup). */
-  private[graft] def cellAssignmentsMulti(s: SparkSession, d: String): DataFrame =
-    ResultMemo.materialized("d16_cells_mp", s, d) {
-      def dot(x: Column, y: Column) = graft.functions.ArrayMath.dot(s, x, y)
-      val bc = centroidTableBc(s, d)
-      Tables.embeddings(s, d)
-        .withColumn("pk", graft.functions.ArrayMath.nearest2CellsBc(
-          s, col("label"), col("embedding"), bc))
-        .select(col("vec_id"), col("label"),
-          explode(array_distinct(array(
-            shiftright(col("pk"), 32).cast("int"),
-            col("pk").bitwiseAND(lit(0xffffffffL)).cast("int")))).as("cell"),
-          col("embedding"),
-          sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
-    }
-
-  /** d16's candidate pairs under multi-probe assignment. A pair sharing
-    * both probe cells would emit twice — the min-shared-cell filter keeps
-    * exactly one copy without an output-sized distinct. */
-  private[graft] def cappedCosinePairsMulti(s: SparkSession, d: String): DataFrame = {
-    def dot(x: Column, y: Column) = graft.functions.ArrayMath.dot(s, x, y)
-    val cf = cellAssignmentsMulti(s, d)
-    val a = cf.select(col("vec_id").as("id_a"), col("label"), col("cell"),
-        col("embedding").as("v_a"), col("nrm").as("nrm_a"))
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-        col("label"), col("cell"))
-    val b = cf.select(col("vec_id").as("id_b"), col("label"), col("cell"),
-      col("embedding").as("v_b"), col("nrm").as("nrm_b"))
-    a.join(b, Seq("label", "cell"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("raw_cos",
-        dot(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("raw_cos") >= 0.34999949)
-      .select(col("id_a"), col("id_b"), col("cell"),
-        round(col("raw_cos"), 6).as("cos"))
-      .filter(col("cos") >= 0.35)
-      // dedup the ≤2 shared-cell copies per pair
-      .withColumn("mincell", min(col("cell"))
-        .over(Window.partitionBy(col("id_a"), col("id_b"))))
-      .filter(col("cell") === col("mincell"))
-      .select(col("id_a"), col("id_b"), col("cos"))
+    val bc = s.sparkContext.broadcast(table)
+    e.withColumn("cell", graft.functions.ArrayMath.nearestCellBc(
+        s, col("label"), col("embedding"), bc))
+      .select(col("vec_id"), col("label"), col("cell"), col("embedding"),
+        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
   }
 
   /** d16's candidate pairs: exact cosine ≥ 0.35 within each (label, cell)
@@ -586,72 +495,6 @@ object Dedup {
     }
     sig.select(col(idCol), explode(array(bandStructs: _*)).as("band"))
       .select(col(idCol), col("band.b").as("b"), col("band.bkey").as("bkey"))
-  }
-
-  /** Flag parse for the d04 wide-banding deployment path. Only the MEASURED
-    * scheme is accepted — an arbitrary WxB here would ship an unprobed
-    * recall/junk point under a flag that promises a measured one. */
-  private[graft] def d04WideBands: Boolean =
-    sys.env.get("SPARK_GRAFT_D04_BANDS") match {
-      case None          => false
-      case Some("24x12") => true
-      case Some(other) => sys.error(
-        s"unsupported SPARK_GRAFT_D04_BANDS '$other'; the measured " +
-          "deployment scheme is 24x12 (BandProbe g24x12_xx)")
-    }
-
-  /** d04's candidate generation under the 12×24-bit scheme (BandProbe
-    * g24x12_xx): six seeded xxhash64 SimHash words (seeds 42..47, one
-    * codegen kernel pass each), two 24-bit bands per word at offsets 0/24.
-    * Verification and output are the DECLARED d04's — hamming ≤ 16 on the
-    * md5 signature, (id_a, id_b, hamming), 32-way range-sorted — so a
-    * deployment can flip the flag without changing consumers. First-match
-    * band dedup is BandProbe's least-over-when form (linear in band count),
-    * never a distinct(). */
-  private[graft] def d04PairsWide(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.HashKernels
-    val parts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val nWords = 6
-    val width = 24
-    val bandsPerWord = 2
-    val wordCols = (0 until nWords).map(i => f"x$i%02d")
-    val sig = Tables.documents(s, d)
-      .select(col("doc_id") +:
-        HashKernels.simhash64Md5Col(s, col("text")).as("m") +:
-        wordCols.zipWithIndex.map { case (w, i) =>
-          HashKernels.simhash64SeededCol(s, col("text"), 42L + i).as(w)
-        }: _*)
-    def slice(word: Column, off: Int): Column =
-      shiftright(word, off).bitwiseAND(lit((1L << width) - 1L))
-    val bandDefs = (0 until nWords * bandsPerWord)
-      .map(b => (b / bandsPerWord, width * (b % bandsPerWord)))
-    val bandExprs = bandDefs.zipWithIndex.map { case ((wi, off), bi) =>
-      slice(col(wordCols(wi)), off) + lit(bi.toLong << width)
-    }
-    // same AQE posture as the declared path: pin the SHARED bands frame so
-    // the self-join reuses one exchange and the quadratic-output join
-    // stays `parts`-way
-    val bands = sig.select(col("doc_id") +: col("m") +:
-        wordCols.map(col) :+ explode(array(bandExprs: _*)).as("bkey"): _*)
-      .repartition(parts, col("bkey"))
-    def side(tag: String) = bands.select(
-      col("doc_id").as(s"id_$tag") +: col("m").as(s"m_$tag") +:
-        wordCols.map(w => col(w).as(s"${w}_$tag")) :+ col("bkey"): _*)
-    val joined = side("a").join(side("b"), Seq("bkey"))
-      .filter(col("id_a") < col("id_b"))
-    val band = shiftright(col("bkey"), width).cast("int")
-    val matchBands = bandDefs.zipWithIndex.map { case ((wi, off), bi) =>
-      when(slice(col(s"${wordCols(wi)}_a"), off) ===
-        slice(col(s"${wordCols(wi)}_b"), off), lit(bi))
-        .otherwise(lit(Int.MaxValue))
-    }
-    joined
-      .filter(band <= least(matchBands: _*))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("m_a").bitwiseXOR(col("m_b"))).as("hamming"))
-      .filter(col("hamming") <= 16)
-      .repartitionByRange(parts, col("id_a"), col("id_b"))
-      .sortWithinPartitions("id_a", "id_b")
   }
 
   /** d12's span-dedup dataflow. The terminal orderBy rides an
@@ -1066,29 +909,17 @@ object Dedup {
       }),
 
     // ------------------------------------------------------------ SimHash
-    // Deployment lever (VERDICT r12 #5): SPARK_GRAFT_D04_BANDS=24x12 swaps
-    // d04's CANDIDATE GENERATION to BandProbe's measured sweet spot for
-    // >10⁷-doc corpora — 12 bands × 24-bit keys over six seeded xxhash64
-    // SimHash words (scheme g24x12_xx) — while the VERIFICATION predicate
-    // (hamming ≤ 16 on the md5-derived 64-bit signature) and the output
-    // shape stay the declared d04's. The 16-bit junk term n²·B/2¹⁷
-    // becomes n²·B/2²⁵ (2¹⁰ less junk per band-pair) at 0.65-0.69 tight-
-    // pair recall (BandProbe, SCALE.md §third sweep; naive widening
-    // without the band-count dial keeps only 0.22-0.30). UNSET by default:
-    // the declared d04 oracle pins the 4×16 md5 banding.
     // 64-bit SimHash; candidates = equal 16-bit band + Hamming ≤ 16. Bit
     // source is the first 8 bytes of md5(token) — the same value DuckDB
     // derives from substr(md5(x),1,16), so the WHOLE pipeline (signature →
     // bands → hamming verify) is oracle-checked. Scale regime: 16-bit band
     // keys accrue uniform-collision candidates at 4·n²/2¹⁷ (measured
-    // tracking the model through sf10 — BandProbe / SCALE.md §third
-    // sweep), so past n~10⁷ the MEASURED escape is wider keys over a
-    // longer xxhash64 signature, with band count as a diminishing-returns
-    // recall dial: 12×24-bit holds 0.65-0.69 of tight pairs at 2¹⁰ less
-    // junk and same cost; 48×32-bit holds 0.81-0.84 junk-free but pays
-    // 4-14× wall in band-exchange row width; naive widening alone keeps
-    // only 0.22-0.30. Full frontier in the probe — run it before
-    // deploying.
+    // tracking the model through sf10 — SCALE.md §third sweep), so past
+    // n~10⁷ the junk term binds. The wider-key escapes over a longer
+    // xxhash64 signature are measured there too (12×24-bit holds 0.65-0.69
+    // of tight pairs at 2¹⁰ less junk and the same cost; 48×32-bit holds
+    // 0.81-0.84 junk-free but pays 4-14× wall in band-exchange row width;
+    // naive widening alone keeps only 0.22-0.30); none of them ships.
     QueryDef(
       "d04_simhash_pairs",
       covers = "X5 north-star",
@@ -1116,7 +947,7 @@ object Dedup {
         SELECT id_a, id_b,
                len(list_filter(range(0,64), b -> bv_a[b+1] <> bv_b[b+1])) AS hamming
         FROM cand WHERE hamming <= 16 ORDER BY id_a, id_b"""),
-      build = (s, d) => if (d04WideBands) d04PairsWide(s, d) else {
+      build = (s, d) => {
         // the whole 64-bit signature computes row-locally in ONE codegen'd
         // kernel (HashKernels.SimHash64Md5Expr) — the round-1 explode + 64
         // bit-aggregates shape shuffled every token hash; this emits
@@ -1424,16 +1255,14 @@ object Dedup {
     // (x08's pattern — no reducer ranks a full block) over n/64 surviving
     // rows; assignment joins each vector against ITS label's broadcast
     // centroid array and argmins in one codegen pass. The argmin's
-    // n·k·dim work is the one quadratic term (k = n/64); both mitigations
-    // are MEASURED at the 2M-vector corpus by graft.tools.IvfProbe
-    // (SCALE.md §third sweep): capping k (prefix of the same md5 rank)
-    // holds the merged OUTPUT at 0.998 recall while making assignment
-    // linear (10.7 → 3.6 s; pair pass absorbs the cost, distributed),
-    // and the two-level IvfIndex at nprobe=16 holds 0.993 at 6.3 s —
-    // per-PAIR overlap is far lower (0.35-0.67), but the drop set is a
-    // function of the pair GRAPH and dup cliques stay spanned. Prefer
-    // cap-k: recall direction is up, and the pair pass is the work Spark
-    // distributes best; the pair join's (label, cell) key has
+    // n·k·dim work is the one quadratic term (k = n/64). Its two
+    // mitigations were measured at the 2M-vector corpus (SCALE.md §third
+    // sweep): capping k (a prefix of the same md5 rank) held the merged
+    // OUTPUT at 0.998 recall while making assignment linear (10.7 → 3.6 s),
+    // and a two-level IVF index at nprobe=16 held 0.993 at 6.3 s — per-PAIR
+    // overlap is far lower (0.35-0.67), but the drop set is a function of
+    // the pair GRAPH and dup cliques stay spanned. Neither ships: the
+    // declared oracle pins k = bn/64. The pair join's (label, cell) key has
     // n/64 distinct values, so the quadratic work distributes by KEY
     // CARDINALITY and needs no triangle bucketing; components reuse the
     // d09 star loop. The repartition pin mirrors d05: AQE coalesces by

@@ -511,10 +511,6 @@ object V2Pipeline {
     md5(array_join(
       filter(split(md, "\n"), l => l.startsWith("#")), "\n").cast("binary"))
 
-  /** S3: append-style JSONL sink of the pipeline output. */
-  def writeJsonl(result: DataFrame, path: String): Unit =
-    result.write.mode("overwrite").json(path)
-
   /** S8 (watch_data.py:7-21): per-survey markdown exports — one directory
     * per survey with content.md and skeleton.md. Partition-parallel: each
     * task writes its own surveys' files (foreachPartition, no driver

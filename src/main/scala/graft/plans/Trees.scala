@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable.ArrayBuffer
@@ -148,13 +148,6 @@ object Trees {
       d -= 1
     }
     cur
-  }
-
-  implicit class DatasetOps(val df: Dataset[SectionRow]) extends AnyVal {
-    def preorder: Dataset[SectionRow] = {
-      import df.sparkSession.implicits._
-      df.orderBy("path")
-    }
   }
 
   def toDF(spark: SparkSession, rows: Seq[SectionRow]): DataFrame = {

@@ -656,26 +656,6 @@ object Streams {
     // session's 32 batch partitions cost ~4× the snapshot I/O these small
     // bounded gates need, so set it for the query and restore after.
     val spark = agg.sparkSession
-    // SPARK_GRAFT_STATE_PARTS overrides for deployment sizing and conf A/Bs
-    // (8 vs 2 measured in SCALE.md §"Round-13: the streaming machinery
-    // floor").
-    // Two recognized shapes, everything else FAILS FAST (ADVICE r13: a
-    // typo'd value that silently fell back to the default made an A/B
-    // measure default-vs-default): a single int overrides here; a comma
-    // list of ints is StreamProfile's interleave syntax (that tool drives
-    // the partition conf itself per rep), so this path keeps the declared
-    // default for it.
-    val parts = sys.env.get("SPARK_GRAFT_STATE_PARTS") match {
-      case None => statePartitions
-      case Some(v) =>
-        val items = v.split(",").map(_.trim).filter(_.nonEmpty)
-        require(items.nonEmpty &&
-            items.forall(s => scala.util.Try(s.toInt).isSuccess),
-          s"SPARK_GRAFT_STATE_PARTS='$v' is neither an int nor a comma " +
-            "list of ints — refusing to run an experiment against a " +
-            "silently-defaulted config")
-        if (items.length == 1) items.head.toInt else statePartitions
-    }
     // AvailableNow appends a final NO-DATA micro-batch after the data
     // batches: it advances the watermark and runs state eviction/final
     // emission. Stateful APPEND-mode aggregations need it to emit closed
@@ -693,7 +673,7 @@ object Streams {
     val q = confLock.synchronized {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       val prevNoData = spark.conf.get(noDataKey)
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
       if (!noDataBatch) spark.conf.set(noDataKey, "false")
       try agg.writeStream
         .outputMode(mode)

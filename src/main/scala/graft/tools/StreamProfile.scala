@@ -21,8 +21,10 @@ import graft.streaming.Streams
   *                batches, AvailableNow end-detection, thread teardown
   *   read       — final memory-table collect
   *
-  * Usage: runMain graft.tools.StreamProfile [sfDir] [reps] [query]
-  *   query ∈ {q26s (default), q27s, d10s}
+  * Usage: runMain graft.tools.StreamProfile [sfDir] [reps] [query] [parts]
+  *   query ∈ {q26s (default), q27s, d10s, q40s, suite}
+  *   parts (single-query mode): state-store partition count, or a comma
+  *   list ("8,2") that reps interleave (default 8)
   */
 object StreamProfile {
 
@@ -51,6 +53,7 @@ object StreamProfile {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps  = if (args.length > 1) args(1).toInt else 4
     val which = if (args.length > 2) args(2) else "q26s"
+    val partsArg = if (args.length > 3) args(3) else "8"
     if (which == "suite") { suite(sfDir, reps); return }
 
     val spark = GraftSession.get("stream-profile")
@@ -68,11 +71,12 @@ object StreamProfile {
     // Warm the batch-side machinery once (parquet footer probe, codegen)
     spark.read.parquet(s"$sfDir/events.parquet").limit(1).count()
 
-    // SPARK_GRAFT_STATE_PARTS may be a comma list ("8,2") — reps interleave
-    // the settings A-B-A-B so JVM warm-up drift doesn't masquerade as a
-    // config effect (the measurement-discipline rule from STATE.md).
-    val partsChoices = sys.env.getOrElse("SPARK_GRAFT_STATE_PARTS", "8")
-      .split(",").map(_.trim).filter(_.nonEmpty)
+    // a comma list of partition counts ("8,2") interleaves the settings
+    // A-B-A-B across reps so JVM warm-up drift doesn't masquerade as a
+    // config effect (the measurement-discipline rule from STATE.md)
+    val partsChoices = partsArg.split(",").map(_.trim).filter(_.nonEmpty)
+    require(partsChoices.nonEmpty && partsChoices.forall(_.toIntOption.isDefined),
+      s"parts '$partsArg' is neither an int nor a comma list of ints")
     for (r <- 1 to reps) {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       val parts = partsChoices((r - 1) % partsChoices.length)

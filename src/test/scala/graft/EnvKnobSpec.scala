@@ -12,8 +12,7 @@ import scala.jdk.CollectionConverters._
 class EnvKnobSpec extends AnyFunSuite {
 
   private val levers = Set(
-    "CPUS", "SF_DIR", "WARM_DIR", "BENCH_REPS",
-    "D04_BANDS", "D16_CAPK", "STATE_PARTS", "BIN_PART"
+    "CPUS", "SF_DIR", "WARM_DIR", "BENCH_REPS", "BIN_PART"
   ).map("SPARK_GRAFT_" + _)
 
   private val root = Paths.get("src/main/scala/graft")
@@ -48,5 +47,24 @@ class EnvKnobSpec extends AnyFunSuite {
       .flatMap("""^\| `(SPARK_GRAFT_[A-Z0-9_]+)`""".r.findFirstMatchIn(_))
       .map(_.group(1))
     assert(rows.toSet == levers && rows.size == levers.size, rows)
+  }
+
+  test("README's Tools list names exactly the mains under tools/") {
+    val objectDecl = """^\s*object (\w+)""".r
+    val mains = Files.list(root.resolve("tools")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+        // a main belongs to the nearest object declared above it
+        Files.readAllLines(f).asScala.foldLeft((Option.empty[String],
+            Seq.empty[String])) { case ((obj, found), line) =>
+          val o = objectDecl.findFirstMatchIn(line).map(_.group(1)).orElse(obj)
+          (o, if (line.contains("def main(")) found ++ o else found)
+        }._2
+      }
+    val listed = Files.readAllLines(Paths.get("README.md")).asScala
+      .dropWhile(_ != "### Tools").drop(1).takeWhile(!_.startsWith("#"))
+      .flatMap("""^- `(\w+)""".r.findFirstMatchIn(_)).map(_.group(1))
+    assert(mains.nonEmpty)
+    assert(listed.sorted == mains.sorted,
+      s"README lists ${listed.sorted}, tools/ defines ${mains.sorted}")
   }
 }

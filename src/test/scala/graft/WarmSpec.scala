@@ -2,18 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins Warm's artifact labels to its consumers map (ADVICE r11): a
-  * warmed() label without a consumers entry falls back to unconditional
-  * warming with a stderr complaint, and a consumers entry without a
-  * warmed() step is dead weight — both are drift this spec catches at
-  * compile-adjacent cost, no SparkSession needed.
+/** Pins Warm's artifact labels unique: a label names one artifact in the
+  * loud per-step failure line, so two steps sharing one would make a
+  * failed warm-up ambiguous. No SparkSession needed.
   */
 class WarmSpec extends AnyFunSuite {
-  test("every warm-up label has a consumers entry and vice versa") {
-    assert(Warm.labels.toSet === Warm.consumerKeys)
-  }
-
   test("warm-up labels are unique") {
-    assert(Warm.labels.distinct === Warm.labels)
+    val labels = Warm.steps.map(_.label)
+    assert(labels.distinct === labels)
   }
 }
