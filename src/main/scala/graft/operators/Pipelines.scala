@@ -84,7 +84,9 @@ object Pipelines {
           V2Pipeline.Config(nGroups = 2, blockCount = 1, convLayers = 1,
             kernelWidth = 2, poolSize = 3))
           .select("survey_id", "n_papers", "cite_ratio")
-          .orderBy("survey_id")
+          // one sorted partition: a range-partitioned sort would sample
+          // its input first, running every survey's inference twice
+          .repartition(1).sortWithinPartitions("survey_id")
       }),
 
     // ------------------------------------- end-to-end training-mix pipeline

@@ -2,30 +2,34 @@ package graft.pipeline
 
 import graft.infer.{InferOps, InferenceClient, MockInference}
 import graft.plans.Trees
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The V2 survey-generation pipeline re-expressed as Spark stages
   * (SURVEY.md §3.2; reference /root/reference/LLMxMapReduce_V2/src/
   * start_pipeline.py:20-54: encode >> hidden >> decode).
   *
   * Stage map (reference → here):
-  *   - encode: JSONL surveys → exploded paper rows (S1/S2/F2), bibkey slugs
+  *   - encode: JSONL surveys → per-survey paper structs (S1/S2/F2), bibkey slugs
   *   - group: round-robin paper grouping (X3, group_module.py random path)
   *   - skeleton-init: per-survey outline via inference concat (A5)
   *   - digest: per-paper outline-shaped extraction (digest_module.py), merged
   *     per group by section path (A4), shape-checked against the skeleton (J1)
-  *   - refine loop (D5 cycle, driver-controlled): suggestions (feedback
-  *     neurons) → seeded weighted sampling (W6) → kernel merge (A6) → eval
-  *     scores (T13) → top-k prune (W1) → best suggestion modifies skeleton
+  *   - refine loop (D5 cycle, `blockCount` bound): suggestions (feedback
+  *     neurons) → seeded weighted sampling (W6) → kernel merge (A6) → top-k
+  *     prune (W1) → best suggestion modifies skeleton
   *   - decode: leaf-section writing, bottom-up assembly (D11), polish,
-  *     bibkey→index citation re-key (J2), cite-ratio stat (A8), JSONL out (S3)
+  *     bibkey→index citation re-key (J2), cite-ratio stat (A8), figures (J7)
   *
-  * Every stage is `DataFrame => DataFrame` keyed by survey_id: N surveys
-  * pipeline through the same jobs, so cluster scale-out is by survey AND by
-  * paper within survey — no per-survey driver work except the bounded
-  * refine-loop controller.
+  * The survey is the unit of work, as in the reference's `Survey` record
+  * (survey.py:13-139): `encode` is an in-plan projection, and one
+  * `mapPartitions` task runs every stage for the surveys of its partition,
+  * in lockstep. Scale-out is by survey across tasks; each stage's prompts
+  * of all the task's open surveys go through one [[InferOps.completeAll]]
+  * call, whose pool gives the inference concurrency within a survey. A run
+  * is one Spark job over its input, whatever the number of stages.
   */
 object V2Pipeline {
 
@@ -39,477 +43,269 @@ object V2Pipeline {
       seed: Long = 42L)
 
   // ------------------------------------------------------------------ encode
-  /** surveys(survey_id, title, papers[struct(title, txt)]) → paper rows. */
+  /** surveys(survey_id, title, papers[struct(title, txt)]) → the same rows
+    * with papers[struct(paper_title, paper_txt, bibkey)], the bibkey being
+    * the title's slug (S1/S2). */
   def encode(surveys: DataFrame): DataFrame =
-    surveys
-      .filter(size(col("papers")) > 0) // F2: drop paper-less surveys
-      .select(col("survey_id"), col("title"),
-        posexplode(col("papers")).as(Seq("paper_idx", "paper")))
-      .select(
-        col("survey_id"), col("title"), col("paper_idx"),
-        col("paper.title").as("paper_title"),
-        col("paper.txt").as("paper_txt"),
-        slugCol(col("paper.title")).as("bibkey"))
-      .filter(length(col("paper_txt")) > 0) // F2: drop empty papers
+    surveys.select(col("survey_id"), col("title"),
+      transform(col("papers"), p => struct(
+        p("title").as("paper_title"),
+        p("txt").as("paper_txt"),
+        slugCol(p("title")).as("bibkey"))).as("papers"))
 
   private def slugCol(c: Column): Column =
     regexp_replace(regexp_replace(lower(c), "[^a-z0-9]+", "-"), "(^-+)|(-+$)", "")
 
-  // ------------------------------------------------------------------- group
+  /** Spark's string order (UTF-8 bytes), the order `array_sort` and window
+    * sorts use; Java's UTF-16 order differs outside the BMP. */
+  private val Utf8: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+  }
+
   /** X3 round-robin grouping: deterministic stand-in for the reference's
-    * random/LLM grouping, same cardinality contract. */
-  def group(papers: DataFrame, cfg: Config): DataFrame = {
-    val w = Window.partitionBy("survey_id").orderBy("bibkey")
-    papers.withColumn("group_id",
-      pmod(row_number().over(w) - 1, lit(cfg.nGroups)))
+    * random/LLM grouping, same cardinality contract. The group of each
+    * bibkey, in input order: rank by bibkey, modulo `nGroups`. */
+  private[graft] def roundRobin(bibkeys: Seq[String], nGroups: Int): Seq[Int] = {
+    val rank = bibkeys.indices.sortBy(bibkeys)(Utf8)
+    val group = new Array[Int](bibkeys.size)
+    rank.zipWithIndex.foreach { case (i, r) => group(i) = r % nGroups }
+    group.toSeq
   }
 
-  // ----------------------------------------------------------- skeleton init
-  /** A5: batch outlines concatenated into one skeleton per survey. */
-  def skeletonInit(papers: DataFrame, client: InferenceClient): DataFrame = {
-    val gathered = papers
-      .groupBy("survey_id", "title")
-      .agg(array_join(array_sort(collect_list(col("paper_title"))), ", ")
-        .as("paper_titles"))
-      .withColumn("prompt",
-        concat(lit("OUTLINE|"), col("title"), lit("|"), col("paper_titles")))
-    InferOps.complete(gathered, "prompt", "skeleton_md", client)
-      .select("survey_id", "title", "skeleton_md")
-  }
+  private final case class Paper(title: String, txt: String, bibkey: String, group: Int)
 
-  // ------------------------------------------------------------------ digest
-  /** Per-paper digest shaped by the skeleton, merged per group by section
-    * path (A4), then shape-checked (J1). Returns one row per
-    * (survey, group, section). */
-  def digest(
-      papers: DataFrame,
-      skeleton: DataFrame,
-      client: InferenceClient): DataFrame = {
-    val prompts = papers.join(skeleton.select("survey_id", "skeleton_md"), "survey_id")
-      .withColumn("prompt", concat(
-        lit("DIGEST|"), col("skeleton_md"), lit("|"), col("bibkey"),
-        lit("|"), col("paper_txt")))
-    val raw = InferOps.complete(prompts, "prompt", "digest_md", client)
-      .select("survey_id", "group_id", "bibkey", "digest_md")
+  /** One group's merged digest of one skeleton section (A4). */
+  private final case class Digest(group: Int, path: Seq[Int], description: String)
 
-    // parse digest markdown into section rows (tree-as-rows)
-    val parse = udf((md: String) =>
-      Trees.parseOutline("x", md)
-        .map(r => (r.path, r.depth, r.title, r.description)))
-    val sections = raw
-      .select(col("survey_id"), col("group_id"), col("bibkey"),
-        explode(parse(col("digest_md"))).as("sec"))
-      .select(col("survey_id"), col("group_id"), col("bibkey"),
-        col("sec._1").as("path"), col("sec._2").as("depth"),
-        col("sec._3").as("title"), col("sec._4").as("description"))
-
-    // A4: merge digests of one group section-by-section (bibkey-ordered).
-    // Checkpointed LAZILY: the J1 conformance check below is the action
-    // that materializes it (one job, not a separate eager-checkpoint job
-    // followed by the check — p02's job count is stage composition, not
-    // data volume; VERDICT r8 #3), and the caller then reuses the cached
-    // blocks — without the checkpoint the merge would compute twice.
-    val merged = sections
-      .groupBy("survey_id", "group_id", "path", "depth", "title")
-      .agg(array_join(
-        expr("transform(array_sort(collect_list(struct(bibkey, description))), p -> p.description)"),
-        "\n---\n").as("description"))
-      .localCheckpoint(false)
-
-    // J1 contract: every group's digest tree mirrors the skeleton. The
-    // skeleton side broadcasts (it is one parsed outline per survey) and
-    // the existence check needs no distinct — both only added exchanges,
-    // i.e. AQE stage-jobs, to a count whose answer they cannot change.
-    val skeletonSections = skeletonRows(skeleton)
-    val bad = merged.select(col("survey_id"), col("path"))
-      .join(broadcast(skeletonSections.select("survey_id", "path")),
-        Seq("survey_id", "path"), "left_anti").count()
-    if (bad > 0)
-      throw new Trees.StructureNotCorrespondingException(
-        s"$bad digest section rows have no skeleton counterpart")
-    merged
-  }
-
-  /** Parse each survey's skeleton markdown into section rows. */
-  def skeletonRows(skeleton: DataFrame): DataFrame = {
-    val parse = udf((md: String) =>
-      Trees.parseOutline("x", md)
-        .map(r => (r.path, r.depth, r.title, r.description)))
-    skeleton
-      .select(col("survey_id"), explode(parse(col("skeleton_md"))).as("sec"))
-      .select(col("survey_id"),
-        col("sec._1").as("path"), col("sec._2").as("depth"),
-        col("sec._3").as("title"), col("sec._4").as("description"))
-  }
-
-  // ------------------------------------------------------------- refine loop
-  /** One hidden-stage block: suggestions → convolution layers (sample, merge,
-    * score, prune) → best suggestion modifies the skeleton (D5 loop body).
-    *
-    * The convolution layers run FUSED: one shuffle groups each survey's
-    * suggestion pool, and a single task replays every layer locally —
-    * A-Res sample, MERGE call, top-poolSize prune — with byte-identical
-    * prompts and ordering to the unfused per-layer dataflow
-    * ([[refineSkeletonUnfused]], kept for the invariance spec). The pool is
-    * config-bounded (poolSize = the reference's result_num,
-    * conv_kernel_module.py), so per-task state is O(poolSize · |suggestion|)
-    * regardless of corpus scale; what the fusion removes is 2 windows + one
-    * inference stage PER LAYER from the job graph — the dominant cost of a
-    * p02 block at any scale (stage count, not data volume). */
-  def refineSkeleton(
-      skeleton: DataFrame,
-      digests: DataFrame,
-      client: InferenceClient,
-      cfg: Config): DataFrame = {
-    val pooled = suggestionPool(skeleton, digests, client)
-      .groupBy("survey_id")
-      .agg(collect_list(struct(col("suggestion"), col("score"))).as("pool"))
-    val idField = pooled.schema("survey_id")
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      idField,
-      org.apache.spark.sql.types.StructField("best_suggestion",
-        org.apache.spark.sql.types.StringType)))
-    val best = pooled.mapPartitions { rows =>
-      rows.map { r =>
-        val pool0 = r.getSeq[org.apache.spark.sql.Row](1)
-          .map(p => (p.getString(0), p.getInt(1)))
-        org.apache.spark.sql.Row(r.get(0), convolve(pool0, client, cfg))
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-    modifySkeleton(skeleton, best, client)
-  }
-
-  /** Replay one survey's convolution layers locally (the fused task body).
-    * Each step mirrors the unfused column expressions exactly:
-    * xxhash64/pmod via Spark's own [[XxHash64Function]] (seed 42, then the
-    * string hash seeds the long hash — the multi-arg fold), `pow` is
-    * `java.lang.Math.pow` in both engines, and string order is ASCII (all
-    * inference replies are ASCII), where Java and UTF8String comparisons
-    * agree. */
-  private[graft] def convolve(
-      pool0: Seq[(String, Int)],
-      client: InferenceClient,
-      cfg: Config): String = {
-    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-    import org.apache.spark.sql.types.{LongType, StringType}
-    import org.apache.spark.unsafe.types.UTF8String
-    var pool = pool0
-    var layer = 0
-    while (layer < cfg.convLayers) {
-      val sampled = pool.map { case (s, sc) =>
-        val h1 = XxHash64Function.hash(UTF8String.fromString(s), StringType, 42L)
-        val h2 = XxHash64Function.hash(cfg.seed + layer, LongType, h1)
-        val u  = ((((h2 % 1000000L) + 1000000L) % 1000000L).toDouble + 1.0) / 1000001.0
-        (s, math.pow(u, 1.0 / math.max(sc, 1)))
-      }.sortBy { case (s, a) => (-a, s) }
-        .take(cfg.kernelWidth)
-      val reply = client.complete(
-        "MERGE|" + sampled.map(_._1).sorted.mkString("\n"))
-      pool = (pool :+ (reply -> scoreOfStr(reply)))
-        .sortBy { case (s, sc) => (-sc, s) }
-        .take(cfg.poolSize)
-      layer += 1
-    }
-    pool.maxBy { case (s, sc) => (sc, s) }._1
-  }
-
-  /** Feedback neuron: one scored suggestion per digest group (shared by the
-    * fused and unfused refine paths). */
-  private def suggestionPool(
-      skeleton: DataFrame,
-      digests: DataFrame,
-      client: InferenceClient): DataFrame =
-    InferOps.complete(
-      digests.groupBy("survey_id", "group_id")
-        .agg(array_join(array_sort(collect_list(col("description"))), "\n").as("dg"))
-        .join(skeleton.select("survey_id", "skeleton_md"), "survey_id")
-        .withColumn("prompt",
-          concat(lit("SUGGEST|"), col("skeleton_md"), lit("|"), col("dg"))),
-      "prompt", "raw", client)
-      .select(col("survey_id"), col("raw"))
-      .withColumn("suggestion", col("raw"))
-      .withColumn("score", scoreOf(col("raw")))
-      .drop("raw")
-
-  /** W2 argmax suggestion → MODIFY inference over the skeleton. */
-  private def modifySkeleton(
-      skeleton: DataFrame,
-      best: DataFrame,
-      client: InferenceClient): DataFrame =
-    InferOps.complete(
-      skeleton.join(best, "survey_id")
-        .withColumn("prompt", concat(
-          lit("MODIFY|"), col("skeleton_md"), lit("|"), col("best_suggestion"))),
-      "prompt", "new_md", client)
-      .select(col("survey_id"), col("title"), col("new_md").as("skeleton_md"))
-
-  /** Unfused reference form of the convolution loop — one sample window,
-    * MERGE pass and prune window per layer, each its own Spark stage. Kept
-    * only as the spec twin that pins [[refineSkeleton]]'s fused replay
-    * (V2PipelineSpec fusion invariance). */
-  private[graft] def refineSkeletonUnfused(
-      skeleton: DataFrame,
-      digests: DataFrame,
-      client: InferenceClient,
-      cfg: Config): DataFrame = {
-    val suggestions0 = suggestionPool(skeleton, digests, client)
-
-    // `pool` is referenced twice per layer (sample source + union arm), so
-    // an unchecked plan doubles per layer. Up to 2 layers that's a 4× plan
-    // over ~poolSize rows — cheaper to recompute than to pay a
-    // materialization job per layer; deeper loops checkpoint per layer.
-    val ckpt = cfg.convLayers > 2
-    var pool = if (ckpt) suggestions0.localCheckpoint() else suggestions0
-    var layer = 0
-    while (layer < cfg.convLayers) {
-      // W6: seeded weighted sampling without replacement (A-Res keys).
-      // The uniform draw is a HASH of (suggestion, layer, seed), not
-      // rand(seed): Spark's rand seeds per PARTITION, so a different
-      // cluster shape would sample differently — the hash form (same
-      // pattern as q18) is reproducible under any partitioning.
-      val wSample = Window.partitionBy("survey_id")
-        .orderBy(col("ares").desc, col("suggestion"))
-      val u = (pmod(xxhash64(col("suggestion"), lit(cfg.seed + layer)),
-        lit(1000000L)).cast("double") + 1.0) / 1000001.0
-      val sampled = pool
-        .withColumn("ares", pow(u, lit(1.0) / greatest(col("score"), lit(1))))
-        .withColumn("rn", row_number().over(wSample))
-        .filter(col("rn") <= cfg.kernelWidth)
-      // A6: kernel merge of the sampled suggestions
-      val merged = InferOps.complete(
-        sampled.groupBy("survey_id")
-          .agg(array_join(array_sort(collect_list(col("suggestion"))), "\n").as("joined"))
-          .withColumn("prompt", concat(lit("MERGE|"), col("joined"))),
-        "prompt", "raw", client)
-        .select(col("survey_id"), col("raw").as("suggestion"),
-          scoreOf(col("raw")).as("score"))
-      // pool ∪ merged, then W1 top-k prune per survey
-      val wRank = Window.partitionBy("survey_id")
-        .orderBy(col("score").desc, col("suggestion"))
-      pool = pool.unionByName(merged)
-        .withColumn("rn", row_number().over(wRank))
-        .filter(col("rn") <= cfg.poolSize)
-        .drop("rn")
-      if (ckpt) pool = pool.localCheckpoint()
-      layer += 1
-    }
-
-    // best suggestion (W2 argmax) modifies the skeleton
-    val best = pool.groupBy("survey_id")
-      .agg(max_by(col("suggestion"), struct(col("score"), col("suggestion")))
-        .as("best_suggestion"))
-    modifySkeleton(skeleton, best, client)
-  }
-
-  private def scoreOf(c: Column): Column =
-    coalesce(regexp_extract(c, "<SCORE>(\\d+)</SCORE>", 1).cast("int"), lit(0))
-
-  private val ScorePat = "<SCORE>(\\d+)</SCORE>".r
-
-  /** JVM twin of [[scoreOf]] for the fused task body (empty/absent → 0,
-    * matching regexp_extract's ''-to-null int cast + coalesce). */
-  private[graft] def scoreOfStr(s: String): Int =
-    ScorePat.findFirstMatchIn(s).map(_.group(1).toInt).getOrElse(0)
-
-  // ------------------------------------------------------------------ decode
-  /** Write leaves, assemble bottom-up, polish, re-key citations, stats. */
-  def decode(
-      skeleton: DataFrame,
-      digests: DataFrame,
-      papers: DataFrame,
-      client: InferenceClient): DataFrame = {
-    // referenced by three subplans below (leaves, internals, parents) —
-    // checkpoint so the parse+explode doesn't re-run per branch; lazy, so
-    // the first consuming action (assembleBottomUp's depth probe, whose
-    // agg touches every partition) materializes it instead of a dedicated
-    // job doing so
-    val sections = skeletonRows(skeleton).localCheckpoint(false)
-
-    // leaves = sections that are nobody's parent
-    val parents = sections.filter(size(col("path")) > 1)
-      .select(col("survey_id").as("p_survey"),
-        expr("slice(path, 1, size(path)-1)").as("p_path"))
-      .distinct()
-    val leaves = sections.join(parents,
-      col("p_survey") === col("survey_id") && col("p_path") === col("path"),
-      "left_anti")
-
-    // leaf writing (ORCHESTRA): digest material joined by section path,
-    // merged across groups
-    val material = digests
-      .groupBy("survey_id", "path")
-      .agg(array_join(array_sort(collect_list(col("description"))), "\n")
-        .as("material"))
-    // write then polish each section (the reference's per-section
-    // ORCHESTRA→POLISH sequence, orchestra_module.py:167-185)
-    val written0 = InferOps.complete(
-      leaves.join(material, Seq("survey_id", "path"), "left")
-        .withColumn("prompt", concat(
-          lit("WRITE|"), col("title"), lit("|"),
-          coalesce(col("material"), lit("")))),
-      "prompt", "content", client)
-      .select("survey_id", "path", "depth", "title", "content")
-    val written = InferOps.complete(
-      written0.withColumn("prompt", concat(lit("POLISH|"), col("content"))),
-      "prompt", "polished_c", client)
-      .drop("content")
-      .withColumnRenamed("polished_c", "content")
-
-    // internal nodes start with their heading; bottom-up assembly (D11)
-    val internals = sections.join(
-      leaves.select(col("survey_id").as("l_survey"), col("path").as("l_path")),
-      col("l_survey") === col("survey_id") && col("l_path") === col("path"),
-      "left_anti")
-      .select(col("survey_id"), col("path"), col("depth"), col("title"),
-        concat(lit("Summary of "), col("title"), lit(".")).as("content"))
-    val assembled = Trees.assembleBottomUp(
-      written.select("survey_id", "path", "depth", "content")
-        .unionByName(internals.select("survey_id", "path", "depth", "content")),
-      (own, kids) => own + "\n" + kids.mkString("\n"))
-
-    // full text per survey = preorder concat of root-level contents
-    val roots = assembled.filter(size(col("path")) === 1)
-      .groupBy("survey_id")
-      .agg(array_join(
-        expr("transform(array_sort(collect_list(struct(path, content))), p -> p.content)"),
-        "\n").as("draft"))
-
-    // sections were polished individually above; the root draft goes
-    // straight to citation re-key (J2) + A8 cite ratio
-    val polished = roots.select(col("survey_id"), col("draft").as("polished"))
-
-    val paperDim = papers.groupBy("survey_id")
-      .agg(
-        expr("transform(array_sort(collect_list(struct(paper_idx, bibkey))), p -> p.bibkey)")
-          .as("bibkeys"),
-        count(lit(1)).as("n_papers"))
-
-    val rekey = udf((text: String, bibkeys: Seq[String]) => {
-      val idx = bibkeys.zipWithIndex.toMap
-      val cited = scala.collection.mutable.Set.empty[String]
-      val out = "\\[([^\\[\\]]+)\\]".r.replaceAllIn(text, m => {
-        val keys = m.group(1).split(",").map(_.trim).filter(idx.contains)
-        keys.foreach(cited += _)
-        if (keys.isEmpty) m.matched
-        else keys.map(k => idx(k) + 1).sorted.mkString("[", ", ", "]")
-      })
-      (out, cited.size)
-    })
-
-    polished.join(paperDim, "survey_id")
-      .withColumn("rk", rekey(col("polished"), col("bibkeys")))
-      .select(
-        col("survey_id"),
-        col("rk._1").as("content"),
-        (col("rk._2").cast("double") / col("n_papers")).as("cite_ratio"),
-        col("n_papers"))
-  }
-
-  // ------------------------------------------------------------------ charts
-  /** Chart node (J7/T14; figure_module.py:22-87): ask for a figure spec,
-    * parse `Section:/Title:/```mermaid` fields, join it back onto the
-    * written content by normalized section title, inject the fenced block
-    * after the section heading. */
-  def injectFigures(
-      decoded: DataFrame, // survey_id, content, ...
-      skeleton: DataFrame,
-      client: InferenceClient): DataFrame = {
-    val specs = InferOps.complete(
-      skeleton.withColumn("prompt", concat(lit("FIGURE|"), col("skeleton_md"))),
-      "prompt", "fig_raw", client)
-      .select(col("survey_id"),
-        regexp_extract(col("fig_raw"), "Section: (.*)", 1).as("fig_section"),
-        regexp_extract(col("fig_raw"), "Title: (.*)", 1).as("fig_title"),
-        regexp_extract(col("fig_raw"), "(?s)```mermaid\\n(.*?)```", 1)
-          .as("fig_body"))
-      .filter(length(col("fig_section")) > 0)
-
-    val inject = udf((content: String, section: String, title: String,
-        body: String) => {
-      if (section == null || section.isEmpty || body == null) content
-      else {
-        val norm = (s: String) => s.toLowerCase.replaceAll("[^a-z0-9]+", " ").trim
-        val lines = content.split("\n", -1)
-        val idx = lines.indexWhere(l => norm(l).contains(norm(section)))
-        if (idx < 0) content
-        else {
-          val fig = s"\n**$title**\n```mermaid\n$body```"
-          (lines.take(idx + 1) :+ fig).mkString("\n") +
-            (if (idx + 1 < lines.length)
-              "\n" + lines.drop(idx + 1).mkString("\n") else "")
-        }
-      }
-    })
-    decoded.join(specs, Seq("survey_id"), "left")
-      .withColumn("content",
-        when(col("fig_section").isNotNull,
-          inject(col("content"), col("fig_section"), col("fig_title"),
-            col("fig_body"))).otherwise(col("content")))
-      .drop("fig_section", "fig_title", "fig_body")
+  /** One survey inside its task: papers in input order, and the
+    * skeleton and digests the stages replace as they go. */
+  private final class Survey(val id: Any, val title: String, val papers: Seq[Paper]) {
+    var skeleton: String = _
+    var digests: Seq[Digest] = Nil
   }
 
   // --------------------------------------------------------------------- run
-  /** Full pipeline: encode → group → skeleton → [digest → refine]×block →
-    * digest → decode. Returns (survey_id, content, cite_ratio, n_papers,
-    * skeleton_md). */
+  /** Full pipeline: encode → group → skeleton → digest → [refine →
+    * re-digest]×block → decode. Returns (survey_id, content, cite_ratio,
+    * n_papers, skeleton_md). */
   def run(
       surveys: DataFrame,
       client: InferenceClient = new MockInference,
       cfg: Config = Config()): DataFrame = {
-    // Stage boundaries checkpoint LAZILY (VERDICT r8 #3): each frame still
-    // materializes exactly once and every downstream stage reads its cached
-    // blocks, but materialization folds into the first consuming action's
-    // job (digest's J1 check picks up papers + skeleton + merged in one
-    // chain) instead of each boundary spawning its own eager job — p02's
-    // cost is per-stage job scheduling, not data volume, so the fusion is
-    // the lever that scales. The stage functions stay independently
-    // callable; only the composition's materialization points changed.
-    val papers   = group(encode(surveys), cfg).localCheckpoint(false)
-    var skeleton = skeletonInit(papers, client).localCheckpoint(false)
-
-    var block = 0
-    // digest() already returns a checkpointed frame (its J1 conformance
-    // check is an action over it) — re-checkpointing here would materialize
-    // the whole digest set a second time per block
-    var digests = digest(papers, skeleton, client)
-    while (block < cfg.blockCount) { // D5 cycle, driver-bounded
-      val refined = refineSkeleton(skeleton, digests, client, cfg)
-        .localCheckpoint(false) // materialized by changed.count() below
-      // Stage fusion (VERDICT r03 #4): digests are outline-SHAPED — their
-      // section rows key by the skeleton's heading structure (exactly what
-      // the J1 conformance check pins). A refinement that only edits prose
-      // leaves every digest row valid, so re-digest only surveys whose
-      // HEADING structure changed; the rest keep their rows. Per-survey
-      // granularity: one changed survey re-digests alone, not the batch.
-      val changed = refined
-        .select(col("survey_id"), structuralHash(col("skeleton_md")).as("nh"))
-        .join(broadcast(skeleton
-          .select(col("survey_id"), structuralHash(col("skeleton_md")).as("oh"))),
-          "survey_id")
-        .filter(col("nh") =!= col("oh"))
-        .select("survey_id")
-      skeleton = refined
-      if (changed.count() > 0) {
-        val papersChanged =
-          papers.join(broadcast(changed), Seq("survey_id"), "left_semi")
-        digests = digest(papersChanged, skeleton, client)
-          .unionByName(
-            digests.join(broadcast(changed), Seq("survey_id"), "left_anti"))
-          .localCheckpoint(false) // materialized by the next consumer
-      }
-      block += 1
-    }
-
-    injectFigures(
-      decode(skeleton, digests, papers, client), skeleton, client)
-      .join(skeleton.select("survey_id", "skeleton_md"), "survey_id")
+    val encoded = encode(surveys)
+    val outSchema = StructType(Seq(
+      encoded.schema("survey_id"),
+      StructField("content", StringType),
+      StructField("cite_ratio", DoubleType),
+      StructField("n_papers", LongType, nullable = false),
+      StructField("skeleton_md", StringType)))
+    encoded.mapPartitions { rows =>
+      val batch = rows.flatMap { r =>
+        // F2: drop empty papers, then paper-less surveys
+        val kept = Option(r.getSeq[Row](2)).getOrElse(Nil)
+          .filter(p => p.getString(1) != null && p.getString(1).nonEmpty)
+        val groups = roundRobin(kept.map(_.getString(2)), cfg.nGroups)
+        val papers = kept.lazyZip(groups).map((p, g) =>
+          Paper(p.getString(0), p.getString(1), p.getString(2), g))
+        if (papers.isEmpty) None else Some(new Survey(r.get(0), r.getString(1), papers))
+      }.toVector
+      surveyTask(batch, client, cfg).iterator
+    }(Encoders.row(outSchema))
   }
 
-  /** md5 of a skeleton's heading lines only — the section structure that
-    * digests key by (J1). Prose refinements below the headings hash equal. */
-  private def structuralHash(md: Column): Column =
-    md5(array_join(
-      filter(split(md, "\n"), l => l.startsWith("#")), "\n").cast("binary"))
+  /** Every stage for one task's surveys, in lockstep. */
+  private def surveyTask(
+      all: Vector[Survey],
+      client: InferenceClient,
+      cfg: Config): Seq[Row] = {
+    // A5: one outline per survey over its sorted paper titles
+    val outlines = InferOps.completeAll(all.map(s =>
+      s"OUTLINE|${s.title}|" +
+        s.papers.flatMap(p => Option(p.title)).sorted(Utf8).mkString(", ")), client)
+    all.lazyZip(outlines).foreach(_.skeleton = _)
+    digest(all, client)
+    var open = all
+    for (_ <- 0 until cfg.blockCount) open = refine(open, client, cfg)
+    decode(open, client)
+  }
+
+  /** Per-paper digest shaped by the skeleton, merged per group by section
+    * (A4: descriptions in bibkey order), then shape-checked (J1). */
+  private def digest(ss: Seq[Survey], client: InferenceClient): Unit = {
+    val replies = InferOps.completeAll(ss.flatMap(s => s.papers.map(p =>
+      s"DIGEST|${s.skeleton}|${p.bibkey}|${p.txt}")), client).iterator
+    ss.foreach { s =>
+      val sections = s.papers.flatMap { p =>
+        Trees.parseOutline("x", replies.next()).map(r => (p, r)) }
+      s.digests = sections
+        .groupBy { case (p, r) => (p.group, r.path, r.depth, r.title) }
+        .toSeq.map { case ((g, path, _, _), rs) =>
+          Digest(g, path, rs.map { case (p, r) => (p.bibkey, r.description) }
+            .sorted(Ordering.Tuple2(Utf8, Utf8)).map(_._2).mkString("\n---\n"))
+        }
+      // J1 contract: every group's digest tree mirrors the skeleton
+      val paths = Trees.parseOutline("x", s.skeleton).map(_.path).toSet
+      val bad = s.digests.count(d => !paths(d.path))
+      if (bad > 0)
+        throw new Trees.StructureNotCorrespondingException(
+          s"$bad digest section rows have no skeleton counterpart")
+    }
+  }
+
+  // ------------------------------------------------------------- refine loop
+  /** One hidden-stage block: one suggestion per digest group (feedback
+    * neurons) → [[convolve]] → the best suggestion modifies the skeleton
+    * (D5 loop body). Digests are outline-SHAPED — their sections key by the
+    * skeleton's headings (J1) — so only surveys whose heading lines changed
+    * re-digest. A survey without digest sections has no suggestion pool
+    * and leaves the run. Returns the surveys still open. */
+  private def refine(
+      ss: Vector[Survey],
+      client: InferenceClient,
+      cfg: Config): Vector[Survey] = {
+    val prompts = ss.map(s => s.digests.groupBy(_.group).toSeq.sortBy(_._1)
+      .map { case (_, ds) =>
+        s"SUGGEST|${s.skeleton}|" + ds.map(_.description).sorted(Utf8).mkString("\n")
+      })
+    val replies = InferOps.completeAll(prompts.flatten, client).iterator
+    val (live, pools) = ss.lazyZip(prompts)
+      .map((s, ps) => s -> ps.map { _ => val r = replies.next(); r -> scoreOfStr(r) })
+      .filter(_._2.nonEmpty).unzip
+    val best = convolve(pools, client, cfg)
+    val modified = InferOps.completeAll(
+      live.lazyZip(best).map((s, b) => s"MODIFY|${s.skeleton}|$b"), client)
+    val changed = live.lazyZip(modified).flatMap { (s, md) =>
+      val moved = headings(md) != headings(s.skeleton)
+      s.skeleton = md
+      if (moved) Some(s) else None
+    }
+    digest(changed, client)
+    live
+  }
+
+  /** A skeleton's heading lines: the section structure digests key by. */
+  private def headings(md: String): Seq[String] =
+    md.split("\n", -1).filter(_.startsWith("#")).toSeq
+
+  /** The convolution layers of each survey's suggestion pool, in lockstep:
+    * per layer, A-Res sample `kernelWidth` suggestions (W6), one MERGE call
+    * per survey through [[InferOps.completeAll]] (A6), keep the top
+    * `poolSize` (W1); returns each pool's best suggestion (W2). The uniform
+    * draw is a hash of (suggestion, layer, seed) — xxhash64/pmod via
+    * Spark's own [[XxHash64Function]] (seed 42, then the string hash seeds
+    * the long hash) — not `rand`, so any cluster shape samples alike;
+    * strings compare as Spark's do ([[Utf8]]). */
+  private[graft] def convolve(
+      pools0: Seq[Seq[(String, Int)]],
+      client: InferenceClient,
+      cfg: Config): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+    val byWeight = Ordering.by[(String, Double), Double](_._2).reverse.orElseBy(_._1)(Utf8)
+    val byScore = Ordering.by[(String, Int), Int](_._2).reverse.orElseBy(_._1)(Utf8)
+    val argmax = Ordering.by[(String, Int), Int](_._2).orElseBy(_._1)(Utf8)
+    var pools = pools0
+    for (layer <- 0 until cfg.convLayers) {
+      val prompts = pools.map { pool =>
+        val sampled = pool.map { case (s, sc) =>
+          val h1 = XxHash64Function.hash(UTF8String.fromString(s), StringType, 42L)
+          val h2 = XxHash64Function.hash(cfg.seed + layer, LongType, h1)
+          val u  = ((((h2 % 1000000L) + 1000000L) % 1000000L).toDouble + 1.0) / 1000001.0
+          (s, math.pow(u, 1.0 / math.max(sc, 1)))
+        }.sorted(byWeight).take(cfg.kernelWidth)
+        "MERGE|" + sampled.map(_._1).sorted(Utf8).mkString("\n")
+      }
+      val replies = InferOps.completeAll(prompts, client)
+      pools = pools.lazyZip(replies).map((pool, reply) =>
+        (pool :+ (reply -> scoreOfStr(reply))).sorted(byScore).take(cfg.poolSize))
+    }
+    pools.map(_.max(argmax)._1)
+  }
+
+  private val ScorePat = "<SCORE>(\\d+)</SCORE>".r
+
+  /** A suggestion's score: its first `<SCORE>n</SCORE>`, else 0. */
+  private[graft] def scoreOfStr(s: String): Int =
+    ScorePat.findFirstMatchIn(s).map(_.group(1).toInt).getOrElse(0)
+
+  // ------------------------------------------------------------------ decode
+  /** Write and polish the leaves (the reference's per-section
+    * ORCHESTRA→POLISH sequence, orchestra_module.py:167-185), assemble
+    * bottom-up (D11), re-key citations (J2), cite ratio (A8), figures (J7).
+    * A survey whose skeleton has no top-level section has no draft and
+    * yields no row. */
+  private def decode(ss: Vector[Survey], client: InferenceClient): Seq[Row] = {
+    val trees = ss.map { s =>
+      val sections = Trees.parseOutline("x", s.skeleton)
+      val parents = sections.collect { case r if r.path.size > 1 => r.path.init }.toSet
+      sections.partition(r => !parents(r.path)) // (leaves, internal nodes)
+    }
+    val writes = ss.lazyZip(trees).map { case (s, (leaves, _)) =>
+      val material = s.digests.groupBy(_.path).map { case (path, ds) =>
+        path -> ds.map(_.description).sorted(Utf8).mkString("\n") }
+      leaves.map(l => s"WRITE|${l.title}|${material.getOrElse(l.path, "")}")
+    }
+    // WRITE and FIGURE are independent: one call
+    val (written, figures) = InferOps.completeAll(
+      writes.flatten ++ ss.map("FIGURE|" + _.skeleton), client)
+      .splitAt(writes.map(_.size).sum)
+    val polished = InferOps.completeAll(written.map("POLISH|" + _), client).iterator
+    ss.indices.flatMap { i =>
+      val (leaves, internals) = trees(i)
+      val assembled = Trees.assembleBottomUp(
+        leaves.map(_.path -> polished.next()) ++
+          internals.map(r => r.path -> s"Summary of ${r.title}."),
+        (own, kids) => own + "\n" + kids.mkString("\n"))
+      val roots = assembled.filter(_._1.size == 1).toSeq.sortBy(_._1)(Trees.PathOrder)
+      val s = ss(i)
+      if (roots.isEmpty) None
+      else {
+        val (text, cited) = rekey(roots.map(_._2).mkString("\n"), s.papers.map(_.bibkey))
+        Some(Row(s.id, injectFigure(text, figures(i)),
+          cited.toDouble / s.papers.size, s.papers.size.toLong, s.skeleton))
+      }
+    }
+  }
+
+  /** J2: `[bibkey, ...]` → `[i, ...]`, `i` the paper's 1-based position;
+    * also returns how many distinct papers were cited (A8). */
+  private def rekey(text: String, bibkeys: Seq[String]): (String, Int) = {
+    val idx = bibkeys.zipWithIndex.toMap
+    val cited = scala.collection.mutable.Set.empty[String]
+    val out = "\\[([^\\[\\]]+)\\]".r.replaceAllIn(text, m => {
+      val keys = m.group(1).split(",").map(_.trim).filter(idx.contains)
+      keys.foreach(cited += _)
+      if (keys.isEmpty) m.matched
+      else keys.map(k => idx(k) + 1).sorted.mkString("[", ", ", "]")
+    })
+    (out, cited.size)
+  }
+
+  private val FigSection = "Section: (.*)".r
+  private val FigTitle   = "Title: (.*)".r
+  private val FigBody    = "(?s)```mermaid\\n(.*?)```".r
+
+  /** Chart node (J7/T14; figure_module.py:22-87): parse the figure spec's
+    * `Section:/Title:/```mermaid` fields and inject the fenced block after
+    * the first line whose normalized text contains the section title. */
+  private def injectFigure(content: String, spec: String): String = {
+    def field(re: scala.util.matching.Regex): String =
+      Option(spec).flatMap(re.findFirstMatchIn).map(_.group(1)).getOrElse("")
+    val section = field(FigSection)
+    if (section.isEmpty) content
+    else {
+      val norm = (s: String) => s.toLowerCase.replaceAll("[^a-z0-9]+", " ").trim
+      val lines = content.split("\n", -1)
+      val idx = lines.indexWhere(l => norm(l).contains(norm(section)))
+      if (idx < 0) content
+      else {
+        val fig = s"\n**${field(FigTitle)}**\n```mermaid\n${field(FigBody)}```"
+        (lines.take(idx + 1) :+ fig).mkString("\n") +
+          (if (idx + 1 < lines.length)
+            "\n" + lines.drop(idx + 1).mkString("\n") else "")
+      }
+    }
+  }
 
   /** S8 (watch_data.py:7-21): per-survey markdown exports — one directory
     * per survey with content.md and skeleton.md. Partition-parallel: each

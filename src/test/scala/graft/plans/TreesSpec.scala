@@ -1,9 +1,8 @@
 package graft.plans
 
-import graft.SparkTestBase
-import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
 
-class TreesSpec extends SparkTestBase {
+class TreesSpec extends AnyFunSuite {
   import Trees._
 
   private val outline =
@@ -32,32 +31,10 @@ class TreesSpec extends SparkTestBase {
     assert(parseOutline("s1", rendered) == rows)
   }
 
-  test("structuralJoin matches mirrored trees (J1)") {
-    val sk = toDF(spark, parseOutline("s1", outline))
-    val dg = toDF(spark, parseOutline("s1", outline)
-      .map(r => r.copy(description = s"digest of ${r.title}")))
-    val joined = structuralJoin(sk, dg)
-    assert(joined.count() == 7)
-    assert(joined.columns.contains("dg_description"))
-  }
-
-  test("structuralJoin raises on shape mismatch (digest.py:143-146)") {
-    val sk = toDF(spark, parseOutline("s1", outline))
-    val dg = toDF(spark, parseOutline("s1", outline).drop(1))
-    intercept[StructureNotCorrespondingException] {
-      structuralJoin(sk, dg)
-    }
-  }
-
   test("assembleBottomUp composes children into parents level by level (D11)") {
-    import spark.implicits._
-    val sections = parseOutline("s1", outline)
-      .map(r => (r.survey_id, r.path, r.depth, s"<${r.title}>"))
-      .toDF("survey_id", "path", "depth", "content")
-    val out = assembleBottomUp(sections,
+    val byPath = assembleBottomUp(
+      parseOutline("s1", outline).map(r => r.path -> s"<${r.title}>"),
       (own, kids) => own + kids.mkString("(", "+", ")"))
-    val byPath = out.collect()
-      .map(r => r.getSeq[Int](1) -> r.getString(3)).toMap
     assert(byPath(Seq(2)) == "<Methods>(<Pipeline>(<Details>))")
     assert(byPath(Seq(1)) == "<Introduction>(<Background>+<Motivation>)")
     assert(byPath(Seq(3)) == "<Conclusion>")
