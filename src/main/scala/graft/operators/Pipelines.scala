@@ -53,7 +53,9 @@ object Pipelines {
         V1Pipeline.run(docs, new MockInference,
           V1Pipeline.Config(chunkBudget = 32, collapseBudget = 400,
             binBudget = 200))
-          .orderBy("doc_id")
+          // one sorted partition: a range-partitioned sort would sample
+          // its input first, running every document's inference twice
+          .repartition(1).sortWithinPartitions("doc_id")
       }),
 
     // V2 survey pipeline end-to-end: one survey per document source (papers

@@ -2,9 +2,10 @@ package graft.pipeline
 
 import graft.functions.TextFunctions
 import graft.infer.{InferOps, InferenceClient, MockInference}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import java.util.Locale
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, StringType, StructField, StructType}
 
 /** The V1 long-document QA pipeline re-expressed as a Spark plan
   * (SURVEY.md §3.1; reference /root/reference/LLMxMapReduce_V1/pipeline.py:30):
@@ -13,17 +14,15 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * Input: one row per (doc_id, question, text). Output: (doc_id, answer).
   *
-  * Spark shape: chunking is a generator expression (`posexplode` over a
-  * chunker UDF); map is an embarrassingly-parallel batched inference pass
-  * (no shuffle); collapse and reduce are FUSED into one per-document
-  * operator: one `groupBy(doc_id, question)` gathers each document's kept
-  * records, and one `mapPartitions` task runs every collapse round of its
-  * documents and their REDUCE calls locally (the reference's `mr_collapse`
-  * loops over one document until it fits — a per-document partial→final
-  * aggregation, not a driver loop). A request is therefore two Spark jobs
-  * (the map stage and the result stage), whatever the number of rounds.
-  * At 100 TB every stage scales with partition count: the one shuffle keys
-  * on the document, and per-task state is one partition's documents.
+  * The document is the unit of work, as in the reference: one
+  * `mapPartitions` task runs every step for the documents of its
+  * partition, so a request is one Spark job with no shuffle whatever the
+  * number of collapse rounds. Scale-out is by document across tasks; each
+  * step's prompts go through one [[InferOps.completeAll]] call, whose pool
+  * gives the inference concurrency within a task. Each input row is
+  * answered on its own (two rows with the same (doc_id, question) are two
+  * answers); a document with empty or null text, or whose every MAP reply
+  * the filter drops, yields no row.
   */
 object V1Pipeline {
 
@@ -42,50 +41,89 @@ object V1Pipeline {
       client: InferenceClient = new MockInference,
       cfg: Config = Config(),
       auditDir: Option[String] = None): DataFrame = {
-    val spark = docs.sparkSession
-    registerChunker(spark, cfg.chunkBudget, cfg.chunkOverlap)
+    val in = docs.select("doc_id", "question", "text")
+    val schema = StructType(Seq(in.schema("doc_id"), StructField("question", StringType),
+      StructField("replies", ArrayType(StringType)), StructField("kept", BooleanType, false),
+      StructField("answer", StringType)))
+    val perDoc = in.mapPartitions(answerTask(_, client, cfg, auditDir.nonEmpty))(
+      Encoders.row(schema))
     // S4: per-stage input/output audit log (cf. LLMxMapReduce_V1/
-    // utils.py:30-46) — side-output JSONL per stage when enabled
-    def audit(stage: String, df: DataFrame): DataFrame = {
-      auditDir.foreach(dir =>
-        df.write.mode("overwrite").json(s"$dir/$stage"))
-      df
+    // utils.py:30-46), written from one eager checkpoint of the run, which
+    // the returned answers read too: each prompt is sent once
+    val done = if (auditDir.isEmpty) perDoc else perDoc.localCheckpoint()
+    val answers = done.filter(col("kept")).select("doc_id", "answer")
+    auditDir.foreach { dir =>
+      def write(stage: String, df: DataFrame): Unit =
+        df.write.mode("overwrite").json(s"$dir/$stage")
+      val mapped = done.select(col("doc_id"), col("question"),
+        posexplode(col("replies")).as(Seq("chunk_idx", "response")))
+      def field(name: String, re: String) = regexp_extract(col("response"), s"$name: ($re)", 1)
+      write("map", mapped)
+      // the structured-information protocol fields (qa.yaml:19-23)
+      write("filter", mapped.filter(udf(keeps _).apply(col("response"), col("question")))
+        .withColumn("extracted", field("Extracted Information", ".*"))
+        .withColumn("answer", field("Answer", ".*"))
+        .withColumn("confidence", field("Confidence Score", "\\d+").cast("int")))
+      write("reduce", answers)
     }
-
-    // ---- chunk (T2/T3): generator expression, one row per chunk
-    val chunks = docs.select(
-      col("doc_id"), col("question"),
-      posexplode(expr("graft_chunk(text)")).as(Seq("chunk_idx", "chunk")))
-
-    // ---- map (A1): batched inference, no shuffle
-    val mapped = audit("map", InferOps.complete(
-      chunks.withColumn("prompt",
-        concat(lit("MAP|"), col("question"), lit("|"), col("chunk"))),
-      "prompt", "response", client)
-      .select(col("doc_id"), col("question"), col("chunk_idx"),
-        col("response")))
-
-    // ---- filter (F1): drop [NO INFORMATION] unless the question asks for it
-    val parsed = withProtocolFields(mapped)
-    val kept = audit("filter", parsed.filter(
-      !upper(col("answer")).contains(NoInfo) ||
-        upper(col("question")).contains(NoInfo)))
-
-    // ---- collapse + reduce (A2/W7/A3), fused per document: one shuffle
-    // gathers each document's kept records, then each task runs the
-    // collapse rounds and REDUCE calls of its documents
-    val grouped = kept
-      .groupBy("doc_id", "question")
-      .agg(collect_list(struct(col("chunk_idx"), col("response"))).as("recs"))
-    val outSchema = StructType(Seq(
-      grouped.schema("doc_id"), StructField("answer", StringType)))
-    audit("reduce", grouped.mapPartitions { rows =>
-      val docs = rows.map(r => (r.get(0), r.getString(1),
-        r.getSeq[Row](2).sortBy(_.getInt(0)).map(_.getString(1)))).toVector
-      collapseReduce(docs.map(d => (d._2, d._3)), client, cfg)
-        .lazyZip(docs).map((answer, d) => Row(d._1, answer)).iterator
-    }(Encoders.row(outSchema)))
+    answers
   }
+
+  /** The task body, over windows of documents of at most `BatchSize ×
+    * MaxInflight` MAP prompts (the window of [[InferOps.complete]]): map
+    * (A1), filter (F1), then [[collapseReduce]] over the documents that
+    * kept a record (A2/W7/A3). Per document one row: its MAP replies in
+    * chunk order (for the audit log only), whether it kept any, its answer. */
+  private def answerTask(rows: Iterator[Row], client: InferenceClient,
+      cfg: Config, withReplies: Boolean): Iterator[Row] = {
+    // T2/T3: the token-budget chunker, with `chunkOverlap` tokens of each
+    // chunk's predecessor repeated (Generator.py:234-299); null text is ""
+    val docs = rows.map { r =>
+      val t = Option(r.getString(2)).getOrElse("")
+      (r.get(0), r.getString(1), if (cfg.chunkOverlap > 0)
+        TextFunctions.chunkTextOverlap(t, cfg.chunkBudget, cfg.chunkOverlap)
+        else TextFunctions.chunkText(t, cfg.chunkBudget))
+    }.buffered
+    val cap = InferOps.BatchSize * InferOps.MaxInflight
+    Iterator.continually(docs).takeWhile(_.hasNext).flatMap { _ =>
+      var w = Vector(docs.next())
+      var n = w.head._3.size
+      while (docs.hasNext && n + docs.head._3.size <= cap) {
+        n += docs.head._3.size; w :+= docs.next()
+      }
+      // a null question makes a null prompt (SQL `concat`), which fails
+      // in the client rather than asking about "null"
+      val replies = InferOps.completeAll(w.flatMap { case (_, q, cs) =>
+        cs.map(c => if (q == null) null else s"MAP|$q|$c") }, client).iterator
+      val mapped = w.map { case (id, q, cs) =>
+        val rs = cs.map(_ => replies.next())
+        (id, q, rs, rs.filter(keeps(_, q)))
+      }
+      val open = mapped.filter(_._4.nonEmpty)
+      val answers = collapseReduce(open.map(d => (d._2, d._4)), client, cfg).iterator
+      mapped.map { case (id, q, rs, kept) =>
+        Row(id, q, if (withReplies) rs else null, kept.nonEmpty,
+          if (kept.nonEmpty) answers.next() else null)
+      }
+    }
+  }
+
+  private val AnswerField = "Answer: (.*)".r
+
+  /** F1: keep a MAP reply unless its `Answer:` field names [[NoInfo]], or
+    * when the question does; the Spark predicate `!upper(regexp_extract(
+    * response, "Answer: (.*)", 1)).contains(NoInfo) || upper(question)
+    * .contains(NoInfo)` under three-valued logic. */
+  private[graft] def keeps(response: String, question: String): Boolean = {
+    def namesNoInfo(s: String) = s != null && upper(s).contains(NoInfo)
+    response != null && !namesNoInfo(AnswerField.findFirstMatchIn(response).fold("")(_.group(1))) ||
+      namesNoInfo(question)
+  }
+
+  /** Spark's `upper`: ASCII-only strings map locale-free, any other string
+    * through the default locale's full case mapping ('ı' → 'I', 'ß' → "SS"). */
+  private def upper(s: String): String =
+    if (s.forall(_ < 0x80)) s.toUpperCase(Locale.ROOT) else s.toUpperCase(Locale.getDefault)
 
   private val Sep = "\n---\n"
 
@@ -128,30 +166,4 @@ object V1Pipeline {
   /** A record's bin length: `ceil(length(response) / TokenRatio)`. */
   private def tokens(s: String): Int =
     math.ceil(codePoints(s) / TextFunctions.TokenRatio).toInt
-
-  /** Parse the structured-information protocol fields out of a response
-    * (Extracted Information / Answer / Confidence Score — qa.yaml:19-23). */
-  def withProtocolFields(df: DataFrame): DataFrame =
-    df.withColumn("extracted",
-        regexp_extract(col("response"), "Extracted Information: (.*)", 1))
-      .withColumn("answer",
-        regexp_extract(col("response"), "Answer: (.*)", 1))
-      .withColumn("confidence",
-        regexp_extract(col("response"), "Confidence Score: (\\d+)", 1)
-          .cast("int"))
-
-  /** Register the chunker as a SQL-callable UDF (array generator). With
-    * `overlap` > 0 each chunk after the first repeats the last `overlap`
-    * tokens of its predecessor (T3 — the reference's separator-aware packing
-    * with overlap, Generator.py:234-299), giving the map stage cross-chunk
-    * context at the cost of `overlap/budget` duplicated tokens. */
-  private def registerChunker(
-      spark: SparkSession, budget: Int, overlap: Int = 0): Unit =
-    spark.udf.register("graft_chunk",
-      (text: String) => {
-        val t = Option(text).getOrElse("")
-        if (overlap > 0)
-          graft.functions.TextFunctions.chunkTextOverlap(t, budget, overlap)
-        else graft.functions.TextFunctions.chunkText(t, budget)
-      })
 }

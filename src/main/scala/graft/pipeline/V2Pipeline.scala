@@ -39,7 +39,6 @@ object V2Pipeline {
       convLayers: Int = 2,
       kernelWidth: Int = 2,
       poolSize: Int = 4,      // result_num
-      topK: Int = 2,
       seed: Long = 42L)
 
   // ------------------------------------------------------------------ encode
