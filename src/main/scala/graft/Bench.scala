@@ -48,30 +48,18 @@ object Bench {
     val spark = GraftSession.builder("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // session warm-up: parquet footer reads + scheduler spin-up. Guard EACH
-    // table: one unreadable table must cost its queries `err` entries in the
-    // timed loop below, not the round's entire bench (r6: an events schema
-    // change here killed the run before any query was timed).
+    // session warm-up: scheduler spin-up + parquet footer reads
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.names.foreach { t =>
-      try {
-        val df = if (t == "events") Tables.events(spark, sfDir)
-                 else Tables.load(spark, sfDir, t)
-        df.count()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] warm-up for table $t failed: ${e.getMessage}")
-      }
-    }
+    Warm.tables(spark, sfDir, tag = "bench")
 
     // Untimed build of every PERSISTED ARTIFACT a deployment maintains next
     // to the corpus rather than rebuilding per query — re-run before every
     // timed pass (the pass boundary clears the session memos), so each pass
     // times query OPERATORS against warm indexes and never the bootstrap.
     // The artifact list (and the rationale for what is deliberately NOT
-    // warmed) lives in graft.Warm, shared with ScaleBench so the two
-    // benches can never drift on what counts as a warm index.
-    def warmIndexes(): Unit = Warm.indexes(spark, sfDir, tag = "bench")
-    warmIndexes()
+    // warmed) lives in graft.Warm, shared with graft.tools.Profile so the
+    // two can never drift on what counts as a warm index.
+    Warm.indexes(spark, sfDir, tag = "bench")
 
     // Key the stdout map by each query's unique id prefix ("d01", "q15b",
     // "q26s", ...): the driver captures only the LAST ~2 KB of stdout, and
@@ -162,14 +150,10 @@ object Bench {
     // each query reports its best pass. Rationale (VERDICT r7 #1): this box
     // is shared — identical code drew 74 s clean vs 177 s contended in
     // round 7, and a single pass makes one contended draw the round's
-    // scoreboard. Passes, not per-query reps, because many queries memoize
-    // their whole result (the persisted-index architecture): a second
-    // back-to-back rep of such a query would "run" as a checkpoint read and
-    // its real execution cost would vanish from the published total. The
-    // pass boundary therefore CLEARS the session memos and re-runs the
-    // untimed index warm-up, so every pass times real query execution
-    // against warm indexes — same conditions, independent draws. The pass
-    // count is published in the JSON line as "reps".
+    // scoreboard. The pass boundary (Warm.newPass) clears the session memos
+    // and re-runs the untimed index warm-up, so every pass times real query
+    // execution against warm indexes — same conditions, independent draws.
+    // The pass count is published in the JSON line as "reps".
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     // per-pass totals, published as "pass_sec":[a,b] (VERDICT r9 #5): this
@@ -231,12 +215,7 @@ object Bench {
 
     var pass = 0
     while (pass < passes) {
-      if (pass > 0) {
-        operators.ResultMemo.clearSession(spark)
-        spark.sqlContext.clearCache()
-        System.gc()
-        warmIndexes()
-      }
+      if (pass > 0) Warm.newPass(spark, sfDir, tag = "bench")
       // Probes are guarded PER CALL, not just at construction (ADVICE r13):
       // a transient mid-run failure (tmp dir reaped, contention-induced job
       // failure) must cost that pass's probe value — published as 0, which

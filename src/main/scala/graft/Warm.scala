@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The untimed build of every PERSISTED ARTIFACT a deployment maintains
-  * next to the corpus rather than rebuilding per query — shared by the
-  * bench and the scale bench so the two can never drift apart on what
-  * counts as a warm index (the r5 regression class: a silently missing
-  * warm is indistinguishable from a slow engine):
+/** The untimed warm-ups every timed run shares — the table scans before
+  * the first pass, and at each pass boundary the build of every PERSISTED
+  * ARTIFACT a deployment maintains next to the corpus rather than
+  * rebuilding per query. Bench and graft.tools.Profile both call these,
+  * so the two can never drift apart on what counts as a warm index (the
+  * r5 regression class: a silently missing warm is indistinguishable from
+  * a slow engine):
   *
   * - bucketed-lake layout (q35 times the Exchange-free join);
   * - media payload synthesis (the media lake exists at scale; m02 times
@@ -30,12 +32,13 @@ import org.apache.spark.sql.SparkSession
 object Warm {
 
   /** One warm-up step: the artifact's label, the queries that READ it, and
-    * its build. A SUBSET bench (ScaleBench) only builds the artifacts its
-    * timed subset consumes. Generous supersets are safe (an unused warm
-    * costs untimed time, never honesty); UNDER-listing a consumer is the r5
-    * regression class (its timed run silently pays the bootstrap), so when
-    * adding a query that reads a persisted artifact, add it here. The full
-    * bench passes `only` empty and builds everything. */
+    * its build. A SUBSET run (Profile over a query list) only builds the
+    * artifacts its timed subset consumes. Generous supersets are safe (an
+    * unused warm costs untimed time, never honesty); UNDER-listing a
+    * consumer is the r5 regression class (its timed run silently pays the
+    * bootstrap), so when adding a query that reads a persisted artifact,
+    * add it here. The full bench passes `only` empty and builds
+    * everything. */
   private[graft] final case class Step(
       label: String, consumers: Set[String],
       build: (SparkSession, String) => Any)
@@ -85,4 +88,34 @@ object Warm {
             s"[$tag] index warm-up '${st.label}' failed: ${e.getMessage}")
         }
       }
+
+  /** Parquet footer reads for every table, so the first timed query does
+    * not pay them. Each table is guarded: one unreadable table must cost
+    * its queries `err` entries in the timed loop, not the whole run (r6:
+    * an events schema change here killed the bench before any query was
+    * timed). */
+  def tables(spark: SparkSession, sfDir: String, tag: String): Unit =
+    Tables.names.foreach { t =>
+      try {
+        val df = if (t == "events") Tables.events(spark, sfDir)
+                 else Tables.load(spark, sfDir, t)
+        df.count()
+      } catch { case e: Throwable =>
+        System.err.println(s"[$tag] warm-up for table $t failed: ${e.getMessage}")
+      }
+    }
+
+  /** A pass boundary: drop the session's memos and cached blocks, collect
+    * the garbage, and rebuild the [[indexes]]. Passes, not back-to-back
+    * per-query reps, because many queries memoize their whole result: a
+    * second rep of such a query would "run" as a checkpoint read and its
+    * real execution cost would vanish. After a boundary every query times
+    * real execution against warm indexes. */
+  def newPass(spark: SparkSession, sfDir: String, tag: String,
+      only: Set[String] = Set.empty): Unit = {
+    operators.ResultMemo.clearSession(spark)
+    spark.sqlContext.clearCache()
+    System.gc()
+    indexes(spark, sfDir, tag, only)
+  }
 }

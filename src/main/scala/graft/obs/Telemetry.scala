@@ -66,6 +66,7 @@ final class Telemetry private (private val sc: SparkContext) {
   private final class Window {
     val jobs, stages = mutable.ArrayBuffer.empty[Span]
     val actions = mutable.ArrayBuffer.empty[ActionRecord]
+    val executions = mutable.ArrayBuffer.empty[QueryExecution]
     val streams = mutable.LinkedHashMap.empty[UUID, StreamRecord]
     var tasks, shuffleRead, shuffleWrite, spill, gcMs, peakMem, input = 0L
 
@@ -119,7 +120,10 @@ final class Telemetry private (private val sc: SparkContext) {
     override def onSuccess(funcName: String, qe: QueryExecution,
         durationNs: Long): Unit = {
       val rows = Telemetry.rootRows(qe.executedPlan)
-      each(_.actions += ActionRecord(funcName, durationNs, rows))
+      each { w =>
+        w.actions += ActionRecord(funcName, durationNs, rows)
+        w.executions += qe
+      }
     }
     override def onFailure(funcName: String, qe: QueryExecution,
         exception: Exception): Unit =
@@ -166,6 +170,15 @@ final class Telemetry private (private val sc: SparkContext) {
     * if the listener bus does not drain within 10 s: a profile never holds
     * partial counts. */
   def measure[T](name: String)(body: => T): (T, Profile) = {
+    val (out, p, _) = measureExecutions(name)(body)
+    (out, p)
+  }
+
+  /** [[measure]], also returning the executed query of every action that
+    * succeeded in the window, in completion order: their final (AQE)
+    * physical plans are what the actions ran. */
+  def measureExecutions[T](name: String)(
+      body: => T): (T, Profile, Seq[QueryExecution]) = {
     ListenerBusDrain(sc)
     val w = new Window
     open.add(w)
@@ -174,7 +187,7 @@ final class Telemetry private (private val sc: SparkContext) {
       val out = body
       val wallNs = System.nanoTime() - t0
       ListenerBusDrain(sc)
-      (out, w.profile(name, wallNs))
+      (out, w.profile(name, wallNs), w.synchronized(w.executions.toSeq))
     } finally open.remove(w)
   }
 }

@@ -51,9 +51,8 @@ object Dedup {
     * row, not a collect_list. Returns (id, label) for every node in
     * `pairs`; label = min id of the component.
     *
-    * [[connectedComponentsMinLabel]] keeps the simple propagation loop as
-    * the spec cross-check (both agree with a driver union-find in
-    * DedupSpec). */
+    * DedupSpec checks the labeling against a driver-side union-find on
+    * random, chain and adversarial graphs. */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 32): DataFrame =
     connectedComponentsWithStats(pairs, maxIters)._1
 
@@ -65,10 +64,9 @@ object Dedup {
       loopPartitions: Int = 8): (DataFrame, Int) =
     connectedComponentsRdd(pairs, maxIters, preRounds, loopPartitions)
 
-  /** RDD execution of the alternating star loop — same ALGORITHM as
-    * [[connectedComponentsLoopDF]] (kept below as the spec cross-check),
-    * different layer. A Catalyst loop pays two per-round taxes that
-    * dominate at loop granularity: every round's plan is re-analyzed and
+  /** RDD execution of the alternating star loop. The same loop written
+    * over DataFrames pays two per-round taxes that dominate at loop
+    * granularity: every round's plan is re-analyzed and
     * re-optimized from scratch, and AQE schedules one job per exchange
     * materialization — profiled on the media dedup pipelines, ~35 of a
     * query's ~54 jobs were this loop's machinery. At the RDD layer a star
@@ -88,8 +86,7 @@ object Dedup {
     val spark = pairs.sparkSession
     val part = new HashPartitioner(loopPartitions)
     // one deterministic 64-bit mix per directed edge (splitmix64 over the
-    // pair) — the RDD analogue of the DF loop's xxhash64 checksum; any
-    // deterministic 64-bit hash serves the fixpoint test
+    // pair); any deterministic 64-bit hash serves the fixpoint test
     def mix(a: Long, b: Long): Long = {
       var z = a * 0x9E3779B97F4A7C15L + b
       z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
@@ -97,8 +94,9 @@ object Dedup {
       z ^ (z >>> 31)
     }
     // (count, xor of mix(src,dst), xor of mix(dst,src)) — order-independent
-    // and overflow-free; a premature-fixpoint collision needs a
-    // simultaneous 128-bit match (same argument as the DF loop)
+    // and overflow-free; the two argument orders are two independent
+    // 64-bit digests, so a premature-fixpoint collision needs a
+    // simultaneous 128-bit match
     def checksum(e: RDD[(Long, Long)]): (Long, Long, Long) =
       e.aggregate((0L, 0L, 0L))(
         (acc, p) => (acc._1 + 1, acc._2 ^ mix(p._1, p._2),
@@ -134,8 +132,25 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val sym0 = raw.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
       .partitionBy(part)
-    // min-label pre-rounds (see the DF loop's comment for the measured
-    // preRounds trade and the correctness argument for label projection)
+    // A BOUNDED number of min-label pre-rounds first, chained lazily (the
+    // first checksum materializes them). LSH/cosine candidate graphs are
+    // dense shallow clusters; one propagation round collapses a clique
+    // outright, so the star loop starts from a contracted graph with far
+    // fewer live labels and converges in fewer (one-job) rounds. Measured
+    // on d09's real LSH pairs at sf0.1: 0 -> 3 star rounds / 3.8 s warm;
+    // 1 -> 2 rounds / 3.3 s; 2 -> 2 rounds / 3.3 s — every pre-round is a
+    // full-edge-set shuffle, and the first one does the clique collapse.
+    // Correctness: after k rounds label(v) = min id within k hops; edges
+    // projected onto labels preserve exactly the original component
+    // structure (a path of nodes maps to a path of labels), and the
+    // component's global min m keeps label(m) = m, so the star fixpoint
+    // root of the contracted graph IS the component min. Final labels
+    // compose v -> root(label(v)).
+    //
+    // large-star: every node v strictly larger than u links to
+    // m = min(Γ(u) ∪ {u}); small-star: every smaller neighbor (and u
+    // itself) links to m. Alternating the two is monotone toward the
+    // star-per-component fixpoint.
     var labels: RDD[(Long, Long)] = sym0.keys.distinct(loopPartitions)
       .map(id => (id, id)).partitionBy(part)
     for (_ <- 0 until preRounds) {
@@ -201,183 +216,6 @@ object Dedup {
     labels.unpersist(false)
     edges.unpersist(false)
     (result, iters)
-  }
-
-  private[graft] def connectedComponentsLoopDF(
-      pairs: DataFrame, maxIters: Int = 32, preRounds: Int = 1,
-      loopPartitions: Int = 8): (DataFrame, Int) = {
-    // The star loop re-shuffles a rapidly-CONTRACTING edge set several
-    // times; size those exchanges to the contracted graph, not the
-    // session's scan-stage parallelism. Scoped to THE PLAN, not the session
-    // conf (ADVICE r7: a set/restore of spark.sql.shuffle.partitions is
-    // session-global — a concurrently-planned query, e.g. a streaming
-    // micro-batch thread, would inherit the loop's 8 partitions, and
-    // overlapping calls could restore the wrong value): every loop frame is
-    // explicitly hash-partitioned on its group/join key at loopPartitions,
-    // so the groupBy and join that follow reuse that partitioning
-    // exchange-free (HashPartitioning(key, p) satisfies their clustered
-    // distribution), and AQE leaves user-specified partition counts alone.
-    // A real deployment sizes loopPartitions to candidate-edge volume;
-    // banded near-dup graphs here are ≪ the corpus by construction.
-    def part(df: DataFrame, keys: Column*): DataFrame =
-      df.repartition(loopPartitions, keys: _*)
-    // preRounds measured on d09's real LSH pairs at sf0.1:
-    // 0 -> 3 star rounds / 3.8 s warm; 1 -> 2 rounds / 3.3 s; 2 -> 2
-    // rounds / 3.3 s. One round is the sweet spot — every pre-round is a
-    // full-edge-set shuffle, and the first one does the clique collapse.
-    // Hybrid: a BOUNDED number of min-label pre-rounds first, chained
-    // lazily (no convergence action — the star loop's first checksum
-    // materializes them). LSH/cosine candidate graphs are dense shallow
-    // clusters; one propagation round collapses a clique outright, so the
-    // star loop starts from a contracted graph with far fewer live
-    // labels and converges in fewer of its (checksum-action-per-round)
-    // iterations. Correctness: after k rounds label(v) = min id within k
-    // hops; edges projected onto labels preserve exactly the original
-    // component structure (a path of nodes maps to a path of labels), and
-    // the component's global min m keeps label(m) = m, so the star
-    // fixpoint root of the contracted graph IS the component min. Final
-    // labels compose v -> root(label(v)).
-    //
-    // large-star: every node v strictly larger than u links to
-    // m = min(Γ(u) ∪ {u}); small-star: every smaller neighbor (and u
-    // itself) links to m. Alternating the two is monotone toward the
-    // star-per-component fixpoint.
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = part(
-        e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-          .toDF("u", "v"), col("u"))
-      // groupBy("u") and the join on "u" both reuse sym's partitioning —
-      // the only exchanges in this step are `part`'s two explicit ones
-      val mn = sym.groupBy("u").agg(min("v").as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("m"))
-      part(sym.join(mn, "u").filter(col("v") > col("u"))
-          .select(col("v").as("src"), col("m").as("dst")),
-          col("src"), col("dst"))
-        .distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val dir = part(
-        e.select(greatest(col("src"), col("dst")).as("u"),
-            least(col("src"), col("dst")).as("v"))
-          .filter(col("u") =!= col("v")), col("u"))
-      val mn = dir.groupBy("u").agg(min("v").as("m"))
-      part(dir.join(mn, "u")
-          .select(col("v").as("src"), col("m").as("dst"))
-          .unionByName(mn.select(col("u").as("src"), col("m").as("dst")))
-          .filter(col("src") =!= col("dst")),
-          col("src"), col("dst"))
-        .distinct()
-    }
-    def checksum(e: DataFrame): (Long, Long, Long) = {
-      // bit_xor: order-independent and overflow-free (ANSI sum of hashes
-      // overflows a Long almost immediately); two argument orders = two
-      // independent 64-bit digests, so a premature-fixpoint collision
-      // needs a simultaneous 128-bit match
-      val r = e.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(src, dst))"),
-        expr("bit_xor(xxhash64(dst, src))")).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    // Materialize the candidate edges ONCE before the loop: labels-init and
-    // edges-init are separate actions, and without this each re-executed the
-    // full upstream candidate plan (banding join, verify filter) — ~10 extra
-    // AQE stage-jobs per CC call on the media pipelines (VERDICT r7 #3). The
-    // edge set is ≪ the corpus by construction (near-dup families only), so
-    // the checkpoint is a few cached KB.
-    val raw = ResultMemo.checkpointed(
-      pairs.toDF("src", "dst").filter(col("src") =!= col("dst")))
-    val sym = raw.unionByName(
-      raw.select(col("dst").as("src"), col("src").as("dst")))
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-    for (_ <- 0 until preRounds) {
-      val nmin = sym
-        .join(labels.select(col("id").as("dst"), col("label")), "dst")
-        .groupBy(col("src").as("id")).agg(min(col("label")).as("nlabel"))
-      labels = labels.join(nmin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label")))
-            .as("label"))
-    }
-    labels = labels.localCheckpoint()
-    var edges = raw
-      .join(labels.select(col("id").as("src"), col("label").as("ls")), "src")
-      .join(labels.select(col("id").as("dst"), col("label").as("ld")), "dst")
-      .select(col("ls").as("src"), col("ld").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
-    var prev  = checksum(edges)
-    var iters = 0
-    var done  = prev._1 == 0L
-    while (!done && iters < maxIters) {
-      // lazy checkpoint: the checksum action is the one job that both
-      // materializes the round and tests the fixpoint
-      edges = smallStar(largeStar(edges)).localCheckpoint(false)
-      val cur = checksum(edges)
-      done = cur == prev
-      prev = cur
-      iters += 1
-    }
-    // same non-convergence guard as the RDD loop: star-fixpoint roots are
-    // only meaningful if the checksum fixpoint was actually reached
-    if (!done)
-      throw new IllegalStateException(
-        s"connectedComponentsLoopDF: star loop exhausted maxIters=$maxIters " +
-          "without reaching the checksum fixpoint — labels would be " +
-          "unreliable; raise maxIters or inspect the edge input")
-    // star fixpoint roots per surviving label; nodes whose whole cluster
-    // collapsed in the pre-rounds keep their (already-min) label
-    val roots = edges.select(col("src").as("l"), col("dst").as("root"))
-      .unionByName(edges.select(col("dst").as("l"), col("dst").as("root")))
-      .distinct()
-    (labels.join(roots, col("label") === col("l"), "left")
-      .select(col("id"), coalesce(col("root"), col("label")).as("label"))
-      .distinct(), iters)
-  }
-
-  /** Min-label propagation variant: one edge-keyed shuffle per round,
-    * O(component diameter) rounds. Fine for the shallow clusters LSH
-    * produces; kept as the independent cross-check of
-    * [[connectedComponents]] (DedupSpec runs both against union-find). */
-  private[graft] def connectedComponentsMinLabel(
-      pairs: DataFrame, maxIters: Int = 32): DataFrame = {
-    val edges = pairs.toDF("src", "dst")
-      .unionByName(pairs.toDF("dst", "src").select("src", "dst"))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint()
-    var iters = 0
-    var done = false
-    while (!done && iters < maxIters) {
-      val neighborMin = edges
-        .join(labels.select(col("id").as("dst"), col("label")), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("label")).as("nlabel"))
-      val stepped = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label")))
-            .as("label"),
-          (col("nlabel") < col("label")).as("changed"))
-        .localCheckpoint()
-      done = stepped.filter(col("changed")).isEmpty
-      labels = stepped.select("id", "label")
-      iters += 1
-    }
-    // same non-convergence posture as the star loops (ADVICE r9): exiting
-    // on maxIters with partially-propagated labels is indistinguishable
-    // from clean convergence to the caller — make it loud. Min-label needs
-    // O(diameter) rounds, so tripping this means the input graph (or the
-    // budget) is wrong for this variant, not a transient.
-    if (!done)
-      throw new IllegalStateException(
-        s"connectedComponentsMinLabel: propagation exhausted maxIters=$maxIters " +
-          "before reaching a fixpoint — labels would be partially " +
-          "propagated; raise maxIters or use the star-loop variant")
-    labels
   }
 
   /** d16's expected sub-block size: per-label centroid count adapts as

@@ -1054,17 +1054,14 @@ object Relational {
     * 5 columns, not 6 (§2.3: project before the exchange).
     *
     * "hash" is the r14 form (hash window exchange + per-query terminal
-    * range exchange); `SPARK_GRAFT_BIN_PART` selects it for graft.tools.BinAb
-    * to re-measure once ResultMemo's checkpoint keeps the range
-    * clustering. Both produce identical rows AND identical output order
-    * (the terminal sorts are total orders).
+    * range exchange); only graft.tools.BinAb passes it, to re-measure once
+    * ResultMemo's checkpoint keeps the range clustering. Both produce
+    * identical rows AND identical output order (the terminal sorts are
+    * total orders).
     */
-  private[operators] val BinPart: String =
-    sys.env.getOrElse("SPARK_GRAFT_BIN_PART", "range")
-
   private[graft] def binAssignedRaw(
       s: SparkSession, d: String,
-      variant: String = BinPart): DataFrame = {
+      variant: String = "range"): DataFrame = {
     val w = Window.partitionBy("l_orderkey")
       .orderBy("l_linenumber", "l_extendedprice", "l_partkey", "l_suppkey")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -38,7 +38,7 @@ object ResultMemo {
   /** Eager localCheckpoint UNLESS running under [[bypass]] — for shared
     * subframes inside a build (a frame feeding several consumers below
     * it). Under bypass the raw subtree is returned so plan tooling
-    * (DumpPlans, PlanSpec) sees the real plan, not a checkpoint scan. */
+    * (Profile's `raw`, PlanSpec) sees the real plan, not a checkpoint scan. */
   def checkpointed(df: DataFrame): DataFrame =
     if (bypassFlag.get) df else df.localCheckpoint()
 

@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
 class EnvKnobSpec extends AnyFunSuite {
 
   private val levers = Set(
-    "CPUS", "SF_DIR", "WARM_DIR", "BENCH_REPS", "BIN_PART"
+    "CPUS", "SF_DIR", "WARM_DIR", "BENCH_REPS"
   ).map("SPARK_GRAFT_" + _)
 
   private val root = Paths.get("src/main/scala/graft")

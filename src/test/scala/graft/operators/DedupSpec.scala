@@ -3,20 +3,15 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Dedup clustering: min-label propagation must handle shapes deeper than
-  * the shallow clusters the sf oracles produce — chains (diameter > 2),
-  * bridged stars, and disjoint components. */
+/** Dedup clustering: the star-loop connected components must handle shapes
+  * deeper than the shallow clusters the sf oracles produce — chains
+  * (diameter > 2), bridged stars, and disjoint components — and agree with
+  * a driver-side union-find on every random and adversarial graph. */
 class DedupSpec extends SparkTestBase {
 
   private def components(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
     Dedup.connectedComponents(pairs.toDF("src", "dst"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
-
-  private def componentsMinLabel(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
-    import spark.implicits._
-    Dedup.connectedComponentsMinLabel(pairs.toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -62,14 +57,11 @@ class DedupSpec extends SparkTestBase {
     // ADVICE r8: exiting on maxIters without the checksum fixpoint used to
     // fall through to the roots extraction, which assumes star-shaped
     // edges — duplicate/wrong labels, indistinguishable from clean
-    // convergence. maxIters = 0 on any non-empty graph forces that exit;
-    // both loop implementations must now fail LOUDLY.
+    // convergence. maxIters = 0 on any non-empty graph forces that exit,
+    // which must now fail LOUDLY.
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
     intercept[IllegalStateException] {
       Dedup.connectedComponentsWithStats(pairs, maxIters = 0)._1.collect()
-    }
-    intercept[IllegalStateException] {
-      Dedup.connectedComponentsLoopDF(pairs, maxIters = 0)._1.collect()
     }
   }
 
@@ -265,20 +257,6 @@ class DedupSpec extends SparkTestBase {
         val want = parent.keys.map(k => k -> find(k)).toMap
         val got = components(pairs)
         assert(got == want, s"trial $trial (star), pairs=$pairs")
-        // the O(diameter) propagation variant must agree too
-        if (trial <= 10) {
-          val gotML = componentsMinLabel(pairs)
-          assert(gotML == want, s"trial $trial (min-label), pairs=$pairs")
-        }
-        // the Catalyst star loop (the RDD loop's algorithmic twin, kept as
-        // the cross-check layer) must produce the identical labeling
-        if (trial <= 10) {
-          import spark.implicits._
-          val gotDF = Dedup.connectedComponentsLoopDF(
-            pairs.toDF("src", "dst"))._1
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-          assert(gotDF == want, s"trial $trial (DF star), pairs=$pairs")
-        }
       }
     }}
     try futures.foreach(f => Await.result(f, Duration.Inf))
@@ -320,7 +298,7 @@ class DedupSpec extends SparkTestBase {
         }
       }
       // ground truth covers only nodes with at least one non-self edge
-      // (self-loop-only nodes are filtered by the loop, matching the DF twin)
+      // (self-loop-only nodes are filtered by the loop)
       val touched = pairs.collect { case (a, b) if a != b => Seq(a, b) }
         .flatten.toSet
       val want = touched.map(k => k -> find(k)).toMap
