@@ -118,7 +118,7 @@ object Bench {
     // as a 43% "regression" headline-to-headline. The canary moves with the
     // load (it spans all cores, so it sees scheduler contention the queries
     // see) while carrying zero plan/code variance between rounds: a draw
-    // whose canary_sec reads ≫ the committed clean-draw band (see STATE.md)
+    // whose canary_sec reads ≫ the clean-draw band (ROADMAP.md's State)
     // self-identifies as contended, per pass, in the artifact itself.
     def canaryOnce(): Double = {
       val t0 = System.nanoTime()

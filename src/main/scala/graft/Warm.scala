@@ -73,7 +73,8 @@ object Warm {
     Step("bigram lm", Set("t14_lm_quality", "t14s_stream_lm_gate",
         "p04_training_mix_pipeline", "p06_quantile_mix_pipeline"),
       operators.TextAnalysis.lmModelBroadcast(_, _)),
-    Step("pq index", Set("s06_quantized_topk", "s07_ann_pq_topk",
+    Step("pq index", Set("s02_ann_lsh_topk", "s04_ann_ivf_topk",
+        "s06_quantized_topk", "s07_ann_pq_topk",
         "s08_ann_recall_pq", "s09_ann_ivfpq_topk",
         "s10_ann_pq_trained_recall"),
       operators.Similarity.warmPqIndex(_, _)),

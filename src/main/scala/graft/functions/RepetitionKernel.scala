@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The HOF formulation (`transform(sequence(...))` n-gram arrays +
   * `array_distinct`) is interpreted per element and materializes every
-  * n-gram STRING three times over; per the hot-path invariant (STATE.md:
+  * n-gram STRING three times over; per the hot-path invariant (HofBanSpec:
   * interpreted HOFs banned, per-row algorithmic kernels are codegen
   * expressions) this kernel folds the whole computation into one pass with
   * NO n-gram string allocation:

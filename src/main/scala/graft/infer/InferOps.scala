@@ -10,14 +10,15 @@ import org.apache.spark.util.LongAccumulator
 /** Bridges [[InferenceClient]] into DataFrame plans.
   *
   * `mapPartitions` with explicit batching (not a per-row UDF): one client per
-  * partition-task, `batchSize` prompts per transport call. Each task runs its
-  * first batch of a window itself and hands the rest to one JVM-wide pool of
-  * [[MaxInflight]] threads — the Spark equivalent of the reference's
+  * partition-task, at most `batchSize` prompts per transport call. Each task
+  * runs the first batch of a step itself and hands the rest to one JVM-wide
+  * pool of [[MaxInflight]] threads — the Spark equivalent of the reference's
   * Module/Neuron gevent fan-out with a semaphore-capped connection pool
-  * (SURVEY.md D10). The concurrency cap is partition width (set by the
-  * caller via `repartition`, one in-flight batch per running task) plus the
-  * [[MaxInflight]] pool threads of each executor JVM — no driver-side loop,
-  * no collect.
+  * (SURVEY.md D10). A step is cut into at least its task's share of that
+  * cap, `1 + MaxInflight / P` batches for a stage of `P` partitions, so a
+  * small step still fans out. A stage whose `P` tasks all run at once has at
+  * most `P + MaxInflight` calls in flight: one per running task plus the
+  * pool — no driver-side loop, no collect.
   */
 object InferOps {
 
@@ -54,22 +55,37 @@ object InferOps {
       t
     })
 
-  /** `client.completeBatch` over `prompts` in batches of `batchSize`,
-    * replies in prompt order. The first batch runs on the calling thread;
-    * the rest run concurrently on the pool, each under the caller's
-    * `TaskContext`. The first failed batch's exception is rethrown and the
-    * batches still in flight are cancelled, as they are on interrupt. */
+  /** `client.completeBatch` over `prompts`, replies in prompt order. The
+    * prompts are cut into `k = min(n, max(ceil(n / batchSize), 1 +
+    * MaxInflight / P))` contiguous batches whose sizes differ by at most
+    * one, `P` being the calling task's stage width (1 on the driver). So a
+    * small step fills the task's share of the pool, and a step of `n ≥
+    * batchSize × (1 + MaxInflight / P)` prompts takes `ceil(n / batchSize)`
+    * calls, as full batches would.
+    * The first batch runs on the calling thread; the rest run concurrently
+    * on the pool, each under the caller's `TaskContext`, so a stage whose
+    * tasks all run at once has at most `P + MaxInflight` calls in flight.
+    * The first failed batch's exception is rethrown and the batches still
+    * in flight are cancelled, as they are on interrupt. */
   def completeAll(
       prompts: Seq[String],
       client: InferenceClient,
       batchSize: Int = BatchSize): Seq[String] = {
-    val batches = prompts.grouped(batchSize).toVector
     val tc = TaskContext.get()
+    val batches = split(prompts, batchSize, if (tc == null) 1 else tc.numPartitions())
     val rest: Vector[Future[Seq[String]]] = batches.drop(1).map(b =>
       pool.submit(() => TaskContextScope(tc)(client.completeBatch(b))))
     try batches.headOption.toVector.flatMap(client.completeBatch) ++ rest.flatMap(_.get())
     catch { case e: ExecutionException => throw e.getCause }
     finally rest.foreach(_.cancel(true))
+  }
+
+  /** `prompts` in `completeAll`'s batches for a stage of `parts` partitions. */
+  private def split[A](prompts: Seq[A], batchSize: Int, parts: Int): Vector[Seq[A]] = {
+    val n = prompts.size
+    val k = math.min(n, math.max((n + batchSize - 1) / batchSize, 1 + MaxInflight / parts))
+    def cut(i: Int) = (i.toLong * n / k).toInt
+    Vector.tabulate(k)(i => prompts.slice(cut(i), cut(i + 1)))
   }
 
   /** Append `outCol` = client.complete(row[promptCol]) to every row. */

@@ -639,8 +639,11 @@ object Dedup {
         val pairs = defs.find(_.name == "d03_minhash_lsh").get.build(s, d)
         val labels = connectedComponents(
           pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+        // the labels' checkpoint declares no size, so without the hint the
+        // initial plan is a sort-merge join whose exchanges race AQE's
+        // broadcast rewrite; one row per graph node is broadcast-sized
         Tables.documents(s, d)
-          .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
+          .join(broadcast(labels.withColumnRenamed("id", "doc_id")), Seq("doc_id"), "left")
           .select(col("doc_id"),
             coalesce(col("label"), col("doc_id")).as("component"))
           .orderBy("doc_id")

@@ -70,7 +70,8 @@ object V1Pipeline {
   }
 
   /** The task body, over windows of documents of at most `BatchSize ×
-    * MaxInflight` MAP prompts (the window of [[InferOps.complete]]): map
+    * MaxInflight` MAP prompts (the window of [[InferOps.complete]]), each
+    * window's MAP prompts one [[InferOps.completeAll]] step: map
     * (A1), filter (F1), then [[collapseReduce]] over the documents that
     * kept a record (A2/W7/A3). Per document one row: its MAP replies in
     * chunk order (for the audit log only), whether it kept any, its answer. */

@@ -9,10 +9,12 @@ import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 /** `InferOps.completeAll` keeps several batches of one task in flight:
-  * replies stay in row order, each task keeps its own batch in flight and
-  * the pool adds at most [[InferOps.MaxInflight]], pooled calls see the
-  * task's `TaskContext`, and a failed batch fails the action with its own
-  * exception and stops the calls of the batches beside it. */
+  * a step is cut into at least `1 + MaxInflight / P` batches of at most
+  * [[InferOps.BatchSize]] prompts, replies stay in row order, each task
+  * keeps its own batch in flight and the pool adds at most
+  * [[InferOps.MaxInflight]], pooled calls see the task's `TaskContext`, and
+  * a failed batch fails the action with its own exception and stops the
+  * calls of the batches beside it. */
 class InferOpsSpec extends SparkTestBase {
   import InferOpsSpec._
 
@@ -39,6 +41,37 @@ class InferOpsSpec extends SparkTestBase {
     }
     // 3 rows over 6 partitions: three tasks see an empty partition
     assert(replies(prompts(3, 6), mock) == expected(3))
+  }
+
+  test("a step is cut into min(n, max(ceil(n / BatchSize), 1 + MaxInflight / P)) batches") {
+    // n -> batches at P = 1, 2 and 4
+    val want = Seq(0 -> Seq(0, 0, 0), 1 -> Seq(1, 1, 1), 15 -> Seq(15, 11, 6),
+      16 -> Seq(16, 11, 6), 17 -> Seq(17, 11, 6), 21 -> Seq(21, 11, 6),
+      22 -> Seq(21, 11, 6), 200 -> Seq(21, 13, 13), 400 -> Seq(25, 25, 25))
+    for ((n, ks) <- want; (parts, k) <- Seq(1, 2, 4).zip(ks)) {
+      val ps = (0 until n).map(i => s"MAP|q|row $i ANSWER[a$i]")
+      val sequential = ps.map(mock.complete)
+      Batches.sizes.clear()
+      val ok = spark.sparkContext.parallelize(0 until parts, parts).mapPartitions { _ =>
+        Iterator(InferOps.completeAll(ps, new Batches) == sequential)
+      }.collect()
+      assert(ok.toSeq == Seq.fill(parts)(true), s"n=$n P=$parts")
+      val sizes = Batches.sizes.asScala.toSeq.groupMap(_._1)(_._2)
+      assert(sizes.size == (if (n == 0) 0 else parts), s"n=$n P=$parts")
+      sizes.values.foreach { bs =>
+        assert(bs.size == k, s"n=$n P=$parts: ${bs.size} batches")
+        assert(bs.sum == n && bs.max <= InferOps.BatchSize && bs.max - bs.min <= 1,
+          s"n=$n P=$parts: batch sizes $bs")
+      }
+    }
+  }
+
+  test("a 2-partition stage reaches and never exceeds P + MaxInflight calls in flight") {
+    Slow.reset()
+    // 20 batches a task, 19 of them pooled: 38 queue for the 20 pool threads,
+    // and 500 ms calls let both tasks' own batches overlap a full pool
+    assert(replies(prompts(2 * 320, 2), new Slow(500)) == expected(2 * 320))
+    assert(Slow.max.get == 2 + InferOps.MaxInflight, s"max in flight ${Slow.max.get}")
   }
 
   test("one task keeps between 2 and MaxInflight + 1 batches in flight") {
@@ -81,9 +114,9 @@ class InferOpsSpec extends SparkTestBase {
     val stages = sc.statusTracker.getJobIdsForGroup(group).toSeq
       .flatMap(sc.statusTracker.getJobInfo(_)).flatMap(_.stageIds.toSeq).toSet
     val seen = Contexts.seen.asScala.toSeq
-    assert(seen.size == 2 * 7) // 100 rows a partition: 7 batches each
-    // each task runs its first batch itself and pools the other 6
-    assert(seen.count(_.thread.startsWith("graft-infer")) == 2 * 6)
+    assert(seen.size == 2 * 11) // 100 rows a partition: 1 + 20 / 2 batches each
+    // each task runs its first batch itself and pools the other 10
+    assert(seen.count(_.thread.startsWith("graft-infer")) == 2 * 10)
     seen.foreach { c =>
       assert(c.hasContext, c)
       assert(c.partition.toString == c.firstPrompt.takeWhile(_ != '|'), c)
@@ -103,29 +136,29 @@ class InferOpsSpec extends SparkTestBase {
     for (wrap <- Seq[InferenceClient => InferenceClient](
         new RetryingClient(_, baseDelayMs = 1), new HalvingClient(_))) {
       Hang.reset()
-      // 13 batches: the task's own throws while the 12 pooled ones wait
+      // 21 batches: the task's own throws while the 20 pooled ones wait
       val e = intercept[SparkException](replies(prompts(200, 1),
-        new BoomFirst(wrap(new Hang), pooled = 12)))
+        new BoomFirst(wrap(new Hang), pooled = 20)))
       assert(e.getCause.getMessage == "boom")
       val deadline = System.nanoTime() + 10000000000L
       while (BoomFirst.active.get > 0 && System.nanoTime() < deadline) Thread.sleep(10)
       assert(BoomFirst.active.get == 0, "pooled batches still running")
-      assert(Hang.calls.get == 12, "each pooled batch stops in its first call")
+      assert(Hang.calls.get == 20, "each pooled batch stops in its first call")
     }
   }
 
   test("RetryingClient and HalvingClient keep batches and recover inside a Spark job") {
     Counting.batches.set(0)
     val clean = replies(prompts(40, 1), new RetryingClient(new Counting, baseDelayMs = 1))
-    assert(Counting.batches.get == 3, "40 prompts in batches of 16")
+    assert(Counting.batches.get == 21, "40 prompts in 1 + MaxInflight batches")
     assert(clean == expected(40))
     FailFirst.seen.clear()
     assert(replies(prompts(40, 1),
       new RetryingClient(new FailFirst, baseDelayMs = 1)) == clean)
-    assert(FailFirst.seen.size == 3)
+    assert(FailFirst.seen.size == 21)
     Counting.batches.set(0)
     assert(replies(prompts(40, 1), new HalvingClient(new Counting)) == clean)
-    assert(Counting.batches.get == 3)
+    assert(Counting.batches.get == 21)
     FailFirst.seen.clear()
     assert(replies(prompts(40, 1), new HalvingClient(new FailFirst)) == clean)
   }
@@ -146,6 +179,16 @@ object InferOpsSpec {
   }
   object Counting { val batches = new AtomicInteger }
 
+  /** Records (partition, batch size) per `completeBatch`. */
+  class Batches extends InferenceClient {
+    override def complete(p: String): String = mock.complete(p)
+    override def completeBatch(ps: Seq[String]): Seq[String] = {
+      Batches.sizes.add(TaskContext.getPartitionId() -> ps.size)
+      ps.map(mock.complete)
+    }
+  }
+  object Batches { val sizes = new ConcurrentLinkedQueue[(Int, Int)] }
+
   /** Fails the first attempt of every batch. */
   class FailFirst extends InferenceClient {
     override def complete(p: String): String = mock.complete(p)
@@ -155,19 +198,27 @@ object InferOpsSpec {
   }
   object FailFirst { val seen = ConcurrentHashMap.newKeySet[Seq[String]]() }
 
-  /** Sleeps `ms` per batch and records the most batches in flight. */
-  class Slow(ms: Long = 20) extends InferenceClient {
-    override def complete(p: String): String = mock.complete(p)
+  /** Sleeps `ms` per batch, then asks `underlying`, and records the most
+    * batches in flight, in all and per task partition. */
+  class Slow(ms: Long = 20, underlying: InferenceClient = new MockInference)
+    extends InferenceClient {
+    override def complete(p: String): String = underlying.complete(p)
     override def completeBatch(ps: Seq[String]): Seq[String] = {
+      val (now, most) = Slow.byTask.computeIfAbsent(TaskContext.getPartitionId(),
+        _ => (new AtomicInteger, new AtomicInteger))
+      most.accumulateAndGet(now.incrementAndGet(), math.max)
       Slow.max.accumulateAndGet(Slow.inflight.incrementAndGet(), math.max)
-      try { Thread.sleep(ms); ps.map(mock.complete) }
-      finally Slow.inflight.decrementAndGet()
+      try { Thread.sleep(ms); underlying.completeBatch(ps) }
+      finally { Slow.inflight.decrementAndGet(); now.decrementAndGet() }
     }
   }
   object Slow {
     val inflight = new AtomicInteger
     val max = new AtomicInteger
-    def reset(): Unit = { inflight.set(0); max.set(0) }
+    /** partition -> (calls in flight, most calls in flight) */
+    val byTask = new ConcurrentHashMap[Int, (AtomicInteger, AtomicInteger)]
+    def reset(): Unit = { inflight.set(0); max.set(0); byTask.clear() }
+    def maxByTask: Map[Int, Int] = byTask.asScala.map { case (p, (_, m)) => p -> m.get }.toMap
   }
 
   final case class Context(thread: String, hasContext: Boolean, partition: Int,

@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import graft.infer.{MockInference, RetryingClient, InferenceClient}
+import graft.infer.{InferOps, MockInference, RetryingClient, InferenceClient}
+import graft.infer.InferOpsSpec.Slow
 import graft.operators.Packing
 import graft.obs.Telemetry
 import org.apache.spark.sql.DataFrame
@@ -324,9 +325,10 @@ class V1PipelineSpec extends SparkTestBase {
     * the document whose passkey it names ("shared" when it names none),
     * plus "config/rows". */
   private def goldenLog(config: String, docs: DataFrame, cfg: V1Pipeline.Config,
-      keys: Map[String, String]): Map[String, String] = {
+      keys: Map[String, String],
+      wrap: InferenceClient => InferenceClient = identity): Map[String, String] = {
     V1PipelineSpec.prompts.clear()
-    val rows = V1Pipeline.run(docs, new V1PipelineSpec.Recording, cfg).collect()
+    val rows = V1Pipeline.run(docs, wrap(new V1PipelineSpec.Recording), cfg).collect()
     val byDoc = V1PipelineSpec.sent("").groupBy { p =>
       val owners = keys.collect { case (d, k) if p.contains(k) => d }
       assert(owners.size <= 1, s"prompt names documents $owners: $p")
@@ -410,6 +412,20 @@ class V1PipelineSpec extends SparkTestBase {
   /** Walk `e`'s cause chain. */
   private def causes(e: Throwable): Seq[Throwable] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("a two-document request keeps 1 + MaxInflight / 2 calls in flight a task, at most 2 + MaxInflight in all") {
+    val (name, docs, cfg, keys) = goldenFixtures.find(_._1 == "perfbench").get
+    val df = docsDF(docs)
+    assert(df.rdd.getNumPartitions == 2)
+    Slow.reset()
+    val got = goldenLog(name, df, cfg, keys, new Slow(50, _))
+    val want = golden.filter(_._1.startsWith(s"$name/"))
+    assert(got == want, (got.toSet diff want.toSet).toSeq.sorted.mkString("\n"))
+    assert(Slow.max.get <= 2 + InferOps.MaxInflight, s"max in flight ${Slow.max.get}")
+    // each document's MAP step (about 90 prompts) fills its task's share
+    assert(Slow.maxByTask == Map(0 -> (1 + InferOps.MaxInflight / 2),
+      1 -> (1 + InferOps.MaxInflight / 2)), Slow.maxByTask)
+  }
 
   test("a failing MAP batch fails the action with its class and message") {
     val docs = docsDF(Seq(("f1", "What is the passkey?", longDoc("k-1", planted = 3))))

@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import graft.infer.{InferenceClient, MockInference}
+import graft.infer.{InferOps, InferenceClient, MockInference}
+import graft.infer.InferOpsSpec.Slow
 import org.apache.spark.sql.functions._
 
 /** End-to-end V2 survey pipeline on mock inference: 2 surveys × 3 papers
@@ -125,15 +126,17 @@ class V2PipelineSpec extends SparkTestBase {
     }
   }
 
-  /** Run V2 over `surveys` with a [[V2PipelineSpec.Recording]] client:
-    * "config/survey/KIND" -> "n:hash" per prompt kind, plus "config/rows". */
+  /** Run V2 over `surveys` with a [[V2PipelineSpec.Recording]] client,
+    * wrapped in `wrap`: "config/survey/KIND" -> "n:hash" per prompt kind,
+    * plus "config/rows". */
   private def goldenLog(
       config: String,
       surveys: org.apache.spark.sql.DataFrame,
       client: InferenceClient,
-      cfg: V2Pipeline.Config): Map[String, String] = {
+      cfg: V2Pipeline.Config,
+      wrap: InferenceClient => InferenceClient = identity): Map[String, String] = {
     val rec = V2PipelineSpec.Recording(client)
-    val rows = V2Pipeline.run(surveys, rec, cfg).collect()
+    val rows = V2Pipeline.run(surveys, wrap(rec), cfg).collect()
     val seeds = Map(
       "s1" -> Seq("Stream Processing", "pipelined-dataflow",
         "windowed-aggregation", "state-stores"),
@@ -211,6 +214,17 @@ class V2PipelineSpec extends SparkTestBase {
     val got = goldenConfigs.flatMap { case (name, client, cfg) =>
       goldenLog(name, fixture, client(), cfg) }.toMap
     assert(got == golden, (got.toSet diff golden.toSet).toSeq.sorted.mkString("\n"))
+  }
+
+  test("a one-task survey fans each step out to at most 1 + MaxInflight calls") {
+    val want = golden.filter(_._1.startsWith("default/"))
+    Slow.reset()
+    val got = goldenLog("default", fixture.coalesce(1), new MockInference,
+      V2Pipeline.Config(), new Slow(50, _))
+    assert(got == want, (got.toSet diff want.toSet).toSeq.sorted.mkString("\n"))
+    // every step here is under BatchSize prompts, and still not one call
+    assert(Slow.max.get > 1 && Slow.max.get <= 1 + InferOps.MaxInflight,
+      s"max in flight ${Slow.max.get}")
   }
 
   test("convolve sends the recorded MERGE prompts for 1, 2 and 3 layers") {
