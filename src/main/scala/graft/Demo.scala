@@ -50,9 +50,9 @@ object Demo {
     val ck0 = java.nio.file.Files.createTempDirectory("demo_ck0_").toString
     val ck1 = java.nio.file.Files.createTempDirectory("demo_ck1_").toString
     Tables.documents(spark, dir).write.mode("overwrite").parquet(ck0)
-    StageRunner.register("lang_en",
-      (_, df) => df.filter(col("lang") === "en"))
-    val n = StageRunner.run(spark, "lang_en", ck0, ck1)
+    val n = StageRunner.run(spark,
+      Map("lang_en" -> (df => df.filter(col("lang") === "en"))),
+      "lang_en", ck0, ck1)
     println(s"stage lang_en: $n rows checkpointed to $ck1")
 
     spark.stop()

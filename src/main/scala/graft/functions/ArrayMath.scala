@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, KernelColumn, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -209,25 +209,14 @@ object ArrayMath {
     bestI
   }
 
-  /** Column API for [[NearestCellBc]] (registry slot keyed by broadcast
-    * id — one per live centroid table, the Bpe.tokenizeCol posture). */
-  def nearestCellBc(spark: SparkSession, label: Column, emb: Column,
-      bc: org.apache.spark.broadcast.Broadcast[CentroidTable]): Column = {
-    val name = s"graft_nearest_cell_bc_${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => NearestCellBc(es(0), es(1), bc), "built-in")
-    org.apache.spark.sql.functions.call_function(name, label, emb)
-  }
-
-  /** Register the expression as SQL function `graft_dot` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
+  /** Column API for [[NearestCellBc]]. */
+  def nearestCellBc(label: Column, emb: Column,
+      bc: org.apache.spark.broadcast.Broadcast[CentroidTable]): Column =
+    KernelColumn(NearestCellBc(
+      KernelColumn.expr(label), KernelColumn.expr(emb), bc))
 
   /** Column API: codegen'd dot product of two ARRAY<FLOAT|DOUBLE> columns.
-    * Requires [[register]] on the session (QueryDef builds call it). */
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("graft_dot", a, b)
-  }
+    * `spark` is unused; perfbench's Kernels still passes it. */
+  def dot(spark: SparkSession, a: Column, b: Column): Column =
+    KernelColumn(DotProduct(KernelColumn.expr(a), KernelColumn.expr(b)))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, KernelColumn}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -127,29 +127,14 @@ object Bpe {
       copy(child = c)
   }
 
-  /** Merge-rule column: name keyed by the rule's md5, so re-registering the
-    * same rule reuses its registry slot (bounded by distinct rules, same
-    * posture as the bloom probes). */
-  def mergePairCol(spark: SparkSession, c: Column,
-                   left: String, right: String): Column = {
-    val name = "graft_bpe_merge_" + java.security.MessageDigest
-      .getInstance("MD5")
-      .digest(s"$left|$right".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => BpeMergeExpr(es.head, left, right), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Merge-rule column: [[mergePair]] of `c` under one rule. */
+  def mergePairCol(c: Column, left: String, right: String): Column =
+    KernelColumn(BpeMergeExpr(KernelColumn.expr(c), left, right))
 
-  /** Tokenizer column against a broadcast rank table (name keyed by the
-    * broadcast id — one registry slot per live rank table). */
+  /** Tokenizer column against a broadcast rank table. */
   def tokenizeCol(
-      spark: SparkSession, c: Column,
+      c: Column,
       bc: org.apache.spark.broadcast.Broadcast[Map[(String, String), Int]])
-      : Column = {
-    val name = s"graft_bpe_tokenize_${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => BpeTokenizeExpr(es.head, bc), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+      : Column =
+    KernelColumn(BpeTokenizeExpr(KernelColumn.expr(c), bc))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, KernelColumn}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -149,13 +149,6 @@ object HashKernels {
     while (it.hasNext) { arr(k) = it.next().longValue(); k += 1 }
     new GenericArrayData(arr)
   }
-
-  /** Bloom probe on the raw UTF-8 bytes — equivalent to
-    * `BloomFilter.mightContainString` without materializing a String
-    * (putString/mightContainString hash exactly these bytes). */
-  def bloomProbe(
-      bf: org.apache.spark.util.sketch.BloomFilter, s: UTF8String): Boolean =
-    bf.mightContainBinary(s.getBytes)
 
   /** Bloom probe for long keys (the hashed-gram path). */
   def bloomProbeLong(
@@ -395,31 +388,6 @@ object HashKernels {
       copy(child = c)
   }
 
-  /** Codegen'd Bloom-filter membership test. The filter rides a Spark
-    * broadcast (shipped once per executor, not per task closure) referenced
-    * from the generated code via `addReferenceObj` — this is what a Scala
-    * UDF probe can't do without boxing every row. */
-  case class BloomProbeExpr(
-      child: Expression,
-      bf: org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.util.sketch.BloomFilter])
-    extends UnaryExpression {
-    override def nullable: Boolean = true
-    override def dataType: DataType = BooleanType
-    override def nullSafeEval(t: Any): Any =
-      bloomProbe(bf.value, t.asInstanceOf[UTF8String])
-    override protected def doGenCode(
-        ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bloomBc", bf,
-        "org.apache.spark.broadcast.Broadcast")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.functions.HashKernels.bloomProbe(
-          (org.apache.spark.util.sketch.BloomFilter) $ref.value(), $c);""")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
   case class NgramHashesExpr(child: Expression, n: Int) extends UnaryExpression {
     override def nullable: Boolean = true
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -434,8 +402,10 @@ object HashKernels {
       copy(child = c)
   }
 
-  /** Codegen'd Bloom membership test over LONG keys (see [[BloomProbeExpr]]
-    * for the broadcast-reference mechanics). */
+  /** Codegen'd Bloom membership test over LONG keys. The filter rides a
+    * Spark broadcast (shipped once per executor, not per task closure)
+    * referenced from the generated code via `addReferenceObj` — this is what
+    * a Scala UDF probe can't do without boxing every row. */
   case class BloomProbeLongExpr(
       child: Expression,
       bf: org.apache.spark.broadcast.Broadcast[
@@ -483,93 +453,33 @@ object HashKernels {
       copy(child = c)
   }
 
-  def passjoinIndexKeysCol(spark: SparkSession, c: Column, k: Int): Column = {
-    val name = s"graft_passjoin_index_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => PassjoinIndexExpr(es.head, k), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def passjoinIndexKeysCol(c: Column, k: Int): Column =
+    KernelColumn(PassjoinIndexExpr(KernelColumn.expr(c), k))
 
-  def passjoinProbeKeysCol(spark: SparkSession, c: Column, k: Int): Column = {
-    val name = s"graft_passjoin_probe_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => PassjoinProbeExpr(es.head, k), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def passjoinProbeKeysCol(c: Column, k: Int): Column =
+    KernelColumn(PassjoinProbeExpr(KernelColumn.expr(c), k))
 
-  def ngramsCol(spark: SparkSession, c: Column, n: Int): Column = {
-    val name = s"graft_ngrams_$n"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => NgramsExpr(es.head, n), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def ngramsCol(c: Column, n: Int): Column =
+    KernelColumn(NgramsExpr(KernelColumn.expr(c), n))
 
-  def bloomProbeCol(
-      spark: SparkSession,
-      c: Column,
-      bf: org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.util.sketch.BloomFilter]): Column = {
-    // name keyed by the BROADCAST id: unique per live filter within a
-    // SparkContext (identityHashCode could collide across two live
-    // Broadcasts and silently rebind a lazily-analyzed plan to the wrong
-    // filter), and re-registering the same broadcast reuses its slot — the
-    // registry no longer grows per CALL in a long-lived session, only per
-    // distinct filter (ADVICE r5).
-    val name = s"graft_bloom_probe_${bf.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => BloomProbeExpr(es.head, bf), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
-
-  /** LONG-key sibling of [[bloomProbeCol]] (the hashed-gram path). */
   def bloomProbeLongCol(
-      spark: SparkSession,
       c: Column,
       bf: org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.util.sketch.BloomFilter]): Column = {
-    val name = s"graft_bloom_probe_long_${bf.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => BloomProbeLongExpr(es.head, bf), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+        org.apache.spark.util.sketch.BloomFilter]): Column =
+    KernelColumn(BloomProbeLongExpr(KernelColumn.expr(c), bf))
 
-  def ngramHashesCol(spark: SparkSession, c: Column, n: Int): Column = {
-    val name = s"graft_ngram_hashes_$n"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => NgramHashesExpr(es.head, n), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def ngramHashesCol(c: Column, n: Int): Column =
+    KernelColumn(NgramHashesExpr(KernelColumn.expr(c), n))
 
-  def deletionVariantsCol(spark: SparkSession, c: Column, k: Int): Column = {
-    val name = s"graft_del_variants_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => DeletionVariantsExpr(es.head, k), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def deletionVariantsCol(c: Column, k: Int): Column =
+    KernelColumn(DeletionVariantsExpr(KernelColumn.expr(c), k))
 
-  /** Register the kernels as SQL functions (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_shingles", es => ShinglesExpr(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash_sig", es => MinHashSigExpr(es.head), "built-in")
-  }
+  def shinglesCol(c: Column): Column =
+    KernelColumn(ShinglesExpr(KernelColumn.expr(c)))
 
-  def shinglesCol(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("graft_shingles", c)
-  }
+  def minhashSigCol(c: Column): Column =
+    KernelColumn(MinHashSigExpr(KernelColumn.expr(c)))
 
-  def minhashSigCol(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("graft_minhash_sig", c)
-  }
-
-  def simhash64Md5Col(spark: SparkSession, c: Column): Column = {
-    val name = "graft_simhash64_md5"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => SimHash64Md5Expr(es.head), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def simhash64Md5Col(c: Column): Column =
+    KernelColumn(SimHash64Md5Expr(KernelColumn.expr(c)))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, KernelColumn}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -121,14 +121,10 @@ object KmvTopKAgg {
     override def prettyName: String = "graft_kmv_topk"
   }
 
-  /** `kmvTopKCol(spark, col, 64)` — array of the 64 smallest distinct longs
-    * per group, sorted ascending. Registered like the HashKernels columns
-    * (name keyed by k, so the registry grows per distinct k, not per call);
-    * the analyzer wraps the returned AggregateFunction itself. */
-  def kmvTopKCol(spark: SparkSession, c: Column, k: Int): Column = {
-    val name = s"graft_kmv_topk_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => KmvTopKExpr(es.head, k), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** `kmvTopKCol(col, 64)` — array of the 64 smallest distinct longs per
+    * group, sorted ascending: the aggregate wrapped as a (non-distinct,
+    * complete-mode) AggregateExpression, as the analyzer wraps a resolved
+    * aggregate function. */
+  def kmvTopKCol(c: Column, k: Int): Column =
+    KernelColumn(KmvTopKExpr(KernelColumn.expr(c), k).toAggregateExpression())
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, KernelColumn}
 import org.apache.spark.sql.catalyst.expressions.UnaryExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -17,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * bigrams, probe the two count tables, Laplace-smooth, integer-average —
   * into a single codegen'd expression over a Spark broadcast of the LM
   * (shipped once per executor via `addReferenceObj`, exactly the
-  * [[HashKernels.BloomProbeExpr]] mechanics). Arithmetic is the SAME pure
-  * integer milli-unit formulation as t14's oracle:
+  * [[HashKernels.BloomProbeLongExpr]] mechanics). Arithmetic is the SAME
+  * pure integer milli-unit formulation as t14's oracle:
   * ipb = ((C(w1) + V) * 1000) div (C(w1 w2) + 1), score = mean div.
   *
   * At 100 TB the LM tables are bounded by the held-out slice (eval sets are
@@ -90,15 +90,9 @@ object LmKernel {
       : org.apache.spark.sql.catalyst.expressions.Expression = copy(child = c)
   }
 
-  /** Column wrapper; registry slot keyed by the broadcast id (the
-    * [[HashKernels.bloomProbeCol]] uniqueness argument). */
+  /** Column wrapper: the document's score against the broadcast LM. */
   def lmScoreCol(
-      spark: SparkSession,
       c: Column,
-      bc: org.apache.spark.broadcast.Broadcast[LmModel]): Column = {
-    val name = s"graft_lm_score_${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => LmScoreExpr(es.head, bc), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+      bc: org.apache.spark.broadcast.Broadcast[LmModel]): Column =
+    KernelColumn(LmScoreExpr(KernelColumn.expr(c), bc))
 }

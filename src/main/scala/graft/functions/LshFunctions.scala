@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, KernelColumn, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -122,17 +122,14 @@ object LshFunctions {
     })
 
   /** Column of `array<int>` LSH bucket keys (one per table) for an
-    * `array<float|double>` embedding column. Registers a session function
-    * capturing the plane matrix. */
+    * `array<float|double>` embedding column; the expression carries the
+    * plane matrix. `spark` is unused; perfbench's Kernels still passes it. */
   def buckets(
       spark: SparkSession,
       embedding: Column,
       nTables: Int,
       kBits: Int,
-      dims: Int): Column = {
-    val pl = planes(nTables * kBits, dims)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_buckets", exprs => LshBuckets(exprs.head, pl, kBits), "built-in")
-    org.apache.spark.sql.functions.call_function("graft_lsh_buckets", embedding)
-  }
+      dims: Int): Column =
+    KernelColumn(LshBuckets(
+      KernelColumn.expr(embedding), planes(nTables * kBits, dims), kBits))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, KernelColumn}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -103,10 +103,6 @@ object RepetitionKernel {
       copy(child = c)
   }
 
-  def repetitionStatsCol(spark: SparkSession, c: Column): Column = {
-    val name = "graft_repetition_stats"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, es => RepetitionStatsExpr(es.head), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def repetitionStatsCol(c: Column): Column =
+    KernelColumn(RepetitionStatsExpr(KernelColumn.expr(c)))
 }

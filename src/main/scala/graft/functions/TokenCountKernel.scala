@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, KernelColumn}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType}
@@ -192,30 +192,15 @@ object TokenCountKernel {
       copy(child = c)
   }
 
-  private def reg(spark: SparkSession, name: String,
-      f: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, f, "built-in")
+  def stopwordCountCol(c: Column, stops: Seq[String]): Column =
+    KernelColumn(StopwordCountExpr(KernelColumn.expr(c), stops))
 
-  def stopwordCountCol(spark: SparkSession, c: Column, stops: Seq[String]): Column = {
-    reg(spark, "graft_stopword_count", es => StopwordCountExpr(es.head, stops))
-    org.apache.spark.sql.functions.call_function("graft_stopword_count", c)
-  }
+  def longTokenCountCol(c: Column, minChars: Int): Column =
+    KernelColumn(LongTokenCountExpr(KernelColumn.expr(c), minChars))
 
-  def longTokenCountCol(spark: SparkSession, c: Column, minChars: Int): Column = {
-    reg(spark, s"graft_long_token_count_$minChars",
-      es => LongTokenCountExpr(es.head, minChars))
-    org.apache.spark.sql.functions.call_function(
-      s"graft_long_token_count_$minChars", c)
-  }
+  def alnumRunCountCol(c: Column): Column =
+    KernelColumn(AlnumRunCountExpr(KernelColumn.expr(c)))
 
-  def alnumRunCountCol(spark: SparkSession, c: Column): Column = {
-    reg(spark, "graft_alnum_run_count", es => AlnumRunCountExpr(es.head))
-    org.apache.spark.sql.functions.call_function("graft_alnum_run_count", c)
-  }
-
-  def wsTokenCountCol(spark: SparkSession, c: Column): Column = {
-    reg(spark, "graft_ws_token_count", es => WsTokenCountExpr(es.head))
-    org.apache.spark.sql.functions.call_function("graft_ws_token_count", c)
-  }
+  def wsTokenCountCol(c: Column): Column =
+    KernelColumn(WsTokenCountExpr(KernelColumn.expr(c)))
 }

@@ -28,7 +28,7 @@ object Dedup {
     ResultMemo.materialized("minhash_sig_frame", s, d) {
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
-          graft.functions.HashKernels.minhashSigCol(s, col("text")).as("sig"))
+          graft.functions.HashKernels.minhashSigCol(col("text")).as("sig"))
         .filter(col("sig").isNotNull)
     }
 
@@ -293,7 +293,7 @@ object Dedup {
     })
     val bc = s.sparkContext.broadcast(table)
     e.withColumn("cell", graft.functions.ArrayMath.nearestCellBc(
-        s, col("label"), col("embedding"), bc))
+        col("label"), col("embedding"), bc))
       .select(col("vec_id"), col("label"), col("cell"), col("embedding"),
         sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
   }
@@ -511,7 +511,7 @@ object Dedup {
         val sets = Tables.documents(s, d)
           .join(candIds, Seq("doc_id"), "left_semi")
           .select(col("doc_id"),
-            graft.functions.HashKernels.shinglesCol(s, col("text")).as("shingles"))
+            graft.functions.HashKernels.shinglesCol(col("text")).as("shingles"))
           .filter(col("shingles").isNotNull)
         val x = sets.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"))
         val y = sets.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"))
@@ -581,7 +581,7 @@ object Dedup {
         def setsFor(ids: DataFrame, idName: String, setName: String) =
           docs.join(ids, docs("doc_id") === ids(idName), "left_semi")
             .select(col("doc_id").as(idName),
-              HashKernels.shinglesCol(s, col("text")).as(setName))
+              HashKernels.shinglesCol(col("text")).as(setName))
             .filter(col(setName).isNotNull)
         val x = setsFor(cand.select("corpus_id").distinct(), "corpus_id", "sh_c")
         val y = setsFor(cand.select("test_id").distinct(), "test_id", "sh_t")
@@ -795,7 +795,7 @@ object Dedup {
         // (doc_id, simhash) straight off the scan.
         val sim = Tables.documents(s, d)
           .select(col("doc_id"),
-            graft.functions.HashKernels.simhash64Md5Col(s, col("text")).as("simhash"))
+            graft.functions.HashKernels.simhash64Md5Col(col("text")).as("simhash"))
         // band index rides the HIGH bits of the key: docs must agree on the
         // same 16 bits AT the same band position (matches the oracle's
         // a.band = c.band join) — without it, cross-band value collisions
@@ -966,7 +966,7 @@ object Dedup {
         // hash exactly once and count(*) == count(DISTINCT gram hash).
         def docs = Tables.documents(s, d)
           .select(col("doc_id"), col("source"),
-            explode(HashKernels.ngramHashesCol(s, col("text"), 5)).as("gram"))
+            explode(HashKernels.ngramHashesCol(col("text"), 5)).as("gram"))
         // the eval-set gram index is tiny and read three times (bloom
         // build, broadcast join, and at 100 TB it would be a persisted
         // table) — materialize it once; LAZY checkpoint so the bloom
@@ -979,7 +979,7 @@ object Dedup {
         // codegen'd probe (no per-row boxing, broadcast shipped once per
         // executor); only a prefilter — exactness comes from the join
         docs.filter(col("source") =!= "src0")
-          .filter(HashKernels.bloomProbeLongCol(s, col("gram"), bfB))
+          .filter(HashKernels.bloomProbeLongCol(col("gram"), bfB))
           .join(broadcast(eval), Seq("gram"))
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_shared"))
@@ -1287,7 +1287,7 @@ object Dedup {
         // delta side: newcomers are not in the index yet — sign them fresh
         val deltaSig = docs.filter(col("source") === deltaSrc)
           .select(col("doc_id"),
-            HashKernels.minhashSigCol(s, col("text")).as("sig"))
+            HashKernels.minhashSigCol(col("text")).as("sig"))
           .filter(col("sig").isNotNull)
         // the delta batch is small by construction; checkpoint its bands
         // and the candidate set once — each feeds three consumers below,
@@ -1318,7 +1318,7 @@ object Dedup {
         val sets = ResultMemo.checkpointed(
           docs.join(ids, docs("doc_id") === ids("vid"), "left_semi")
             .select(col("doc_id").as("vid"),
-              HashKernels.shinglesCol(s, col("text")).as("sh"))
+              HashKernels.shinglesCol(col("text")).as("sh"))
             .filter(col("sh").isNotNull))
         val ver = cand
           .join(broadcast(sets.select(col("vid").as("doc_id"),

@@ -978,9 +978,8 @@ object Relational {
     require(maxDist >= 1 && maxDist <= 2,
       "deletion-neighborhood blocking exposed for maxDist 1..2 " +
         "(variant count is C(len, k) — use segment blocking beyond)")
-    val s = left.sparkSession
     def variants(c: Column): Column =
-      graft.functions.HashKernels.deletionVariantsCol(s, c, maxDist)
+      graft.functions.HashKernels.deletionVariantsCol(c, maxDist)
     val l = left.withColumn("__lv", explode(variants(col(leftKey))))
     val r = right.withColumn("__rv", explode(variants(col(rightKey))))
     l.join(r, col("__lv") === col("__rv"))
@@ -1005,13 +1004,10 @@ object Relational {
       rightKey: String,
       maxDist: Int): DataFrame = {
     require(maxDist >= 1, "maxDist must be >= 1")
-    val s = left.sparkSession
-    val l = left.withColumn("__pk",
-      explode(graft.functions.HashKernels.passjoinProbeKeysCol(
-        s, col(leftKey), maxDist)))
-    val r = right.withColumn("__ik",
-      explode(graft.functions.HashKernels.passjoinIndexKeysCol(
-        s, col(rightKey), maxDist)))
+    val l = left.withColumn("__pk", explode(
+      graft.functions.HashKernels.passjoinProbeKeysCol(col(leftKey), maxDist)))
+    val r = right.withColumn("__ik", explode(
+      graft.functions.HashKernels.passjoinIndexKeysCol(col(rightKey), maxDist)))
     l.join(r, col("__pk") === col("__ik"))
       .drop("__pk", "__ik")
       .distinct()

@@ -161,11 +161,9 @@ object Sketches {
     // plan instead of leaving it to the aggregate's semantics. Every
     // declared caller feeds md5-derived non-null hashes, so it drops zero
     // rows today.
-    val spark = keyed.sparkSession
     keyed.filter(col("h").isNotNull)
       .groupBy("prio")
-      .agg(graft.functions.KmvTopKAgg
-        .kmvTopKCol(spark, col("h"), KmvK).as("mins"))
+      .agg(graft.functions.KmvTopKAgg.kmvTopKCol(col("h"), KmvK).as("mins"))
       .select(col("prio"), posexplode(col("mins")).as(Seq("pos", "h")))
       .select(col("prio"), col("h"), (col("pos") + 1).as("rk"))
   }

@@ -106,10 +106,10 @@ object TextAnalysis {
         // interpreted lambda per token and materialized two arrays per row
         // to read one int — the t06 class
         val nStop = graft.functions.TokenCountKernel
-          .stopwordCountCol(s, col("text"), stopwords)
+          .stopwordCountCol(col("text"), stopwords)
         // denominator via spaces+1 — no token array for a count
         val nWs = graft.functions.TokenCountKernel
-          .wsTokenCountCol(s, col("text"))
+          .wsTokenCountCol(col("text"))
         Tables.documents(s, d)
           .select(
             col("doc_id"),
@@ -133,9 +133,9 @@ object TextAnalysis {
         // codegen kernels instead of the interpreted filter-HOF count and
         // the split-array size (round-13 HofBanSpec find, same class as t01)
         val nLong = graft.functions.TokenCountKernel
-          .longTokenCountCol(s, col("text"), 6)
+          .longTokenCountCol(col("text"), 6)
         val nWs = graft.functions.TokenCountKernel
-          .wsTokenCountCol(s, col("text"))
+          .wsTokenCountCol(col("text"))
         Tables.documents(s, d)
           .select(
             col("doc_id"), col("n_chars"),
@@ -163,12 +163,12 @@ object TextAnalysis {
           .select(
             col("doc_id"),
             graft.functions.TokenCountKernel
-              .wsTokenCountCol(s, col("text")).as("ws_tokens"),
+              .wsTokenCountCol(col("text")).as("ws_tokens"),
             // maximal-alnum-run count kernel: same integer as counting the
             // nonempty regex-split pieces, with no regex engine and no
             // arrays (round-13 HofBanSpec find)
             graft.functions.TokenCountKernel
-              .alnumRunCountCol(s, col("text")).as("re_tokens"),
+              .alnumRunCountCol(col("text")).as("re_tokens"),
             ceil(col("n_chars") / 3.7).cast("bigint").as("est_bpe_tokens"))
           .orderBy("doc_id")),
 
@@ -255,7 +255,7 @@ object TextAnalysis {
         // fractions, ~4x cheaper per row, and the terminal orderBy's
         // boundary-sampling re-run of this projection becomes cheap too
         val r = graft.functions.RepetitionKernel
-          .repetitionStatsCol(s, col("text"))
+          .repetitionStatsCol(col("text"))
         Tables.documents(s, d)
           .select(col("doc_id"), r.as("r"))
           .select(col("doc_id"),

@@ -54,7 +54,7 @@ object Tokenize {
           out += ((l, r, cnt))
           cur = cur
             .withColumn("syms",
-              graft.functions.Bpe.mergePairCol(spark, col("syms"), l, r))
+              graft.functions.Bpe.mergePairCol(col("syms"), l, r))
             .localCheckpoint(false)
         }
       }
@@ -116,7 +116,7 @@ object Tokenize {
           .filter(length(col("word")) > 0)
           .select(col("doc_id"),
             size(split(col("word"), "")).as("n_sym_w"),
-            size(graft.functions.Bpe.tokenizeCol(s, col("word"), bc))
+            size(graft.functions.Bpe.tokenizeCol(col("word"), bc))
               .as("n_bpe_w"))
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_words"),

@@ -12,10 +12,10 @@ import scala.collection.mutable.ArrayBuffer
   * returns "completed"; an unknown tool or failed call is recorded and the
   * loop continues; exhausting the budget returns "max_rounds_reached".
   *
-  * Tools here are [[StageRunner]] stages, which communicate by parquet
-  * checkpoint path exactly like the reference's MCP tools communicate by
-  * result-file path — so the host only ever moves path strings and row
-  * counts, never data. The model edge is the usual [[InferenceClient]]
+  * Tools here are the [[StageRunner]] stages of the `stages` map, which
+  * communicate by parquet checkpoint path exactly like the reference's MCP
+  * tools communicate by result-file path — so the host only ever moves
+  * path strings and row counts, never data. The model edge is the usual [[InferenceClient]]
   * seam: `HOST|<task>|<history>` → `CALL <stage>` or `FINISH`.
   *
   * Scale: the loop is driver-side control (bounded by maxRounds) over
@@ -40,6 +40,7 @@ object HostLoop {
 
   def run(
       spark: SparkSession,
+      stages: Map[String, StageRunner.Stage],
       task: String,
       inPath: String,
       workDir: String,
@@ -57,7 +58,7 @@ object HostLoop {
         val stage = decision.stripPrefix("CALL ").trim
         val out   = s"$workDir/round$round-$stage"
         try {
-          val n = StageRunner.run(spark, stage, path, out)
+          val n = StageRunner.run(spark, stages, stage, path, out)
           path = out
           history += HostOp(round, "call_tool", stage, "success", s"rows=$n")
         } catch {

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.functions._
 
-/** The standard stage registry behind the checkpoint CLI
+/** The standard stage map behind the checkpoint CLI
   * (`graft.tools.RunStage`) — the deterministic tool surface the V3 MCP
   * host sequences. The reference exposes each pipeline step as an MCP tool
   * whose arguments and results are FILE PATHS
@@ -20,29 +20,24 @@ import org.apache.spark.sql.functions._
   */
 object StageLibrary {
 
-  @volatile private var registered = false
-
-  /** Register the standard stages (idempotent). */
-  def ensureRegistered(): Unit = synchronized {
-    if (registered) return
-
+  /** The standard stages, by name. */
+  val stages: Map[String, StageRunner.Stage] = Map(
     // normalize whitespace (T8-adjacent scrub; d07's claim normalization)
-    StageRunner.register("clean_ws", (_, df) =>
-      df.withColumn("text", trim(regexp_replace(col("text"), "\\s+", " "))))
+    "clean_ws" -> (df =>
+      df.withColumn("text", trim(regexp_replace(col("text"), "\\s+", " ")))),
 
     // drop too-short documents (F6's lower length gate)
-    StageRunner.register("filter_short", (_, df) =>
-      df.filter(length(col("text")) >= 50))
+    "filter_short" -> (df => df.filter(length(col("text")) >= 50)),
 
     // exact dedup, keep the first doc per content hash (d01's rule)
-    StageRunner.register("dedup_exact", (_, df) => {
+    "dedup_exact" -> { df =>
       val h = df.withColumn("fp", md5(col("text").cast("binary")))
       val firsts = h.groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
       h.join(firsts, Seq("fp", "doc_id"), "left_semi").drop("fp")
-    })
+    },
 
     // stopword-ratio language guess (t01's rule, same 10-word table)
-    StageRunner.register("lang_id", (_, df) => {
+    "lang_id" -> { df =>
       val stopArr = array(Seq("the", "a", "of", "and", "to", "in", "is",
         "on", "for", "with").map(lit): _*)
       val words = split(lower(col("text")), " ")
@@ -50,18 +45,15 @@ object StageLibrary {
       df.withColumn("lang_guess",
         when(nStop * 1.0 / greatest(size(split(col("text"), " ")), lit(1))
           > 0.05, "en").otherwise("unknown"))
-    })
+    },
 
     // content fingerprint column (t04's md5 label)
-    StageRunner.register("fingerprint", (_, df) =>
-      df.withColumn("fp", md5(col("text").cast("binary"))))
+    "fingerprint" -> (df =>
+      df.withColumn("fp", md5(col("text").cast("binary")))),
 
     // MinHash signature index maintenance (the d14s steady state, batch)
-    StageRunner.register("minhash_sig", (s, df) =>
+    "minhash_sig" -> (df =>
       df.withColumn("sig",
-          graft.functions.HashKernels.minhashSigCol(s, col("text")))
-        .filter(col("sig").isNotNull))
-
-    registered = true
-  }
+          graft.functions.HashKernels.minhashSigCol(col("text")))
+        .filter(col("sig").isNotNull)))
 }

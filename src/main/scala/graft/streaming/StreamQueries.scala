@@ -175,7 +175,7 @@ object StreamQueries {
         import graft.functions.HashKernels
         val evalGrams = graft.Tables.documents(s, d)
           .filter(col("source") === "src0")
-          .select(explode(HashKernels.ngramsCol(s, col("text"), 5)).as("gram"))
+          .select(explode(HashKernels.ngramsCol(col("text"), 5)).as("gram"))
           .distinct()
         Streams.runToMemory(
           Streams.decontaminateStream(
@@ -213,7 +213,7 @@ object StreamQueries {
         import graft.functions.HashKernels
         val stream = Streams.documentsStream(s, d)
           .select(col("doc_id"),
-            HashKernels.minhashSigCol(s, col("text")).as("sig"))
+            HashKernels.minhashSigCol(col("text")).as("sig"))
           .filter(col("sig").isNotNull)
           .select(col("doc_id"),
             md5(concat_ws(",", col("sig")).cast("binary")).as("sig_md5"))
@@ -313,7 +313,7 @@ object StreamQueries {
               transform(
                 filter(split(lower(col("text")), " "),
                   w => length(w) > lit(0)),
-                w => size(graft.functions.Bpe.tokenizeCol(s, w, bc))
+                w => size(graft.functions.Bpe.tokenizeCol(w, bc))
                   .cast("long")),
               lit(0L), (acc, x) => acc + x).as("n_bpe"))
         Streams.runToMemory(

@@ -244,7 +244,7 @@ object Streams {
     val s = docs.sparkSession
     docs
       .select(col("doc_id"),
-        explode(graft.functions.HashKernels.ngramsCol(s, col("text"), 5))
+        explode(graft.functions.HashKernels.ngramsCol(col("text"), 5))
           .as("gram"))
       .join(org.apache.spark.sql.functions.broadcast(evalGrams),
         Seq("gram"), "left_semi")
@@ -269,7 +269,7 @@ object Streams {
     docs
       .filter(col("source") =!= "src0")
       .select(col("doc_id"),
-        graft.functions.LmKernel.lmScoreCol(s, col("text"), bc).as("sc"))
+        graft.functions.LmKernel.lmScoreCol(col("text"), bc).as("sc"))
       .filter(col("sc").isNotNull)
       .select(col("doc_id"),
         element_at(col("sc"), 1).as("n_bigrams"),

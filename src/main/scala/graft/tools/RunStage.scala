@@ -17,9 +17,8 @@ import graft.pipeline.{StageLibrary, StageRunner}
   */
 object RunStage {
   def main(args: Array[String]): Unit = {
-    StageLibrary.ensureRegistered()
     if (args.isEmpty || args(0) == "--list") {
-      StageRunner.stages.foreach(println)
+      StageLibrary.stages.keys.toSeq.sorted.foreach(println)
       return
     }
     require(args.length >= 3,
@@ -27,7 +26,7 @@ object RunStage {
     val Array(stage, inPath, outPath) = args.take(3)
     val spark = GraftSession.get("graft-stage")
     try {
-      val n = StageRunner.run(spark, stage, inPath, outPath)
+      val n = StageRunner.run(spark, StageLibrary.stages, stage, inPath, outPath)
       println(s"""{"stage":"$stage","in":"$inPath","out":"$outPath","rows":$n}""")
     } finally spark.stop()
   }

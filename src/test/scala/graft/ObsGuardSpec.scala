@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
   * anywhere else is a second instrument, and a sleep in main code is a guess
   * at how long the asynchronous listener bus takes; `Telemetry.measure`
   * drains the bus instead. Likewise it has one batching path to the model,
-  * `graft.infer.InferOps.completeAll`. */
+  * `graft.infer.InferOps.completeAll`, and one way to make a kernel Column,
+  * `org.apache.spark.sql.KernelColumn`. */
 class ObsGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -45,5 +46,10 @@ class ObsGuardSpec extends AnyFunSuite {
     val infer = root.resolve("graft/infer")
     val outside = matches("""\.completeBatch\b""").filterNot(_._1.startsWith(infer))
     assert(outside.isEmpty, "completeBatch calls outside graft/infer:\n" + show(outside))
+  }
+
+  test("kernel Columns never write the session function registry") {
+    val hits = matches("""createOrReplaceTempFunction|call_function""")
+    assert(hits.isEmpty, "function-registry writes in main code:\n" + show(hits))
   }
 }

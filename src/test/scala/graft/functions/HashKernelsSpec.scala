@@ -83,31 +83,12 @@ class HashKernelsSpec extends SparkTestBase {
     keys.foreach(k =>
       assert(HashKernels.bloomProbeLong(bf, k), s"false negative on $k"))
     val probed = (1L to 1000L).map(_ * 7919L).toDF("k")
-      .filter(HashKernels.bloomProbeLongCol(spark, col("k"), bfB))
+      .filter(HashKernels.bloomProbeLongCol(col("k"), bfB))
       .collect().map(_.getLong(0)).toSet
     val direct = (1L to 1000L).map(_ * 7919L)
       .filter(k => HashKernels.bloomProbeLong(bf, k)).toSet
     assert(probed == direct)
     assert(keys.toSet.subsetOf(probed))
-  }
-
-  test("bloom probe: no false negatives, and codegen matches interpreted") {
-    import spark.implicits._
-    val grams = (1 to 500).map(i => s"gram_$i")
-    val bf = grams.toDF("g").stat.bloomFilter("g", 1 << 16, 0.01)
-    val bfB = spark.sparkContext.broadcast(bf)
-    // a Bloom filter may say yes wrongly, never no wrongly
-    grams.foreach(g =>
-      assert(HashKernels.bloomProbe(bf, UTF8String.fromString(g)),
-        s"false negative on $g"))
-    // the expression path (codegen'd in a filter) agrees with the direct call
-    val probed = (1 to 1000).map(i => s"gram_$i").toDF("g")
-      .filter(HashKernels.bloomProbeCol(spark, col("g"), bfB))
-      .collect().map(_.getString(0)).toSet
-    val direct = (1 to 1000).map(i => s"gram_$i")
-      .filter(g => HashKernels.bloomProbe(bf, UTF8String.fromString(g))).toSet
-    assert(probed == direct)
-    assert(grams.toSet.subsetOf(probed))
   }
 
   test("minhashSig == naive salted-md5 minima") {

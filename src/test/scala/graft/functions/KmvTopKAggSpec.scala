@@ -23,7 +23,7 @@ class KmvTopKAggSpec extends SparkTestBase {
 
   private def aggForm(df: org.apache.spark.sql.DataFrame) =
     df.groupBy("g")
-      .agg(KmvTopKAgg.kmvTopKCol(spark, col("h"), K).as("mins"))
+      .agg(KmvTopKAgg.kmvTopKCol(col("h"), K).as("mins"))
       .select(col("g"), posexplode(col("mins")).as(Seq("pos", "h")))
       .select(col("g"), col("h"), (col("pos") + 1).as("rk"))
 
@@ -70,7 +70,7 @@ class KmvTopKAggSpec extends SparkTestBase {
     val df = small.toDF("g", "h").repartition(1)
       .union(large.toDF("g", "h").repartition(1))
     val mins = df.groupBy("g")
-      .agg(KmvTopKAgg.kmvTopKCol(spark, col("h"), K).as("mins"))
+      .agg(KmvTopKAgg.kmvTopKCol(col("h"), K).as("mins"))
       .select(explode(col("mins")).as("h"))
       .as[Long].collect().toSeq
     assert(mins == (1L to 64L))
@@ -81,7 +81,7 @@ class KmvTopKAggSpec extends SparkTestBase {
     val df = Seq[(String, java.lang.Long)](
       ("g", 5L), ("g", null), ("g", 2L)).toDF("g", "h")
     val mins = df.groupBy("g")
-      .agg(KmvTopKAgg.kmvTopKCol(spark, col("h"), K).as("mins"))
+      .agg(KmvTopKAgg.kmvTopKCol(col("h"), K).as("mins"))
       .select(explode(col("mins")).as("h"))
       .as[Long].collect().toSeq
     assert(mins == Seq(2L, 5L))

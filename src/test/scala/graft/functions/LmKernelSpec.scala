@@ -52,7 +52,7 @@ class LmKernelSpec extends SparkTestBase {
     val bc = spark.sparkContext.broadcast(m)
     val texts = Seq("a b", "b a", "a b a b", "z z z", "a", "")
     val rows = texts.toDF("text")
-      .select(col("text"), LmKernel.lmScoreCol(spark, col("text"), bc).as("sc"))
+      .select(col("text"), LmKernel.lmScoreCol(col("text"), bc).as("sc"))
       .collect()
     rows.foreach { r =>
       val text = r.getString(0)

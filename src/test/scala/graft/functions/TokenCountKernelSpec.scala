@@ -55,7 +55,7 @@ class TokenCountKernelSpec extends SparkTestBase {
     val stopArr = array(stopwords.map(lit): _*)
     val hof = size(filter(split(lower(col("text")), " "),
       t => array_contains(stopArr, t)))
-    val kernel = TokenCountKernel.stopwordCountCol(spark, col("text"), stopwords)
+    val kernel = TokenCountKernel.stopwordCountCol(col("text"), stopwords)
     val bad = df.select(col("id"), col("text"), hof.as("h"), kernel.as("k"))
       .filter(col("h") =!= col("k")).collect()
     assert(bad.isEmpty, bad.take(5).mkString("\n"))
@@ -71,7 +71,7 @@ class TokenCountKernelSpec extends SparkTestBase {
     val arr1 = array(stops1.map(lit): _*)
     val hof1 = size(filter(split(lower(col("text")), " "),
       t => array_contains(arr1, t)))
-    val k1 = TokenCountKernel.stopwordCountCol(spark, col("text"), stops1)
+    val k1 = TokenCountKernel.stopwordCountCol(col("text"), stops1)
     val r1 = docs(Seq(s"$nine x $nine ABCDEFGHI", nine, "abcdefgh", ""))
       .select(col("id"), hof1.as("h"), k1.as("k")).collect()
     assert(r1.forall(r => r.getInt(1) == r.getInt(2)), r1.mkString("\n"))
@@ -84,7 +84,7 @@ class TokenCountKernelSpec extends SparkTestBase {
     val arr2 = array(stops2.map(lit): _*)
     val hof2 = size(filter(split(lower(col("text")), " "),
       t => array_contains(arr2, t)))
-    val k2 = TokenCountKernel.stopwordCountCol(spark, col("text"), stops2)
+    val k2 = TokenCountKernel.stopwordCountCol(col("text"), stops2)
     val r2 = docs(Seq("\u212A k K x", "\u212A"))
       .select(col("id"), hof2.as("h"), k2.as("k")).collect()
     assert(r2.forall(r => r.getInt(1) == r.getInt(2)), r2.mkString("\n"))
@@ -94,7 +94,7 @@ class TokenCountKernelSpec extends SparkTestBase {
   test("long-token count matches the length-filter HOF form") {
     val df = docs(adversarial ++ randomDocs(300, 17L))
     val hof = size(filter(split(col("text"), " "), w => length(w) >= 6))
-    val kernel = TokenCountKernel.longTokenCountCol(spark, col("text"), 6)
+    val kernel = TokenCountKernel.longTokenCountCol(col("text"), 6)
     val bad = df.select(col("id"), col("text"), hof.as("h"), kernel.as("k"))
       .filter(col("h") =!= col("k")).collect()
     assert(bad.isEmpty, bad.take(5).mkString("\n"))
@@ -103,7 +103,7 @@ class TokenCountKernelSpec extends SparkTestBase {
   test("ws-token count matches size(split(text, ' '))") {
     val df = docs(adversarial ++ randomDocs(300, 23L))
     val hof = size(split(col("text"), " "))
-    val kernel = TokenCountKernel.wsTokenCountCol(spark, col("text"))
+    val kernel = TokenCountKernel.wsTokenCountCol(col("text"))
     val bad = df.select(col("id"), col("text"), hof.as("h"), kernel.as("k"))
       .filter(col("h") =!= col("k")).collect()
     assert(bad.isEmpty, bad.take(5).mkString("\n"))
@@ -113,7 +113,7 @@ class TokenCountKernelSpec extends SparkTestBase {
     val df = docs(adversarial ++ randomDocs(300, 19L))
     val hof = size(filter(split(col("text"), "[^a-zA-Z0-9]+"),
       x => length(x) > 0))
-    val kernel = TokenCountKernel.alnumRunCountCol(spark, col("text"))
+    val kernel = TokenCountKernel.alnumRunCountCol(col("text"))
     val bad = df.select(col("id"), col("text"), hof.as("h"), kernel.as("k"))
       .filter(col("h") =!= col("k")).collect()
     assert(bad.isEmpty, bad.take(5).mkString("\n"))

@@ -17,21 +17,17 @@ class HostLoopSpec extends SparkTestBase {
     dir
   }
 
-  private def registerStages(): Unit = {
-    StageRunner.register("filter_short",
-      (_, df) => df.filter(col("n_chars") >= 200))
-    StageRunner.register("tag_quality",
-      (_, df) => df.withColumn("quality",
-        when(col("n_chars") >= 400, "high").otherwise("low")))
-    StageRunner.register("agg_lang",
-      (_, df) => df.groupBy("lang", "quality").agg(count(lit(1)).as("n")))
-  }
+  private val stages = Map[String, StageRunner.Stage](
+    "filter_short" -> (df => df.filter(col("n_chars") >= 200)),
+    "tag_quality" -> (df => df.withColumn("quality",
+      when(col("n_chars") >= 400, "high").otherwise("low"))),
+    "agg_lang" ->
+      (df => df.groupBy("lang", "quality").agg(count(lit(1)).as("n"))))
 
   test("host executes the planned stages in order and finishes (D5/§3.3)") {
-    registerStages()
     val in   = seedCheckpoint()
     val work = Files.createTempDirectory("graft_host_w_").toString
-    val res = HostLoop.run(spark,
+    val res = HostLoop.run(spark, stages,
       task = "filter_short>tag_quality>agg_lang",
       inPath = in, workDir = work, client = new MockInference)
     assert(res.status == "completed")
@@ -47,10 +43,9 @@ class HostLoopSpec extends SparkTestBase {
   }
 
   test("unknown tool is recorded as an error and the budget bounds the loop") {
-    registerStages()
     val in   = seedCheckpoint()
     val work = Files.createTempDirectory("graft_host_e_").toString
-    val res = HostLoop.run(spark,
+    val res = HostLoop.run(spark, stages,
       task = "filter_short>no_such_stage",
       inPath = in, workDir = work, client = new MockInference, maxRounds = 4)
     assert(res.status == "max_rounds_reached")

@@ -19,20 +19,21 @@ class StageLibrarySpec extends SparkTestBase {
     p
   }
 
-  test("library registers and lists the standard stages") {
-    StageLibrary.ensureRegistered()
-    val known = StageRunner.stages.toSet
+  private def run(stage: String, in: String, out: String): Long =
+    StageRunner.run(spark, StageLibrary.stages, stage, in, out)
+
+  test("library lists the standard stages") {
+    val known = StageLibrary.stages.keySet
     Seq("clean_ws", "filter_short", "dedup_exact", "lang_id",
       "fingerprint", "minhash_sig").foreach(s =>
       assert(known.contains(s), s"missing stage $s"))
   }
 
   test("chained checkpoints equal the fused batch plan (dedup after filter)") {
-    StageLibrary.ensureRegistered()
     val in  = seed()
     val w   = Files.createTempDirectory("graft_stage_w_").toString
-    val n1 = StageRunner.run(spark, "filter_short", in, s"$w/c1")
-    val n2 = StageRunner.run(spark, "dedup_exact", s"$w/c1", s"$w/c2")
+    val n1 = run("filter_short", in, s"$w/c1")
+    val n2 = run("dedup_exact", s"$w/c1", s"$w/c2")
     assert(n2 <= n1)
     val fused = {
       val f = spark.read.parquet(in).filter(length(col("text")) >= 50)
@@ -46,19 +47,18 @@ class StageLibrarySpec extends SparkTestBase {
   }
 
   test("column appenders preserve rows and match their query twins' rules") {
-    StageLibrary.ensureRegistered()
     val in = seed()
     val w  = Files.createTempDirectory("graft_stage_a_").toString
     val n0 = spark.read.parquet(in).count()
-    assert(StageRunner.run(spark, "lang_id", in, s"$w/lang") == n0)
-    assert(StageRunner.run(spark, "fingerprint", in, s"$w/fp") == n0)
+    assert(run("lang_id", in, s"$w/lang") == n0)
+    assert(run("fingerprint", in, s"$w/fp") == n0)
     // lang_id agrees with t01 on every doc
     val t01 = graft.SparkEntry.queries("t01_language_id")(spark, dir)
       .select("doc_id", "lang_guess")
     val st = spark.read.parquet(s"$w/lang").select("doc_id", "lang_guess")
     assert(st.exceptAll(t01).isEmpty && t01.exceptAll(st).isEmpty)
     // minhash_sig drops only docs the kernel nulls (< 3 tokens)
-    val nSig = StageRunner.run(spark, "minhash_sig", in, s"$w/sig")
+    val nSig = run("minhash_sig", in, s"$w/sig")
     assert(nSig <= n0 && nSig > 0)
   }
 }

@@ -14,15 +14,16 @@ class StageRunnerSpec extends SparkTestBase {
     (1 to 100).map(i => (i.toLong, s"text $i")).toDF("id", "text")
       .write.mode("overwrite").parquet(in)
 
-    StageRunner.register("filter_even", (_, df) => df.filter(col("id") % 2 === 0))
-    StageRunner.register("tag", (_, df) => df.withColumn("tag", lit("ok")))
+    val stages = Map[String, StageRunner.Stage](
+      "filter_even" -> (df => df.filter(col("id") % 2 === 0)),
+      "tag" -> (df => df.withColumn("tag", lit("ok"))))
 
-    assert(StageRunner.run(spark, "filter_even", in, mid) == 50)
-    assert(StageRunner.run(spark, "tag", mid, out) == 50)
+    assert(StageRunner.run(spark, stages, "filter_even", in, mid) == 50)
+    assert(StageRunner.run(spark, stages, "tag", mid, out) == 50)
     val res = spark.read.parquet(out)
     assert(res.columns.toSet == Set("id", "text", "tag"))
     intercept[IllegalArgumentException] {
-      StageRunner.run(spark, "nope", in, out)
+      StageRunner.run(spark, stages, "nope", in, out)
     }
   }
 }

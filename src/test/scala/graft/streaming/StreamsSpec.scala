@@ -111,7 +111,7 @@ class StreamsSpec extends SparkTestBase {
         aggregate(
           transform(
             filter(split(lower(col("text")), " "), w => length(w) > lit(0)),
-            w => size(graft.functions.Bpe.tokenizeCol(spark, w, bc))
+            w => size(graft.functions.Bpe.tokenizeCol(w, bc))
               .cast("long")),
           lit(0L), (acc, x) => acc + x).as("n_bpe"))
     val agg = perDoc.groupBy("source")
