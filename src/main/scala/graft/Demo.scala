@@ -22,7 +22,7 @@ object Demo {
 
     println("=== streaming tumbling counts (AvailableNow) ===")
     Streams.runToMemory(
-      Streams.tumblingCounts(Streams.eventsStream(spark, dir)), "demo_tumble")
+      Streams.tumblingCounts(Tables.stream(spark, dir, "events")), "demo_tumble")
       .orderBy(desc("n")).show(5, truncate = false)
 
     println("=== MinHash-LSH near-dup candidates ===")

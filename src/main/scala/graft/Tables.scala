@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructType, TimestampNTZType, TimestampType}
 
-/** Loaders for the driver-generated testdata tables (TESTDATA.md).
+/** The one reader for the testdata tables (TESTDATA.md),
+  * batch and streaming alike.
   *
   * Plain parquet scans: Catalyst pushes filters and prunes columns into the
   * scan, so callers should NOT cache these — a cached full table defeats
@@ -40,33 +41,40 @@ object Tables {
     if (need) df.repartition(para) else df
   }
 
-  def load(spark: SparkSession, dir: String, table: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$table.parquet")
-    if (fanOutTables(table)) fanOut(df, dir, table) else df
+  /** Each table's physical file schema, memoized per (dir, table) — the
+    * same immutability assumption as the fan-out memo. Batch reads given a
+    * schema start no inference job (`spark.read.parquet` starts one per
+    * call), and streaming sources require one. It is read from the footer
+    * of the first file matching `$table*.parquet`, the glob the stream
+    * reads, so a sharded layout (embeddings_0.parquet, ...) is probed too.
+    * Listing goes through Hadoop's FileSystem, which resolves non-local
+    * and relative dirs exactly as Spark's own sources do. */
+  private val schemaMemo =
+    scala.collection.concurrent.TrieMap.empty[(String, String), StructType]
+
+  private def fileSchema(spark: SparkSession, dir: String, table: String): StructType = {
+    // harmless when the file is micros: the flag only affects NANOS columns
+    if (table == "events")
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schemaMemo.getOrElseUpdate((dir, table), {
+      val glob = new org.apache.hadoop.fs.Path(dir, s"$table*.parquet")
+      val fs = glob.getFileSystem(spark.sessionState.newHadoopConf())
+      val first = Option(fs.globStatus(glob)).toSeq.flatten
+        .map(_.getPath.toString).sorted.headOption // file OR Spark-written dir
+        .getOrElse(s"$dir/$table.parquet") // no match: the read reports the path
+      spark.read.parquet(first).schema
+    })
   }
 
-  /** Load with the scan-parallelism guard applied unconditionally — for
-    * queries that run a CPU-heavy per-row kernel DIRECTLY on a relational
-    * scan with no shuffle before it (e.g. q23's JSON roundtrip: partial
-    * aggregation means the whole serialize+parse pass runs inside the scan
-    * stage, so a single-split file pins it to one core of 32). On a real
-    * lake the scan arrives with thousands of splits and this is a no-op. */
-  def fannedLoad(spark: SparkSession, dir: String, table: String): DataFrame =
-    fanOut(spark.read.parquet(s"$dir/$table.parquet"), dir, table)
-
-  def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
-  def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
-  def customer(s: SparkSession, d: String): DataFrame   = load(s, d, "customer")
-  def supplier(s: SparkSession, d: String): DataFrame   = load(s, d, "supplier")
-  def part(s: SparkSession, d: String): DataFrame       = load(s, d, "part")
-  def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
-  def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
-  /** Normalize `events.ts` to session-TZ TIMESTAMP regardless of how the
-    * producer encoded it — schema-on-read tolerance, the Spark analog of the
-    * reference's optional-field `.get(..., default)` loaders
-    * (LLMxMapReduce_V2/src/data_structure/survey.py:16-18). Two physical
-    * encodings exist in the wild testdata:
+  /** Normalize what the producer's encoding leaves to the reader —
+    * schema-on-read tolerance, the Spark analog of the reference's
+    * optional-field `.get(..., default)` loaders
+    * (LLMxMapReduce_V2/src/data_structure/survey.py:16-18). Branching on the
+    * file's schema (not a pinned one) means a regenerated lake never breaks
+    * the readers again.
     *
+    * `events.ts` becomes session-TZ TIMESTAMP. Two physical encodings exist
+    * in the wild testdata:
     *  - parquet TIMESTAMP(NANOS): Spark's vectorized reader rejects it, so
     *    with `nanosAsLong` the column arrives as a raw LongType nano count.
     *    Truncate to micros with integer `div` (nano counts exceed 2^53 and
@@ -79,41 +87,68 @@ object Tables {
     *    bit-for-bit and downstream window/date_format behavior matches the
     *    nanos path.
     *
-    * Branching on the LOADED schema (not a pinned one) means a regenerated
-    * lake never breaks the readers again. */
-  def normalizeEventTs(df: DataFrame): DataFrame =
-    df.schema("ts").dataType match {
+    * `embeddings.embedding` becomes `array<float>` whatever element width
+    * the producer wrote. Every kernel (`ArrayMath.dot`, `getSeq[Float]`
+    * collects, LSH planes) assumes float elements; a regenerated lake that
+    * widened to double would otherwise break 20+ queries at once. The
+    * DuckDB oracles read the same narrowed values
+    * (`embedding::FLOAT[]::DOUBLE[]` — a no-op on today's float files), so
+    * hash parity survives either encoding. */
+  private def normalize(table: String, df: DataFrame): DataFrame = table match {
+    case "events" => df.schema("ts").dataType match {
       case LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType =>
         df.withColumn("ts", col("ts").cast(TimestampType))
       case _ => df // already session-TZ TIMESTAMP
     }
-
-  def events(s: SparkSession, d: String): DataFrame = {
-    // harmless when the file is micros: the flag only affects NANOS columns
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(load(s, d, "events"))
-  }
-  def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
-
-  /** Normalize `embeddings.embedding` to `array<float>` whatever element
-    * width the producer wrote — the same schema-on-read tolerance as
-    * [[normalizeEventTs]], for the column the whole ANN/dedup family keys
-    * on. Every kernel (`ArrayMath.dot`, `getSeq[Float]` collects, LSH
-    * planes) assumes float elements; a regenerated lake that widened to
-    * double would otherwise break 20+ queries at once. The DuckDB oracles
-    * read the same narrowed values (`embedding::FLOAT[]::DOUBLE[]` — a
-    * no-op on today's float files), so hash parity survives either
-    * encoding. */
-  def embeddings(s: SparkSession, d: String): DataFrame = {
-    val df = load(s, d, "embeddings")
-    df.schema("embedding").dataType match {
+    case "embeddings" => df.schema("embedding").dataType match {
       case ArrayType(FloatType, _) => df
       case ArrayType(_, _) =>
         df.withColumn("embedding", col("embedding").cast("array<float>"))
       case other =>
         sys.error(s"embeddings.embedding: expected an array column, got $other")
     }
+    case _ => df
   }
+
+  private def scan(spark: SparkSession, dir: String, table: String): DataFrame =
+    spark.read.schema(fileSchema(spark, dir, table)).parquet(s"$dir/$table.parquet")
+
+  def load(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val df = scan(spark, dir, table)
+    normalize(table, if (fanOutTables(table)) fanOut(df, dir, table) else df)
+  }
+
+  /** Load with the scan-parallelism guard applied unconditionally — for
+    * queries that run a CPU-heavy per-row kernel DIRECTLY on a relational
+    * scan with no shuffle before it (e.g. q23's JSON roundtrip: partial
+    * aggregation means the whole serialize+parse pass runs inside the scan
+    * stage, so a single-split file pins it to one core of 32). On a real
+    * lake the scan arrives with thousands of splits and this is a no-op. */
+  def fannedLoad(spark: SparkSession, dir: String, table: String): DataFrame =
+    normalize(table, fanOut(scan(spark, dir, table), dir, table))
+
+  /** Stream a table out of an sf directory: a file source over `dir` whose
+    * glob filter selects the table's file(s), one file per micro-batch (the
+    * queue_size analog, D1), with the batch reader's schema and
+    * normalization — so a streaming twin reads exactly the rows and types
+    * its batch query does. */
+  def stream(spark: SparkSession, dir: String, table: String): DataFrame =
+    normalize(table, spark.readStream
+      .schema(fileSchema(spark, dir, table))
+      .option("maxFilesPerTrigger", 1)
+      .option("pathGlobFilter", s"$table*.parquet")
+      .parquet(dir))
+
+  def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
+  def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
+  def customer(s: SparkSession, d: String): DataFrame   = load(s, d, "customer")
+  def supplier(s: SparkSession, d: String): DataFrame   = load(s, d, "supplier")
+  def part(s: SparkSession, d: String): DataFrame       = load(s, d, "part")
+  def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
+  def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
+  def events(s: SparkSession, d: String): DataFrame     = load(s, d, "events")
+  def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
+  def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

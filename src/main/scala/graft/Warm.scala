@@ -91,17 +91,15 @@ object Warm {
       }
 
   /** Parquet footer reads for every table, so the first timed query does
-    * not pay them. Each table is guarded: one unreadable table must cost
-    * its queries `err` entries in the timed loop, not the whole run (r6:
-    * an events schema change here killed the bench before any query was
-    * timed). */
+    * not pay them: each table's schema lands in `Tables`' memo (the batch
+    * and streaming reads share it) and one scan warms the file. Each table
+    * is guarded: one unreadable table must cost its queries `err` entries
+    * in the timed loop, not the whole run (r6: an events schema change
+    * here killed the bench before any query was timed). */
   def tables(spark: SparkSession, sfDir: String, tag: String): Unit =
     Tables.names.foreach { t =>
-      try {
-        val df = if (t == "events") Tables.events(spark, sfDir)
-                 else Tables.load(spark, sfDir, t)
-        df.count()
-      } catch { case e: Throwable =>
+      try Tables.load(spark, sfDir, t).count()
+      catch { case e: Throwable =>
         System.err.println(s"[$tag] warm-up for table $t failed: ${e.getMessage}")
       }
     }

@@ -49,7 +49,8 @@ object Dedup {
     * No neighbor lists are ever materialized: each step is a groupBy-min
     * plus a co-partitioned join, so a high-degree hub costs one aggregation
     * row, not a collect_list. Returns (id, label) for every node in
-    * `pairs`; label = min id of the component.
+    * `pairs`; label = min id of the component. The frame carries the
+    * broadcast hint, so a join against it plans as a broadcast join.
     *
     * DedupSpec checks the labeling against a driver-side union-find on
     * random, chain and adversarial graphs. */
@@ -215,7 +216,10 @@ object Dedup {
     raw.unpersist(false)
     labels.unpersist(false)
     edges.unpersist(false)
-    (result, iters)
+    // the checkpoint declares no size, so without the hint a consumer's
+    // initial plan is a sort-merge join whose exchanges race AQE's
+    // broadcast rewrite; every consumer joins the labels as its build side
+    (broadcast(result), iters)
   }
 
   /** d16's expected sub-block size: per-label centroid count adapts as
@@ -639,11 +643,8 @@ object Dedup {
         val pairs = defs.find(_.name == "d03_minhash_lsh").get.build(s, d)
         val labels = connectedComponents(
           pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-        // the labels' checkpoint declares no size, so without the hint the
-        // initial plan is a sort-merge join whose exchanges race AQE's
-        // broadcast rewrite; one row per graph node is broadcast-sized
         Tables.documents(s, d)
-          .join(broadcast(labels.withColumnRenamed("id", "doc_id")), Seq("doc_id"), "left")
+          .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
           .select(col("doc_id"),
             coalesce(col("label"), col("doc_id")).as("component"))
           .orderBy("doc_id")

@@ -210,7 +210,9 @@ object Relational {
                  AS DOUBLE) / 50000.0) AS BIGINT) AS bin
         FROM lineitem
         ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey"""),
-      build = (s, d) => q04From(binAssigned(s, d))),
+      build = (s, d) => binAssigned(s, d)
+        .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "bin")
+        .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")),
 
     // ---------------------------------------------------------------- Q05
     QueryDef(
@@ -227,7 +229,12 @@ object Relational {
                    AS DOUBLE) / 50000.0) AS BIGINT) AS bin
           FROM lineitem)
         GROUP BY l_orderkey, bin ORDER BY l_orderkey, bin"""),
-      build = (s, d) => q05From(binAssigned(s, d))),
+      build = (s, d) => binAssigned(s, d)
+        .groupBy("l_orderkey", "bin")
+        .agg(
+          count(lit(1)).as("n"),
+          sum(col("cents")).cast("double").as("total"))
+        .orderBy("l_orderkey", "bin")),
 
     // ---------------------------------------------------------------- Q06
     QueryDef(
@@ -1019,60 +1026,29 @@ object Relational {
     * a unique composite in this generator — so the running sum is total-order
     * deterministic. Materialized through [[ResultMemo]]: q05 is a strict
     * continuation of q04, so the window pass runs once per session instead
-    * of once per query (bypass keeps plan-shape specs honest). */
-  private def binAssigned(s: SparkSession, d: String): DataFrame =
-    ResultMemo.materialized("binAssigned", s, d)(binAssignedRaw(s, d))
-
-  /** q04/q05 terminal ops over a bin-assigned frame — shared between the
-    * declared builds (memoized frame) and graft.tools.BinAb (raw frame per
-    * variant), so the A/B can never drift from what the queries compute. */
-  private[graft] def q04From(bins: DataFrame): DataFrame = bins
-    .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "bin")
-    .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-
-  private[graft] def q05From(bins: DataFrame): DataFrame = bins
-    .groupBy("l_orderkey", "bin")
-    .agg(
-      count(lit(1)).as("n"),
-      sum(col("cents")).cast("double").as("total"))
-    .orderBy("l_orderkey", "bin")
-
-  /** Exchange variant for the q04/q05 window pass (r15, guide §2.4):
+    * of once per query (bypass keeps plan-shape specs honest).
     *
-    * "range" (head) establishes the window's per-order clustering with ONE
-    * RANGE exchange on l_orderkey instead of the default hash exchange.
+    * The window's per-order clustering comes from ONE RANGE exchange on
+    * l_orderkey instead of the default hash exchange (r15, guide §2.4).
     * RangePartitioning(l_orderkey) satisfies everything downstream of the
     * window in BOTH queries — q04's terminal ORDER BY (l_orderkey, ...) and
     * q05's GROUP BY (l_orderkey, bin) + ORDER BY are prefix/subset-
-    * compatible — so the second (range) exchange each query paid on the
-    * suite's largest shuffle payload disappears; only local sorts remain.
-    * The `cents` cast also moves ABOVE the exchange so the shuffle carries
-    * 5 columns, not 6 (§2.3: project before the exchange).
-    *
-    * "hash" is the r14 form (hash window exchange + per-query terminal
-    * range exchange); only graft.tools.BinAb passes it, to re-measure once
-    * ResultMemo's checkpoint keeps the range clustering. Both produce
-    * identical rows AND identical output order (the terminal sorts are
-    * total orders).
-    */
-  private[graft] def binAssignedRaw(
-      s: SparkSession, d: String,
-      variant: String = "range"): DataFrame = {
-    val w = Window.partitionBy("l_orderkey")
-      .orderBy("l_linenumber", "l_extendedprice", "l_partkey", "l_suppkey")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val base = Tables.lineitem(s, d)
-      .select(
-        col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        col("l_suppkey"), col("l_extendedprice"))
-    val clustered = variant match {
-      case "range" => base.repartitionByRange(col("l_orderkey"))
-      case "hash"  => base
-      case other   => sys.error(s"unknown bin partition variant $other")
+    * compatible — so neither query pays a second exchange on the suite's
+    * largest shuffle payload; only local sorts remain. The `cents` cast
+    * sits ABOVE the exchange so the shuffle carries 5 columns, not 6
+    * (§2.3: project before the exchange). */
+  private def binAssigned(s: SparkSession, d: String): DataFrame =
+    ResultMemo.materialized("binAssigned", s, d) {
+      val w = Window.partitionBy("l_orderkey")
+        .orderBy("l_linenumber", "l_extendedprice", "l_partkey", "l_suppkey")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      Tables.lineitem(s, d)
+        .select(
+          col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
+          col("l_suppkey"), col("l_extendedprice"))
+        .repartitionByRange(col("l_orderkey"))
+        .withColumn("cents", col("l_extendedprice").cast("decimal(18,2)"))
+        .withColumn("bin",
+          floor(sum(col("cents")).over(w).cast("double") / 50000.0).cast("bigint"))
     }
-    clustered
-      .withColumn("cents", col("l_extendedprice").cast("decimal(18,2)"))
-      .withColumn("bin",
-        floor(sum(col("cents")).over(w).cast("double") / 50000.0).cast("bigint"))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.QueryDef
+import graft.{QueryDef, Tables}
 import org.apache.spark.sql.functions._
 
 /** Streaming twins of the windowed queries as DRIVER-CHECKED entries: each
@@ -30,7 +30,7 @@ object StreamQueries {
         FROM events GROUP BY wstart, event_type ORDER BY wstart, event_type"""),
       build = (s, d) =>
         Streams.runToMemory(
-          Streams.tumblingCounts(Streams.eventsStream(s, d)),
+          Streams.tumblingCounts(Tables.stream(s, d, "events")),
           unique("q26s"))
           .orderBy("wstart", "event_type")),
 
@@ -48,7 +48,7 @@ object StreamQueries {
         GROUP BY wstart ORDER BY wstart"""),
       build = (s, d) =>
         Streams.runToMemory(
-          Streams.slidingCounts(Streams.eventsStream(s, d)),
+          Streams.slidingCounts(Tables.stream(s, d, "events")),
           unique("q27s"))
           .orderBy("wstart")),
 
@@ -64,7 +64,7 @@ object StreamQueries {
         SELECT DISTINCT md5(text) AS h FROM documents ORDER BY h"""),
       build = (s, d) =>
         Streams.runToMemory(
-          Streams.dedupStream(Streams.documentsStream(s, d)),
+          Streams.dedupStream(Tables.stream(s, d, "documents")),
           unique("d10s"), mode = "append")
           .orderBy("h")),
 
@@ -82,8 +82,8 @@ object StreamQueries {
       build = (s, d) =>
         Streams.runToMemory(
           Streams.enrichedSegmentCounts(
-            Streams.eventsStream(s, d),
-            graft.Tables.customer(s, d)
+            Tables.stream(s, d, "events"),
+            Tables.customer(s, d)
               .select(col("c_custkey").as("user_id"),
                 col("c_mktsegment").as("segment"))),
           unique("q39s"))
@@ -117,10 +117,10 @@ object StreamQueries {
         ORDER BY click_id"""),
       build = (s, d) => {
         val idx = Streams.viewHistoryIndex(
-          graft.Tables.events(s, d)
+          Tables.events(s, d)
             .filter(col("event_type") === "view")
             .select(col("user_id"), col("ts"), col("event_id")))
-        val clicks = Streams.eventsStream(s, d)
+        val clicks = Tables.stream(s, d, "events")
           .filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("user_id"), col("ts"))
         Streams.runToMemory(
@@ -150,7 +150,7 @@ object StreamQueries {
         // in the data batch; the trailing watermark-eviction batch spends
         // ~40% of the trigger time on zero output (see runToMemory).
         Streams.runToMemory(
-          Streams.clickPurchaseJoin(Streams.eventsStream(s, d)),
+          Streams.clickPurchaseJoin(Tables.stream(s, d, "events")),
           unique("q40s"), mode = "append", noDataBatch = false)
           .orderBy("user_id", "click_ts", "buy_ts")),
 
@@ -173,13 +173,13 @@ object StreamQueries {
         WHERE g.source <> 'src0' ORDER BY doc_id"""),
       build = (s, d) => {
         import graft.functions.HashKernels
-        val evalGrams = graft.Tables.documents(s, d)
+        val evalGrams = Tables.documents(s, d)
           .filter(col("source") === "src0")
           .select(explode(HashKernels.ngramsCol(col("text"), 5)).as("gram"))
           .distinct()
         Streams.runToMemory(
           Streams.decontaminateStream(
-            Streams.documentsStream(s, d).filter(col("source") =!= "src0"),
+            Tables.stream(s, d, "documents").filter(col("source") =!= "src0"),
             evalGrams),
           unique("q41s"), mode = "append")
           .orderBy("doc_id")
@@ -211,7 +211,7 @@ object StreamQueries {
         FROM mh ORDER BY doc_id"""),
       build = (s, d) => {
         import graft.functions.HashKernels
-        val stream = Streams.documentsStream(s, d)
+        val stream = Tables.stream(s, d, "documents")
           .select(col("doc_id"),
             HashKernels.minhashSigCol(col("text")).as("sig"))
           .filter(col("sig").isNotNull)
@@ -240,7 +240,7 @@ object StreamQueries {
         ORDER BY media_id"""),
       build = (s, d) => {
         import s.implicits._
-        val stream = Streams.documentsStream(s, d)
+        val stream = Tables.stream(s, d, "documents")
           .select(col("doc_id")).as[Long]
           .filter(_ % 3 == 0) // the image rows of the media lake stand-in
           .mapPartitions(_.map(id =>
@@ -277,7 +277,7 @@ object StreamQueries {
         SELECT vec_id, tbl, bucket FROM buck ORDER BY vec_id, tbl"""),
       build = (s, d) => {
         val dims = graft.operators.Similarity.dimsOf(s, d)
-        val stream = Streams.embeddingsStream(s, d)
+        val stream = Tables.stream(s, d, "embeddings")
           .select(col("vec_id"),
             posexplode(graft.functions.LshFunctions.buckets(
               s, col("embedding"), 4, 4, dims)).as(Seq("tbl", "bucket")))
@@ -307,7 +307,7 @@ object StreamQueries {
         val ranks = graft.operators.Tokenize.trainMerges(s, d).zipWithIndex
           .map { case ((l, r, _), i) => (l, r) -> i }.toMap
         val bc = s.sparkContext.broadcast(ranks)
-        val perDoc = Streams.documentsStream(s, d)
+        val perDoc = Tables.stream(s, d, "documents")
           .select(col("source"),
             aggregate(
               transform(
@@ -366,7 +366,7 @@ object StreamQueries {
       build = (s, d) =>
         Streams.runToMemory(
           Streams.lmGateStream(
-            Streams.documentsStream(s, d),
+            Tables.stream(s, d, "documents"),
             graft.operators.TextAnalysis.lmModelBroadcast(s, d)),
           unique("t14s"), mode = "append")
           .orderBy("doc_id")),
@@ -411,7 +411,7 @@ object StreamQueries {
       build = (s, d) =>
         Streams.runToMemory(
           graft.operators.TextAnalysis
-            .piiScrubbed(Streams.documentsStream(s, d))
+            .piiScrubbed(Tables.stream(s, d, "documents"))
             .select(col("doc_id"),
               (col("ne") + col("np") + col("ni")).cast("long").as("n_pii"),
               expr("CAST(conv(substring(md5(red), 1, 15), 16, 10) AS BIGINT)")
@@ -451,7 +451,7 @@ object StreamQueries {
         ORDER BY source, reader, doc_id"""),
       build = (s, d) =>
         Streams.runToMemory(
-          Streams.packUpdates(Streams.documentsStream(s, d)),
+          Streams.packUpdates(Tables.stream(s, d, "documents")),
           unique("x06s"), mode = "update")
           .select(col("source"), col("reader"), col("doc_id"),
             col("doc_tokens"),
@@ -482,7 +482,7 @@ object StreamQueries {
         FROM sess GROUP BY user_id, sid ORDER BY user_id, session_start"""),
       build = (s, d) =>
         Streams.runToMemory(
-          Streams.sessionCounts(Streams.eventsStream(s, d)),
+          Streams.sessionCounts(Tables.stream(s, d, "events")),
           unique("q28s"))
           .orderBy("user_id", "session_start")),
 
@@ -505,7 +505,7 @@ object StreamQueries {
         GROUP BY j, bucket ORDER BY j, bucket"""),
       build = (s, d) =>
         Streams.runToMemory(
-          Streams.cmsCounts(Streams.documentsStream(s, d)),
+          Streams.cmsCounts(Tables.stream(s, d, "documents")),
           unique("q44s"))
           .orderBy("j", "bucket")),
 
@@ -533,7 +533,7 @@ object StreamQueries {
         // deploy-time scalar config; memoized eager read (see its scaladoc)
         val (lo, hi) = graft.operators.Sketches.eventBoundsScalar(s, d)
         Streams.runToMemory(
-          Streams.histogramCounts(Streams.eventsStream(s, d), lo, hi),
+          Streams.histogramCounts(Tables.stream(s, d, "events"), lo, hi),
           unique("q43s"))
           .orderBy("bucket")
       }),
@@ -563,7 +563,7 @@ object StreamQueries {
         // deploy-time scalar config; memoized eager read (see its scaladoc)
         val (lo, hi) = graft.operators.Sketches.eventBoundsScalar(s, d)
         Streams.runToMemory(
-          Streams.keyedHistogramCounts(Streams.eventsStream(s, d), lo, hi),
+          Streams.keyedHistogramCounts(Tables.stream(s, d, "events"), lo, hi),
           unique("q47s"))
           .orderBy("event_type", "bucket")
       }),
@@ -592,7 +592,7 @@ object StreamQueries {
         FROM rk WHERE rk <= 64 GROUP BY prio ORDER BY prio"""),
       build = (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val stream = Streams.ordersStream(s, d)
+        val stream = Tables.stream(s, d, "orders")
           .select(col("o_orderpriority").as("prio"),
             graft.operators.Sketches.kmvHash(col("o_custkey")).as("h"))
         val updates = Streams.runToMemory(
@@ -655,7 +655,7 @@ object StreamQueries {
         ORDER BY th.pa, th.pb"""),
       build = (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val stream = Streams.ordersStream(s, d)
+        val stream = Tables.stream(s, d, "orders")
           .select(col("o_orderpriority").as("prio"),
             graft.operators.Sketches.kmvHash(col("o_custkey")).as("h"))
         val updates = Streams.runToMemory(
@@ -690,7 +690,7 @@ object StreamQueries {
         import org.apache.spark.sql.expressions.Window
         val u = (col("doc_id") * lit(2654435761L)) % lit(4294967296L) /
           lit(4294967296.0)
-        val stream = Streams.documentsStream(s, d)
+        val stream = Tables.stream(s, d, "documents")
           .select(col("source"), col("doc_id"), col("n_chars"),
             pow(u, lit(1.0) / col("n_chars")).as("ares"))
         val updates = Streams.runToMemory(

@@ -1,67 +1,26 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming surface (SURVEY.md §2.8/§2.9 streaming obligations):
-  * file-source ingestion of `events`, watermarked tumbling/sliding/session
-  * windows (the streaming twins of q26-q28), and a foreachBatch JSONL sink
-  * (the reference's append-a-line decode tail, S3/D4).
+  * the operators the streaming twins run over a table stream, watermarked
+  * tumbling/sliding/session windows (the streaming twins of q26-q28), and a
+  * foreachBatch JSONL sink (the reference's append-a-line decode tail,
+  * S3/D4). The streams themselves come from `graft.Tables.stream`, the same
+  * reader, schema and normalization as the batch queries.
   *
   * The reference's async_d pipeline has no event-time/late-data logic — its
   * queues are purely arrival-ordered — so watermarking here is engine
   * surface (north-star), configured but semantically permissive by default.
   *
-  * Scale: the file source lists + splits per micro-batch (maxFilesPerTrigger
-  * throttles backpressure, the queue_size analog, D1); stateful windows use
-  * the state store keyed by (window, group) — at cluster scale state
-  * partitions with the shuffle, and watermark eviction bounds its size.
+  * Scale: the file source lists + splits per micro-batch, one file per
+  * trigger (the queue_size analog, D1); stateful windows use the state
+  * store keyed by (window, group) — at cluster scale state partitions with
+  * the shuffle, and watermark eviction bounds its size.
   */
 object Streams {
-
-  /** Events stream schema with `ts` pinned to the PROBED physical type.
-    * Streaming sources require a user-supplied schema, but pinning a type
-    * the files don't carry silently misreads the physical int64 (a micros
-    * file read as nanos collapses every timestamp 1000× — no error, just
-    * wrong windows). So probe the batch reader's inferred schema ONCE per
-    * directory — a parquet footer read, no data scan — and pin `ts` to
-    * whatever it actually is: LongType for TIMESTAMP(NANOS)-as-long files,
-    * TIMESTAMP_NTZ for pyarrow-default micros. graft.Tables.normalizeEventTs
-    * then narrows either encoding to session-TZ TIMESTAMP, keeping the
-    * streaming twins value-identical to their batch queries. */
-  private val tsTypeMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataType]
-
-  private def eventsTsType(spark: SparkSession, sfDir: String): DataType =
-    tsTypeMemo.getOrElseUpdate(sfDir, {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$sfDir/events.parquet").schema("ts").dataType
-    })
-
-  def eventsRawSchema(tsType: DataType): StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", tsType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** Stream the events table out of an sf directory. File sources need a
-    * directory; the glob filter selects just the events file(s). */
-  def eventsStream(
-      spark: SparkSession,
-      sfDir: String,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.readStream
-      .schema(eventsRawSchema(eventsTsType(spark, sfDir)))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("pathGlobFilter", "events*.parquet")
-      .parquet(sfDir)
-    graft.Tables.normalizeEventTs(raw)
-  }
 
   /** Streaming q26: tumbling 5-minute counts per event type. */
   def tumblingCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
@@ -140,87 +99,6 @@ object Streams {
           .as("session_start"),
         col("n"))
 
-  /** Pinned documents schema for streaming reads of the sf dirs. */
-  val documentsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
-  /** Stream the documents table out of an sf directory. */
-  def documentsStream(
-      spark: SparkSession,
-      sfDir: String,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(documentsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("pathGlobFilter", "documents*.parquet")
-      .parquet(sfDir)
-
-  /** Pinned embeddings schema for streaming reads of the sf dirs. */
-  val embeddingsSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)))
-
-  /** The embedding element width, probed once per directory from the batch
-    * reader's footer — the eventsTsType pattern applied to the column the
-    * ANN family keys on: pinning float against a double-encoded lake makes
-    * the parquet reader throw on every micro-batch, while the batch side
-    * (`Tables.embeddings`) absorbs either width. */
-  private val embElemMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataType]
-
-  private def embElemType(spark: SparkSession, sfDir: String): DataType =
-    embElemMemo.getOrElseUpdate(sfDir,
-      // probe the first file matching the SAME glob the stream reads
-      // (embeddings*.parquet) — a sharded lake (embeddings_0.parquet, ...)
-      // must hit the probe, not just the canonical single-file layout,
-      // or a double-encoded sharded regen would fail on every micro-batch
-      // (the exact failure this probe exists to absorb). Listing goes
-      // through Hadoop's FileSystem (ADVICE r9): a java.io.File listing
-      // silently misses non-local sfDirs (hdfs://, s3a://) and relative
-      // paths the JVM cwd resolves differently than Spark — globStatus
-      // resolves exactly like the stream's own source. An unreadable or
-      // empty match falls back to the pinned float schema.
-      try {
-        val glob = new org.apache.hadoop.fs.Path(sfDir, "embeddings*.parquet")
-        val fs = glob.getFileSystem(spark.sessionState.newHadoopConf())
-        val files = Option(fs.globStatus(glob)).toSeq.flatten
-          .map(_.getPath.toString).sorted // file OR Spark-written dir
-        files.headOption.map { p =>
-          spark.read.parquet(p).schema("embedding").dataType match {
-            case ArrayType(et, _) => et
-            case _ => FloatType
-          }
-        }.getOrElse(FloatType)
-      } catch { case _: Throwable => FloatType })
-
-  /** Stream the embeddings table out of an sf directory, normalized to
-    * `array<float>` whatever element width the files carry (the batch
-    * loader's schema-on-read tolerance, mirrored for the ingest path). */
-  def embeddingsStream(
-      spark: SparkSession,
-      sfDir: String,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
-    val elem = embElemType(spark, sfDir)
-    val schema =
-      if (elem == FloatType) embeddingsSchema
-      else StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(elem)),
-        StructField("label", IntegerType)))
-    val raw = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("pathGlobFilter", "embeddings*.parquet")
-      .parquet(sfDir)
-    if (elem == FloatType) raw
-    else raw.withColumn("embedding", col("embedding").cast("array<float>"))
-  }
-
   /** Streaming exact dedup: emit each content hash the FIRST time it is
     * seen, across micro-batches — the ingestion-time dedup of a continuously
     * fed corpus. State = one row per distinct key, partitioned with the
@@ -292,24 +170,19 @@ object Streams {
       .start()
 
   /** Continuous V1 QA front end (the reference's file-fed pipeline seed,
-    * start_pipeline.py:107-110 → S1/S3): stream documents from an sf dir,
-    * run the batch V1 pipeline per micro-batch via foreachBatch, append
-    * answers as JSONL. Micro-batch = the unit of pipeline work; at scale
-    * `maxFilesPerTrigger` is the backpressure knob. */
+    * start_pipeline.py:107-110 → S1/S3): run the batch V1 pipeline over
+    * each micro-batch of a documents stream via foreachBatch, append
+    * answers as JSONL. Micro-batch = the unit of pipeline work; the stream
+    * bounds it at one file per trigger. */
   def v1QaStream(
-      spark: SparkSession,
-      sfDir: String,
+      docs: DataFrame, // doc_id LONG, text STRING
       question: String,
       outPath: String,
       checkpoint: String,
-      client: graft.infer.InferenceClient = new graft.infer.MockInference,
-      glob: String = "documents*.parquet"): StreamingQuery = {
-    val docs = spark.readStream
-      .schema(documentsSchema)
-      .option("pathGlobFilter", glob)
-      .parquet(sfDir)
+      client: graft.infer.InferenceClient = new graft.infer.MockInference): StreamingQuery =
+    docs
       .select(col("doc_id"), lit(question).as("question"), col("text"))
-    docs.writeStream
+      .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch {
@@ -319,7 +192,6 @@ object Streams {
       }
       .trigger(Trigger.AvailableNow())
       .start()
-  }
 
   /** Per-user rapid-event tracking via custom state
     * (flatMapGroupsWithState — the D9 monitor as a streaming operator):
@@ -468,23 +340,6 @@ object Streams {
       .select(graft.operators.Sketches.cmsCoords(col("dg")).as("jb"))
       .select(col("jb.j").as("j"), col("jb.bucket").as("bucket"))
       .groupBy("j", "bucket").agg(count(lit(1)).as("cnt"))
-
-  /** Pinned orders columns for streaming reads (the KMV twin needs only the
-    * group key and the hashed key; parquet prunes the rest). */
-  val ordersKmvSchema: StructType = StructType(Seq(
-    StructField("o_custkey", LongType),
-    StructField("o_orderpriority", StringType)))
-
-  /** Stream the orders table out of an sf directory (KMV-twin columns). */
-  def ordersStream(
-      spark: SparkSession,
-      sfDir: String,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(ordersKmvSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("pathGlobFilter", "orders*.parquet")
-      .parquet(sfDir)
 
   /** Streaming maintenance of the KMV distinct sketch (Sketches q45's
     * state): per group, keep the ≤k smallest DISTINCT hashes across

@@ -11,14 +11,8 @@ import graft.{GraftSession, Tables}
 object Sql {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.get("graft-sql")
-    Tables.names.foreach { t =>
-      val df = t match {
-        case "events"     => Tables.events(spark, args(0))
-        case "embeddings" => Tables.embeddings(spark, args(0))
-        case _            => Tables.load(spark, args(0), t)
-      }
-      df.createOrReplaceTempView(t)
-    }
+    Tables.names.foreach(t =>
+      Tables.load(spark, args(0), t).createOrReplaceTempView(t))
     val n = if (args.length > 2) args(2).toInt else 100
     spark.sql(args(1)).show(n, truncate = false)
     spark.stop()

@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
   * anywhere else is a second instrument, and a sleep in main code is a guess
   * at how long the asynchronous listener bus takes; `Telemetry.measure`
   * drains the bus instead. Likewise it has one batching path to the model,
-  * `graft.infer.InferOps.completeAll`, and one way to make a kernel Column,
-  * `org.apache.spark.sql.KernelColumn`. */
+  * `graft.infer.InferOps.completeAll`, one way to make a kernel Column,
+  * `org.apache.spark.sql.KernelColumn`, and one table reader for batch and
+  * streaming, `graft.Tables`. */
 class ObsGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -46,6 +47,12 @@ class ObsGuardSpec extends AnyFunSuite {
     val infer = root.resolve("graft/infer")
     val outside = matches("""\.completeBatch\b""").filterNot(_._1.startsWith(infer))
     assert(outside.isEmpty, "completeBatch calls outside graft/infer:\n" + show(outside))
+  }
+
+  test("streams are read only by Tables and Bench's floor probe") {
+    val hits = matches("""readStream""").map(_._1.getFileName.toString).distinct
+    assert(hits.sorted == Seq("Bench.scala", "Tables.scala"),
+      "readStream in main code:\n" + show(matches("""readStream""")))
   }
 
   test("kernel Columns never write the session function registry") {

@@ -96,7 +96,7 @@ class SchemaAuditSpec extends SparkTestBase {
     // the INGEST path (s11s's reader) must absorb the same regen: streamed
     // rows off the double-encoded twin equal the batch read, as floats
     val streamed = graft.streaming.Streams.runToMemory(
-      graft.streaming.Streams.embeddingsStream(spark, tmp, maxFilesPerTrigger = 16)
+      Tables.stream(spark, tmp, "embeddings")
         .selectExpr("vec_id", "embedding[0] e"),
       "emb_audit_stream", mode = "append")
     assert(streamed.schema("e").dataType ==
@@ -124,7 +124,7 @@ class SchemaAuditSpec extends SparkTestBase {
         java.nio.file.Paths.get(s"$tmp/embeddings_$i.parquet"))
     }
     val streamed = graft.streaming.Streams.runToMemory(
-      graft.streaming.Streams.embeddingsStream(spark, tmp, maxFilesPerTrigger = 16)
+      Tables.stream(spark, tmp, "embeddings")
         .selectExpr("vec_id", "embedding[0] e"),
       "emb_shard_stream", mode = "append")
     assert(streamed.schema("e").dataType ==

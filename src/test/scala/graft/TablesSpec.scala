@@ -1,8 +1,10 @@
 package graft
 
-/** The degenerate-scan guard: single-row-group testdata files must fan out
-  * before kernel-heavy per-row work, and only for the tables that need it —
-  * dimensions stay plain scans so they remain broadcast-friendly. */
+/** The table reader: single-row-group testdata files must fan out before
+  * kernel-heavy per-row work, and only for the tables that need it —
+  * dimensions stay plain scans so they remain broadcast-friendly; a table's
+  * file schema is read once, and its stream reads what its batch read
+  * does. */
 class TablesSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
@@ -42,6 +44,26 @@ class TablesSpec extends SparkTestBase {
     assert(nanos == micros, s"$nanos vs $micros")
     // absolute pin: 1700000000123456 µs = 2023-11-14 22:13:20.123456 UTC
     assert(nanos(1) == Seq(2L, "2023-11-14 22:13:20.123456"))
+  }
+
+  test("a table read after the first starts no Spark job") {
+    // the file schema is read once per (dir, table); a later read is given
+    // it, where spark.read.parquet would start a schema-inference job
+    val telemetry = graft.obs.Telemetry(spark)
+    for (t <- Tables.names) {
+      Tables.load(spark, dir, t).schema
+      val (_, p) = telemetry.measure(s"reread-$t")(Tables.load(spark, dir, t).schema)
+      assert(p.jobs.isEmpty, s"$t: a second read started ${p.jobs.size} job(s)")
+    }
+  }
+
+  test("a table's stream has its batch read's schema") {
+    val dirs = Tables.names.map(t => (dir, t)) ++
+      Seq("events_nanos", "events_micros").map(f => (fixture(f), "events"))
+    for ((d, t) <- dirs) {
+      val batch = Tables.load(spark, d, t).schema
+      assert(Tables.stream(spark, d, t).schema == batch, s"$d/$t")
+    }
   }
 
   test("fan-out preserves rows and filter pushdown still reaches the scan") {

@@ -46,7 +46,7 @@ class TelemetrySpec extends SparkTestBase {
   test("a streaming run's batches, input rows and state rows, without a poll") {
     val expected = Tables.events(spark, dir).count()
     val (_, p) = Telemetry(spark).measure("tumbling") {
-      Streams.tumblingCounts(Streams.eventsStream(spark, dir)).writeStream
+      Streams.tumblingCounts(Tables.stream(spark, dir, "events")).writeStream
         .outputMode("complete")
         .format("memory")
         .queryName("obs_tumbling_counts")

@@ -67,6 +67,29 @@ class DedupSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
+  test("every connected-components consumer broadcasts the labels in its initial plan") {
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // the labels are a checkpoint with no size estimate: without the hint
+    // the physical plan is a sort-merge join that AQE may or may not rewrite
+    def labels(p: SparkPlan): Boolean = p match {
+      case r: RDDScanExec => r.output.map(_.name) == Seq("id", "label")
+      case u if u.children.size == 1 => labels(u.children.head)
+      case _ => false
+    }
+    for (q <- Seq("d09_dedup_components", "p03_corpus_curation",
+                  "d13_semantic_dedup", "d16_semantic_dedup_capped",
+                  "m03_image_phash_dedup", "m04_audio_afp_dedup",
+                  "m05_video_phash_dedup")) {
+      val plan = ResultMemo.bypass(graft.SparkEntry.queries(q)(spark, dir))
+        .queryExecution.sparkPlan
+      val joins = plan.collect {
+        case j if j.children.size == 2 && j.children.exists(labels) => j }
+      assert(joins.nonEmpty && joins.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+        s"$q:\n$plan")
+    }
+  }
+
   test("d11: the bloom prefilter changes cost, never the answer") {
     import graft.Tables
     // reference pipeline with NO bloom: plain exact join of corpus n-grams

@@ -13,7 +13,7 @@ class StreamsSpec extends SparkTestBase {
   private def batchEvents = Tables.events(spark, dir)
 
   test("streaming tumbling counts == batch q26") {
-    val stream = Streams.eventsStream(spark, dir)
+    val stream = Tables.stream(spark, dir, "events")
     val got = Streams.runToMemory(
       Streams.tumblingCounts(stream), "t_tumble")
       .orderBy("wstart", "event_type").collect()
@@ -34,7 +34,7 @@ class StreamsSpec extends SparkTestBase {
       "spark.sql.streaming.noDataMicroBatches.enabled")
     val before = keys.map(spark.conf.get)
     val want = Streams.runToMemory(
-      Streams.tumblingCounts(Streams.eventsStream(spark, dir)), "t_conf_ref")
+      Streams.tumblingCounts(Tables.stream(spark, dir, "events")), "t_conf_ref")
       .orderBy("wstart", "event_type").collect().toSeq
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
@@ -44,7 +44,7 @@ class StreamsSpec extends SparkTestBase {
       val runs = (0 until 6).map { i =>
         Future {
           Streams.runToMemory(
-            Streams.tumblingCounts(Streams.eventsStream(spark, dir)),
+            Streams.tumblingCounts(Tables.stream(spark, dir, "events")),
             s"t_conf_$i", statePartitions = 2 + i % 3, noDataBatch = i % 2 == 0)
             .orderBy("wstart", "event_type").collect().toSeq
         }
@@ -55,7 +55,7 @@ class StreamsSpec extends SparkTestBase {
   }
 
   test("streaming session windows == batch q28") {
-    val stream = Streams.eventsStream(spark, dir)
+    val stream = Tables.stream(spark, dir, "events")
     val got = Streams.runToMemory(
       Streams.sessionCounts(stream), "t_sess")
       .orderBy("user_id", "session_start").collect()
@@ -70,7 +70,7 @@ class StreamsSpec extends SparkTestBase {
   }
 
   test("streaming sliding counts == batch q27") {
-    val stream = Streams.eventsStream(spark, dir)
+    val stream = Tables.stream(spark, dir, "events")
     val got = Streams.runToMemory(
       Streams.slidingCounts(stream), "t_slide")
       .orderBy("wstart").collect()
@@ -83,13 +83,13 @@ class StreamsSpec extends SparkTestBase {
     assert(got.toSeq == want.toSeq)
   }
 
-  test("eventsStream adapts its pinned ts schema to the file encoding") {
+  test("an events stream reads either ts encoding to the same windows") {
     // nanos-as-long and native-micros fixture files must stream to the SAME
     // windows — a misread encoding collapses timestamps 1000× silently.
     def counts(fix: String, qn: String) = {
       val d = getClass.getResource(s"/fixtures/$fix").getPath
       Streams.runToMemory(
-        Streams.tumblingCounts(Streams.eventsStream(spark, d)), qn)
+        Streams.tumblingCounts(Tables.stream(spark, d, "events")), qn)
         .orderBy("wstart", "event_type").collect().map(_.toSeq).toSeq
     }
     val nanos  = counts("events_nanos", "t_fix_ns")
@@ -235,9 +235,13 @@ class StreamsSpec extends SparkTestBase {
     Tables.documents(spark, dir).limit(20)
       .withColumn("text", concat(col("text"),
         lit(" ANSWER[stream-"), col("doc_id").cast("string"), lit("]")))
-      .coalesce(1).write.mode("overwrite").parquet(staged + "/docs")
-    val q = Streams.v1QaStream(spark, staged + "/docs",
-      "What is the passkey?", out, ckpt, glob = "*.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(staged + "/_stage")
+    // lay the staged dir out like the lake: one documents.parquet file
+    val part = new java.io.File(staged + "/_stage").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, java.nio.file.Paths.get(staged, "documents.parquet"))
+    val q = Streams.v1QaStream(Tables.stream(spark, staged, "documents"),
+      "What is the passkey?", out, ckpt)
     q.awaitTermination()
     val res = spark.read.json(out)
     assert(res.count() == 20)
@@ -248,7 +252,7 @@ class StreamsSpec extends SparkTestBase {
   test("foreachBatch JSONL sink appends one line per row (S3)") {
     val out  = Files.createTempDirectory("graft_jsonl_").toString
     val ckpt = Files.createTempDirectory("graft_ckpt_").toString
-    val stream = Streams.eventsStream(spark, dir)
+    val stream = Tables.stream(spark, dir, "events")
       .select("event_id", "event_type")
     val q = Streams.jsonlSink(stream, out, ckpt)
     q.awaitTermination()
