@@ -4,12 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
   *
-  * Tuned for the harness's local[32] single-JVM mode but with settings that
-  * transfer to a multi-executor cluster: AQE handles runtime re-planning
-  * (coalescing post-shuffle partitions, skew-join splitting), shuffle
-  * partition count matches local parallelism instead of the 200 default,
-  * and broadcast join threshold is left at default so Catalyst promotes
-  * small dimensions (region/nation/part at test SFs) automatically.
+  * Builds a `local[N]` single-JVM session; `get` takes N from
+  * `SPARK_GRAFT_CPUS` (32 when unset, as the bench history ran; set it to
+  * the machine's core count). Most settings transfer to a multi-executor
+  * cluster: AQE handles runtime re-planning (coalescing post-shuffle
+  * partitions, skew-join splitting), shuffle partition count matches local
+  * parallelism instead of the 200 default, and broadcast join threshold is
+  * left at default so Catalyst promotes small dimensions
+  * (region/nation/part at test SFs) automatically.
   */
 object GraftSession {
   val CodegenCacheEntries = 1000
@@ -53,6 +55,32 @@ object GraftSession {
       .config("spark.executor.heartbeatInterval", "60s")
       .config("spark.network.timeout", "1200s")
       .config("spark.ui.enabled", "false")
+      // Spark 4.1 gives every session its own artifact state, the clone a
+      // streaming query runs on included, and executors run that query's
+      // tasks under a fresh ExecutorClassLoader. CodeGenerator's class
+      // cache is keyed on (context class loader, source), so each streaming
+      // twin recompiled its 11-13 generated classes on every run while
+      // batch queries compiled none after the first pass. graft adds no
+      // session artifacts (no addArtifact/addJar/addFile), so one shared
+      // loader loses nothing.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // The default FileContext checkpoint manager renames through
+      // ChecksumFs, which resolves the destination with
+      // RawLocalFileSystem.getFileLinkStatus and so forks a `readlink`
+      // process per rename (Hadoop 3.4 without its native library). A
+      // streaming twin renames ~20 files per run (offsets, commits,
+      // metadata, sources, one state delta and its checksum per state
+      // partition); state commits took 400-540 ms of each twin and take
+      // 23-105 ms through the FileSystem manager. The checkpoint holds the
+      // same files, Spark's checksum files included (fileChecksum stays
+      // on). What the FileSystem manager gives up is FileContext's
+      // no-overwrite rename, an atomic "fail if the destination exists"
+      // on HDFS; Spark checks for the destination first instead, which is
+      // enough for one writer per local checkpoint, as every query here
+      // is. A cluster deployment with an HDFS checkpoint would revisit it.
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing." +
+          "FileSystemBasedCheckpointFileManager")
 
   def get(appName: String = "graft"): SparkSession = {
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

@@ -118,8 +118,7 @@ object Streams {
     * the join — at scale the eval index is a persisted broadcast table and
     * the feed flows through a row-local filter; state is one row per
     * flagged doc. */
-  def decontaminateStream(docs: DataFrame, evalGrams: DataFrame): DataFrame = {
-    val s = docs.sparkSession
+  def decontaminateStream(docs: DataFrame, evalGrams: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
         explode(graft.functions.HashKernels.ngramsCol(col("text"), 5))
@@ -128,7 +127,6 @@ object Streams {
         Seq("gram"), "left_semi")
       .select(col("doc_id"))
       .dropDuplicates("doc_id")
-  }
 
   /** Ingestion-time LM quality gate (the streaming face of t14): every
     * arriving corpus document is scored row-locally by the codegen'd
@@ -142,8 +140,7 @@ object Streams {
   def lmGateStream(
       docs: DataFrame,
       bc: org.apache.spark.broadcast.Broadcast[
-        graft.functions.LmKernel.LmModel]): DataFrame = {
-    val s = docs.sparkSession
+        graft.functions.LmKernel.LmModel]): DataFrame =
     docs
       .filter(col("source") =!= "src0")
       .select(col("doc_id"),
@@ -152,7 +149,6 @@ object Streams {
       .select(col("doc_id"),
         element_at(col("sc"), 1).as("n_bigrams"),
         element_at(col("sc"), 2).as("score_milli"))
-  }
 
   /** S3: JSONL append sink via foreachBatch (one line per row, append-only —
     * the decode tail's behavior). Returns the started query. */
@@ -502,15 +498,19 @@ object Streams {
       agg: DataFrame,
       name: String,
       mode: String = "complete",
-      statePartitions: Int = 8,
+      statePartitions: Option[Int] = None,
       noDataBatch: Boolean = true): DataFrame = {
     // State partition count is captured at query START from
     // spark.sql.shuffle.partitions and sizes the state-store file fan-out
-    // (a stream-stream join keeps 4 stores per partition, each snapshotting
-    // per batch). A real deployment sizes it to stream volume per job; the
-    // session's 32 batch partitions cost ~4× the snapshot I/O these small
-    // bounded gates need, so set it for the query and restore after.
+    // (a stream-stream join keeps 4 stores per partition, each committing
+    // per batch). A real deployment sizes it to stream volume per job; for
+    // these small bounded gates the session's batch partition count (one
+    // per core) costs more state I/O than it buys, so by default the query
+    // gets at most 8 partitions, and no more than the cores, so its state
+    // tasks run in one wave. Set for the query and restored after.
     val spark = agg.sparkSession
+    val parts = statePartitions.getOrElse(
+      math.min(8, spark.sparkContext.defaultParallelism))
     // AvailableNow appends a final NO-DATA micro-batch after the data
     // batches: it advances the watermark and runs state eviction/final
     // emission. Stateful APPEND-mode aggregations need it to emit closed
@@ -528,7 +528,7 @@ object Streams {
     val q = confLock.synchronized {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       val prevNoData = spark.conf.get(noDataKey)
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
       if (!noDataBatch) spark.conf.set(noDataKey, "false")
       try agg.writeStream
         .outputMode(mode)

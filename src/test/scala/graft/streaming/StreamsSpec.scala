@@ -45,7 +45,7 @@ class StreamsSpec extends SparkTestBase {
         Future {
           Streams.runToMemory(
             Streams.tumblingCounts(Tables.stream(spark, dir, "events")),
-            s"t_conf_$i", statePartitions = 2 + i % 3, noDataBatch = i % 2 == 0)
+            s"t_conf_$i", statePartitions = Some(2 + i % 3), noDataBatch = i % 2 == 0)
             .orderBy("wstart", "event_type").collect().toSeq
         }
       }
